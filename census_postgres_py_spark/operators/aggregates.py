@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import r6
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, register_views, t
 
@@ -468,15 +469,12 @@ def agg_stats_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compiler FMA contraction can differ by 1 ULP between DuckDB and
     # the JVM (seen at sf0.001 on corr) — so pin all three to the
     # repo-wide floor(x*1e6+0.5)/1e6 idiom on both sides.
-    def _r6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
     return s.select(
         "l_returnflag",
         "n",
-        _r6(sx / n).alias("mean_qty"),
-        _r6((sxx - sx * sx / n) / (n - 1)).alias("var_qty"),
-        _r6(
+        r6(sx / n).alias("mean_qty"),
+        r6((sxx - sx * sx / n) / (n - 1)).alias("var_qty"),
+        r6(
             (n * sxy - sx * sy)
             / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
         ).alias("corr_qty_price"),

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark import stats
 from census_postgres_py_spark.functions.text import (
     drop_last_tokens,
     tokens,
@@ -34,7 +35,7 @@ DUP_OFFSET = 1_000_000
 # and its input_rows probe derives its bound from the SAME constant,
 # so the filter and the checkpoint-gate probe cannot silently
 # disagree (r9 ADVICE). Stress harnesses lift the cap by swapping the
-# _with_dups seam (tools/decades_r9.py::_uncapped_docs).
+# _with_dups seam (tools/stress_bench.py::_uncapped_docs).
 DUP_MAX_DOC_ID = 200
 N_HASHES = 64  # minhash signature length
 N_BANDS = 16  # => rows-per-band r = 4
@@ -127,9 +128,7 @@ def _with_dups_input_rows(spark: SparkSession, sf_dir: str) -> int:
     harnesses' _with_dups seam swap (whose uncapped providers carry no
     probe and fall back to the honest count()) or an explicit
     SHINGLE_CHECKPOINT_CONF override."""
-    from census_postgres_py_spark.tables import approx_rows
-
-    return 2 * min(DUP_MAX_DOC_ID, approx_rows(spark, sf_dir, "documents"))
+    return 2 * min(DUP_MAX_DOC_ID, stats.rows(sf_dir, "documents"))
 
 
 _with_dups.input_rows = _with_dups_input_rows

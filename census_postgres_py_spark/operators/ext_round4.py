@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import r6
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -610,10 +611,6 @@ def _label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _r6(c):
-    return F.floor(c * 1000000 + F.lit(0.5)) / 1000000
-
-
 _CENT_SQL = f"""
     cent AS (
         SELECT label, i AS pos, avg(CAST(embedding[i] AS DOUBLE)) AS m
@@ -661,7 +658,7 @@ def emb_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label_a",
             "label_b",
-            _r6(cosine(F.col("ca"), F.col("cb"))).alias("confusion"),
+            r6(cosine(F.col("ca"), F.col("cb"))).alias("confusion"),
         )
     )
 
@@ -705,7 +702,7 @@ def emb_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = e.join(F.broadcast(cent), "label").select(
         "label",
         "vec_id",
-        _r6(cosine(F.col("embedding"), F.col("centroid"))).alias("cos_r"),
+        r6(cosine(F.col("embedding"), F.col("centroid"))).alias("cos_r"),
     )
     w = Window.partitionBy("label").orderBy("cos_r", "vec_id")
     return (

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark import stats
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -302,8 +303,8 @@ def join_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcastable far past the lineitem-row cap) falling back to
     # lineitem, the derivation source this op reads, when part.parquet
     # is absent (edges-only stress corpora): the r8 unconditional part
-    # key crashed there via approx_rows' count() fallback, and the r8
-    # lineitem rekey closed the gate at ~sf1.3 for a part-sized frame
+    # key crashed there on the footer read of the missing file, and the
+    # r8 lineitem rekey closed the gate at ~sf1.3 for a part-sized frame
     # (r8 ADVICE).
     kept = cp.join(gated_broadcast(spark, sf_dir, ("part", "lineitem"), deg), "part")
     a = kept.alias("a")
@@ -320,12 +321,10 @@ def join_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair row instead of 16, one hash/compare instead of two (guide
     # §2.3 narrower types). a.cust < b.cust makes the packing
     # injective; the output unpacks to the same long pair, so rows are
-    # identical. Footer stats absent or keys too wide -> the two-column
-    # groupBy below, never a wrong answer.
-    from census_postgres_py_spark.operators.ext_round4n import _key_bounds
-
-    ck = _key_bounds(sf_dir, "orders", "o_custkey")
-    if ck is not None and 0 <= ck[0] and ck[1] <= 2**31 - 1:
+    # identical. Keys too wide (≥ 2³¹ at large scale factors) -> the
+    # two-column groupBy below.
+    lo, hi = stats.key_range(spark, sf_dir, "orders", "o_custkey")
+    if 0 <= lo and hi <= 2**31 - 1:
         return (
             pairs.select(
                 F.expr("shiftleft(CAST(a.cust AS BIGINT), 32) | b.cust")

@@ -21,10 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark import stats
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import (
-    approx_rows,
     gated_broadcast,
     t,
     vocab_rows_per_doc,
@@ -323,12 +323,11 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dfreq = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     # r13: the corpus row count is EXACT in the parquet footer
-    # (approx_rows — falls back to a count() only for statless
-    # sources, returning the same value either way), so the former
-    # count() aggregation + scalar broadcast — one more serial
+    # (stats.rows — num_rows is a required footer field), so the
+    # former count() aggregation + scalar broadcast — one more serial
     # driver-blocking build job under the lazy checkpoint — folds to a
     # literal (guide §6 footer metadata, the hier/manifest discipline).
-    nd = float(approx_rows(spark, sf_dir, "documents"))
+    nd = float(stats.rows(sf_dir, "documents"))
     cells = (
         # dfreq/maxw are vocabulary-scale (grows with the corpus via
         # Heaps' law) — gated like every fact-scale hint

@@ -20,20 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import cents, r6
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
 _EMB_DIM = 64
-
-
-def _r6(c):
-    """floor(x*1e6 + 0.5)/1e6 — engine-identical 6-dp half-up render."""
-    return F.floor(c * F.lit(1000000) + F.lit(0.5)) / F.lit(1000000)
-
-
-def _cents(c):
-    """Exact integer cents from a double price column."""
-    return F.floor(c * 100 + F.lit(0.5)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +62,7 @@ def transform_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents, so the carried value is hash-stable.
     """
     ev = t(spark, sf_dir, "events")
-    v = F.when(F.col("event_type") == "purchase", _cents(F.col("value")))
+    v = F.when(F.col("event_type") == "purchase", cents(F.col("value")))
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -140,7 +131,7 @@ def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (months(F.col("o_orderdate")) - months(F.col("cm")))
         .cast("long")
         .alias("age_months"),
-        _cents(F.col("o_totalprice")).alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     agg = facts.groupBy("cm", "age_months").agg(
         F.sum("cents").cast("long").alias("rev_cents")
@@ -239,9 +230,9 @@ def emb_silhouette_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     sil = (F.col("b") - F.col("a")) / F.greatest("a", "b")
     return pv.groupBy(F.col("own_label").alias("label")).agg(
         F.count("*").cast("long").alias("n_vectors"),
-        _r6(F.avg("a")).alias("avg_intra"),
-        _r6(F.avg("b")).alias("avg_nearest_other"),
-        _r6(F.avg(sil)).alias("silhouette"),
+        r6(F.avg("a")).alias("avg_intra"),
+        r6(F.avg("b")).alias("avg_nearest_other"),
+        r6(F.avg(sil)).alias("silhouette"),
     )
 
 
@@ -384,7 +375,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_o"),
         F.count("*").cast("long").alias("frequency"),
-        F.sum(_cents(F.col("o_totalprice"))).cast("long").alias("monetary_cents"),
+        F.sum(cents(F.col("o_totalprice"))).cast("long").alias("monetary_cents"),
     )
     r = c.crossJoin(F.broadcast(mx)).select(
         "o_custkey",

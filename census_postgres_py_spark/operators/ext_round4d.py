@@ -17,12 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import cents
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
-
-
-def _cents(c):
-    return F.floor(c * 100 + F.lit(0.5)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +67,7 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = t(spark, sf_dir, "orders")
     d = orders.select(
-        F.substring(_cents(F.col("o_totalprice")).cast("string"), 1, 1)
+        F.substring(cents(F.col("o_totalprice")).cast("string"), 1, 1)
         .cast("int")
         .alias("digit")
     )
@@ -149,7 +146,7 @@ def agg_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = t(spark, sf_dir, "orders")
     c = orders.groupBy("o_custkey").agg(
-        F.sum(_cents(F.col("o_totalprice"))).cast("long").alias("cents")
+        F.sum(cents(F.col("o_totalprice"))).cast("long").alias("cents")
     )
     w = Window.orderBy(F.col("cents").desc(), "o_custkey")
     r = c.select(

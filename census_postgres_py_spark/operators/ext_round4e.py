@@ -15,12 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import cents
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
-
-
-def _cents(c):
-    return F.floor(c * 100 + F.lit(0.5)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +58,7 @@ def agg_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderdate",
-        _cents(F.col("o_totalprice")).alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     split = F.lit("1998-01-01").cast("timestamp")
 

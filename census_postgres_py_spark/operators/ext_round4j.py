@@ -14,12 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import cents
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
-
-
-def _cents(c):
-    return F.floor(c * 100 + F.lit(0.5)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -73,11 +70,11 @@ def join_bridge_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf; decimal(38,0) is the >petabyte form).
     """
     li = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", _cents(F.col("l_extendedprice")).alias("lc")
+        "l_orderkey", "l_partkey", cents(F.col("l_extendedprice")).alias("lc")
     )
     orders = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"),
-        _cents(F.col("o_totalprice")).alias("oc"),
+        cents(F.col("o_totalprice")).alias("oc"),
     )
     tot = li.groupBy("l_orderkey").agg(F.sum("lc").cast("long").alias("tc"))
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")

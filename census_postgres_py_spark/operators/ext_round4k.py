@@ -17,13 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import cents
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
-
-
-def _cents(c):
-    return F.floor(c * 100 + F.lit(0.5)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +67,7 @@ def transform_target_encode_loo(
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        _cents(F.col("o_totalprice")).alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     cat = o.groupBy("o_orderpriority").agg(
         F.sum("cents").cast("long").alias("s"),
@@ -134,7 +131,7 @@ def win_rank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     its previous OBSERVED week, the standard movers convention.
     """
     li = t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_shipdate", _cents(F.col("l_extendedprice")).alias("lc")
+        "l_partkey", "l_shipdate", cents(F.col("l_extendedprice")).alias("lc")
     )
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     bw = (

@@ -20,8 +20,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark import stats
 from census_postgres_py_spark.registry import register
-from census_postgres_py_spark.tables import approx_rows, t
+from census_postgres_py_spark.tables import t
 
 # graph_triangle_count broadcasts the out-adjacency table (|E| total
 # array elements) to both sides of the edge join — a win while E fits
@@ -45,11 +46,6 @@ _DEG_ORIENT_MIN_ROWS = 4_000_000
 _DEG_ORIENT_MIN_ROWS_CONF = "spark.census.graph.degreeOrientMinRows"
 _DEG_ORIENT_SKEW_RATIO = 32.0
 _DEG_ORIENT_SKEW_RATIO_CONF = "spark.census.graph.degreeOrientSkewRatio"
-
-# Fixture custkeys are dense from 1, so div-10 parents always exist and
-# depth is bounded by log10(max key): 19 levels covers the full int64
-# key space — a CONSTANT unroll bound, not a data-dependent loop.
-_MAX_DEPTH = 19
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,17 +93,16 @@ def hier_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNROLL BOUND (r12): depth-k pairs need a descendant ≥ 10^k (parent
     = child div 10, anc ≥ 1), so the exact level count is
     ⌊log10(max c_custkey)⌋ — read off the parquet footer stats
-    (_key_bounds, the _partkey_bounds discipline). The r11 loop probed
+    (:func:`stats.key_range`, which scans once per file version only
+    when a writer left no statistics). The r11 loop probed
     `frontier.isEmpty()` after every hop instead: each probe was a
     full JOB re-running the whole k-join chain from scratch (O(d²)
     joins of driver-blocking build-time work — 14 build jobs at
     sf0.1), after which the final union re-ran all of them again.
     With the bound known up front nothing executes until the caller's
     one action, and ReusedExchange serves the shared chain prefixes.
-    Levels past the true depth are provably empty, and the probe loop
-    remains as the fallback when footer stats are absent (stress
-    corpora with statless writers). Interleaved A/B at sf0.1, 5
-    pairs: 1.13 → 0.47 s warm-min, identical 48,890-row output.
+    Interleaved A/B at sf0.1, 5 pairs: 1.13 → 0.47 s warm-min,
+    identical 48,890-row output.
     """
     return reduce(DataFrame.unionAll, _closure_levels(spark, sf_dir))
 
@@ -115,8 +110,8 @@ def hier_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _closure_levels(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     """Per-depth frames of the customer-hierarchy transitive closure
     (level k = (anc, des, depth=k)); shared by hier_flatten and
-    hier_rollup_spend. Unroll bound and fallback documented in
-    hier_flatten's docstring."""
+    hier_rollup_spend. Unroll bound documented in hier_flatten's
+    docstring."""
     edges = _edges(spark, sf_dir)
     up = edges.select(
         F.col("child").alias("hop"), F.col("parent").alias("up_parent")
@@ -128,16 +123,11 @@ def _closure_levels(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
             F.lit(1).cast("int").alias("depth"),
         )
     ]
-    bounds = _key_bounds(sf_dir, "customer", "c_custkey")
-    if bounds is not None and bounds[1] >= 1:
-        # levels 1..⌊log10(max key)⌋: depth-k pairs need des ≥ 10^k
-        unroll = len(str(bounds[1])) - 2  # extra hops past level 1
-        probe_empty = False
-    else:
-        unroll = _MAX_DEPTH - 1
-        probe_empty = True
+    _, max_key = stats.key_range(spark, sf_dir, "customer", "c_custkey")
     frontier = levels[0]
-    for _ in range(max(unroll, 0)):
+    # levels 1..⌊log10(max key)⌋: depth-k pairs need des ≥ 10^k, so
+    # len(str(max_key)) - 2 extra hops past level 1
+    for _ in range(len(str(max_key)) - 2):
         frontier = (
             frontier.join(up, frontier["anc"] == up["hop"])
             .select(
@@ -146,85 +136,28 @@ def _closure_levels(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
                 (F.col("depth") + 1).cast("int").alias("depth"),
             )
         )
-        if probe_empty and frontier.isEmpty():
-            break
         levels.append(frontier)
     return levels
 
 
-def _key_bounds(sf_dir: str, table: str, column: str):
-    """O(1) footer probe: (min, max) of ``column`` from the parquet
-    row-group column STATISTICS (min/max), never data pages — the
-    same footer-only discipline as tables.approx_rows. Returns None
-    when stats are absent or unreadable, so callers gated on the
-    bounds can be missed, never wrong."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        path = f"{sf_dir}/{table}.parquet"
-        files = (
-            [
-                os.path.join(root, fn)
-                for root, _, fns in os.walk(path)
-                for fn in fns
-                if fn.endswith(".parquet")
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
-        hi, lo = -(2**63), 2**63
-        for fpath in files:
-            md = pq.ParquetFile(fpath).metadata
-            idx = md.schema.names.index(column)
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(idx).statistics
-                if stats is None or not stats.has_min_max:
-                    return None
-                hi = max(hi, stats.max)
-                lo = min(lo, stats.min)
-        if hi < lo:  # zero row groups read: no stats, not "bounds
-            return None  # (2^63, -2^63)" (r12 ADVICE)
-        return (lo, hi)
-    except Exception:
-        return None
-
-
-def _partkey_bounds(sf_dir: str):
-    """(min, max) of l_partkey via :func:`_key_bounds`."""
-    return _key_bounds(sf_dir, "lineitem", "l_partkey")
-
-
-def _partkeys_fit_int32(sf_dir: str) -> bool:
-    """Footer proof that every l_partkey fits int32 (see
-    _partkey_bounds); False when stats are missing, so the int32
-    compaction can never be wrong, only missed."""
-    b = _partkey_bounds(sf_dir)
-    return b is not None and -(2**31) <= b[0] and b[1] <= 2**31 - 1
-
-
-#: (lineitem path) -> (fingerprint, (max_occ, avg_occ)) for the
-#: degree-orientation skew probe — statistics of the fixture file,
-#: fingerprint-invalidated, in-process only (no cross-run persistence).
-_SKEW_PROBE_CACHE: dict = {}
+def _partkeys_fit_int32(spark: SparkSession, sf_dir: str) -> bool:
+    """Footer proof that every l_partkey fits int32."""
+    lo, hi = stats.key_range(spark, sf_dir, "lineitem", "l_partkey")
+    return -(2**31) <= lo and hi <= 2**31 - 1
 
 
 def _occ_skew_stats(sf_dir: str, occ_lazy: DataFrame):
-    from census_postgres_py_spark.tables import _path_fingerprint
+    """(max, mean) part occurrence count of the fixture's lineitem — a
+    statistic of the file, not of the call, so it is memoized per file
+    fingerprint (in-process only, no cross-run persistence)."""
 
-    path = f"{sf_dir}/lineitem.parquet"
-    fp = _path_fingerprint(path)
-    hit = _SKEW_PROBE_CACHE.get(path)
-    if fp is not None and hit is not None and hit[0] == fp:
-        return hit[1]
-    st = occ_lazy.agg(
-        F.max("occ").alias("mx"), F.avg("occ").alias("av")
-    ).collect()[0]
-    stats = (st["mx"], st["av"])
-    if fp is not None:
-        _SKEW_PROBE_CACHE[path] = (fp, stats)
-    return stats
+    def probe():
+        st = occ_lazy.agg(
+            F.max("occ").alias("mx"), F.avg("occ").alias("av")
+        ).collect()[0]
+        return (st["mx"], st["av"])
+
+    return stats.memo(f"{sf_dir}/lineitem.parquet", "occ_skew", probe)
 
 
 def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,7 +174,7 @@ def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     key = (
         F.col("l_partkey").cast("int")
-        if _partkeys_fit_int32(sf_dir)
+        if _partkeys_fit_int32(spark, sf_dir)
         else F.col("l_partkey")
     )
     return li.groupBy("l_orderkey").agg(
@@ -373,13 +306,12 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew_ratio = float(
         spark.conf.get(_DEG_ORIENT_SKEW_RATIO_CONF, str(_DEG_ORIENT_SKEW_RATIO))
     )
-    pk_bounds = _partkey_bounds(sf_dir)
+    pk_lo, pk_hi = stats.key_range(spark, sf_dir, "lineitem", "l_partkey")
     orient_by_degree = False
     if (
-        pk_bounds is not None
-        and 0 <= pk_bounds[0]
-        and pk_bounds[1] <= 2**31 - 1
-        and approx_rows(spark, sf_dir, "lineitem") >= min_rows
+        0 <= pk_lo
+        and pk_hi <= 2**31 - 1
+        and stats.rows(sf_dir, "lineitem") >= min_rows
     ):
         li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         occ_lazy = li.groupBy("l_partkey").agg(F.count("*").alias("occ"))
@@ -391,8 +323,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # localCheckpoint made every low-skew call pay checkpoint
         # blocks that were immediately discarded). r13: the probe's
         # (max, mean) is a property of the fixture FILE, not of the
-        # call, so it memoizes per path under the same mtime+size
-        # fingerprint discipline as the r12 schema memo — repeated
+        # call, so it memoizes per file fingerprint (stats.memo, like
+        # the fixture schema) — repeated
         # in-process calls (selfcheck, pytest, repeated reps) skip the
         # lineitem scan; the first call of any process still measures.
         mx, av = _occ_skew_stats(sf_dir, occ_lazy)
@@ -413,7 +345,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         baskets = _baskets(spark, sf_dir)
     if max_edges <= 0:
         est_edges = max_edges + 1  # conf ≤ 0 forces shuffle; skip the agg
-    elif 3 * approx_rows(spark, sf_dir, "lineitem") <= max_edges:
+    elif 3 * stats.rows(sf_dir, "lineitem") <= max_edges:
         # SMALL-GRAPH fast path, gated by an O(1) footer bound on the
         # basket table's SIZE (3·|lineitem| longs ≈ ≤128 MB at the
         # default cap — a bound on bytes checkpointed, NOT the

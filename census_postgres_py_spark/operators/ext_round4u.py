@@ -254,7 +254,7 @@ def hier_rollup_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shared footer-bounded closure (r12): the r11 copy of the unroll
     # loop probed isEmpty per hop — each probe a build-time job
     # re-running the whole chain (15 build jobs at sf0.1); see
-    # hier_flatten for the bound derivation and fallback.
+    # hier_flatten for the bound derivation.
     levels = [
         lv.select("anc", "des")
         for lv in _closure_levels(spark, sf_dir)

@@ -23,9 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark import stats
 from census_postgres_py_spark.operators.scans import _scratch
 from census_postgres_py_spark.registry import register
-from census_postgres_py_spark.tables import read_back, t
+from census_postgres_py_spark.tables import gated_broadcast, read_back, t
 
 _BUCKET_S = 21600  # 6-hour candle
 
@@ -236,14 +237,12 @@ def emb_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    from census_postgres_py_spark.tables import approx_rows, gated_broadcast
-
     # footer row count (O(1), no job): e is the UNFILTERED table, so
     # unlike the dedup ops' seam-swappable input this is exact.
     # a corpus at or under one tile degenerates to one group per
     # label — the pre-tiling plan shape, no explode amplification at
     # fixture scale
-    n = approx_rows(spark, sf_dir, "embeddings")
+    n = stats.rows(sf_dir, "embeddings")
     # Tile rows: default scales off host memory per concurrent task
     # (r10 ADVICE — a fixed 8192 was validated only on one 32-way
     # 128 GiB box; one full 8192 tile = ~536 MB float64 sims transient
@@ -397,55 +396,6 @@ def emb_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _file_zones(files):
-    """Per-file (path, min, max) of o_orderkey straight from the
-    parquet FOOTER statistics — the actual metadata read a table
-    format's planner does (r12; the r11 version scanned every data
-    page through a groupBy(input_file_name) to recompute what the
-    writer already recorded). Returns None when any file lacks
-    min/max stats so the caller can fall back to the scan."""
-    try:
-        import pyarrow.parquet as pq
-
-        zones = []
-        for fpath in files:
-            md = pq.ParquetFile(fpath).metadata
-            idx = md.schema.names.index("o_orderkey")
-            mn, mx = None, None
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(idx).statistics
-                if stats is None or not stats.has_min_max:
-                    return None
-                mn = stats.min if mn is None else min(mn, stats.min)
-                mx = stats.max if mx is None else max(mx, stats.max)
-            if mn is None:
-                continue  # empty file: no zone, never kept
-            zones.append((fpath, mn, mx))
-        return zones or None
-    except Exception:
-        return None
-
-
-def _file_zones_scan(spark, files, schema=None):
-    """Statless fallback: derive the zones with one distributed scan
-    (the r11 plan). ``schema`` (the zoned copy's known schema) skips
-    the inference job when the caller has it."""
-    rd = spark.read.schema(schema) if schema is not None else spark.read
-    rows = (
-        rd.parquet(*files)
-        .select("o_orderkey", F.input_file_name().alias("path"))
-        .groupBy("path")
-        .agg(
-            F.min("o_orderkey").alias("mn"),
-            F.max("o_orderkey").alias("mx"),
-        )
-        .collect()
-    )
-    return [
-        (r["path"].removeprefix("file://"), r["mn"], r["mx"]) for r in rows
-    ]
-
-
 @register(
     "pipeline_manifest_prune_e2e",
     oracle="""
@@ -479,17 +429,9 @@ def pipeline_manifest_prune_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Query the second key octile-pair [N/4, N/2) — relative bounds so
     # the op is meaningful at every scale factor (keys are dense 0..N-1).
-    # max key from the parquet footer stats when present (O(1), no scan
-    # job — the _key_bounds discipline); the agg is the statless
-    # fallback.
-    from census_postgres_py_spark.operators.ext_round4n import _key_bounds
-
-    kb = _key_bounds(sf_dir, "orders", "o_orderkey")
-    n_keys = (
-        kb[1]
-        if kb is not None
-        else t(spark, sf_dir, "orders").agg(F.max("o_orderkey")).collect()[0][0]
-    ) + 1
+    # max key from the parquet footer stats (stats.key_range: no scan
+    # job unless a writer left no statistics).
+    n_keys = stats.key_range(spark, sf_dir, "orders", "o_orderkey")[1] + 1
     lo, hi = n_keys // 4, n_keys // 2 - 1
     base = _scratch(f"orders_zoned_{os.path.basename(sf_dir)}")
     if not os.path.exists(os.path.join(base, "_SUCCESS")):
@@ -499,16 +441,10 @@ def pipeline_manifest_prune_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(base)
         )
-    files = [
-        os.path.join(base, f)
-        for f in os.listdir(base)
-        if f.endswith(".parquet")
-    ]
+    files = stats.files(base)
     zoned_schema = t(spark, sf_dir, "orders").schema
-    manifest = _file_zones(files) or _file_zones_scan(
-        spark, files, schema=zoned_schema
-    )
-    keep = [p for p, mn, mx in manifest if mx >= lo and mn <= hi]
+    zones = stats.bounds(spark, files, "o_orderkey")
+    keep = [p for p, (mn, mx) in zones.items() if mx >= lo and mn <= hi]
     assert 0 < len(keep) < len(files), "zone map must actually prune"
     pruned = read_back(spark, zoned_schema, *keep).filter(
         F.col("o_orderkey").between(lo, hi)

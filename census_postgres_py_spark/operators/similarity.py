@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark import stats
+from census_postgres_py_spark.functions.rounding import r6
 from census_postgres_py_spark.functions.vector import cosine, dot, l2_norm
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
@@ -293,12 +295,10 @@ def join_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-split and parallel, and neither the extra full shuffle nor
     # a local materialization of the corpus pays for itself — the gate
     # answers from the parquet footer (O(1), no Spark job).
-    from census_postgres_py_spark.tables import approx_rows
-
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ep = (
         e.repartition(npart, "vec_id").localCheckpoint()
-        if approx_rows(spark, sf_dir, "embeddings") <= _IVF_CHECKPOINT_MAX_ROWS
+        if stats.rows(sf_dir, "embeddings") <= _IVF_CHECKPOINT_MAX_ROWS
         else e
     )
 
@@ -377,11 +377,6 @@ def join_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMB_DIM = 64
 
 
-def _r6(c: Column) -> Column:
-    """Repo-wide half-up 6dp rounding (identical on both engines)."""
-    return F.floor(c * 1000000 + F.lit(0.5)) / 1000000
-
-
 @register(
     "emb_dim_stats",
     oracle=f"""
@@ -420,8 +415,8 @@ def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode("mean_arr").alias("pos0", "mean_raw"), "std_arr"
     ).select(
         (F.col("pos0") + 1).cast("long").alias("pos"),
-        _r6(F.col("mean_raw")).alias("mean_val"),
-        _r6(F.element_at("std_arr", F.col("pos0") + 1)).alias("std_val"),
+        r6(F.col("mean_raw")).alias("mean_val"),
+        r6(F.element_at("std_arr", F.col("pos0") + 1)).alias("std_val"),
     )
 
 
@@ -484,8 +479,8 @@ def emb_centroid_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scored.groupBy("label").agg(
         F.count("*").cast("long").alias("n_vectors"),
-        _r6(F.first(l2_norm(F.col("centroid")))).alias("centroid_norm"),
-        _r6(F.avg("cs")).alias("avg_cos"),
+        r6(F.first(l2_norm(F.col("centroid")))).alias("centroid_norm"),
+        r6(F.avg("cs")).alias("avg_cos"),
     )
 
 

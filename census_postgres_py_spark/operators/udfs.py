@@ -27,8 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark import stats
 from census_postgres_py_spark.registry import register
-from census_postgres_py_spark.tables import approx_rows, t
+from census_postgres_py_spark.tables import t
 
 
 @F.pandas_udf(DoubleType())
@@ -343,10 +344,10 @@ def udf_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # policy as dedup_embedding_cosine's all-pairs guard). Row count is
     # a cheap PROXY for what actually costs — the number of per-row
     # frames shipped to Python — read from the parquet footer (O(1),
-    # no table scan) via tables.approx_rows, the same path convention
-    # t() scans, so the guard can't silently measure the wrong file.
+    # no table scan) via stats.rows, the same path convention t()
+    # scans, so the guard can't silently measure the wrong file.
     _PER_ROW_FRAME_MAX = 1_000_000
-    n = approx_rows(spark, sf_dir, "orders")
+    n = stats.rows(sf_dir, "orders")
     if n > _PER_ROW_FRAME_MAX:
         raise ValueError(
             f"udf_window_agg ships one Arrow batch per ROW-frame and "

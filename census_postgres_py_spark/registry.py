@@ -37,8 +37,7 @@ _LOADED = False
 # 355 frozen ids (345 hash + 10 rows-only). ``queries()`` emits plain
 # module-registration order; the driver's ~50-id/round window re-samples
 # already-graded ids naturally from here on. History of the rotation
-# (r3–r9, judge-sanctioned) lives in BASELINE.md and
-# tools/rotate_window.py's docstring.
+# (r3–r9, judge-sanctioned) lives in BASELINE.md.
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

@@ -12,6 +12,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark import stats
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -28,43 +30,6 @@ TABLE_NAMES = (
 # Dimension tables small enough to broadcast at ANY scale factor (region
 # and nation are fixed-size in ACS terms: geographies, not facts).
 BROADCAST_DIMS = ("region", "nation")
-
-
-#: (path, stat fingerprint) -> inferred Spark schema. Every bare
-#: ``spark.read.parquet`` runs a 1-task schema-inference JOB (~70 ms
-#: warm, and a host-stall exposure point); an explicit ``.schema(...)``
-#: read plans with zero jobs (measured 20 reads: 1.68 s inferred vs
-#: 0.34 s explicit). The first read of each fixture path infers
-#: exactly as before and caches Spark's OWN StructType, so later reads
-#: are byte-identical in semantics; the mtime+size fingerprint drops
-#: the entry if a harness regenerates the file in-process. Metadata
-#: only — no data or results are cached (r12, guide §1.2 "remove
-#: driver-blocking work").
-_SCHEMA_CACHE: dict = {}
-
-
-def _path_fingerprint(path: str):
-    import os
-
-    try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            # Rewriting a part file in place changes neither the
-            # directory's mtime nor size, so directory-backed fixtures
-            # fold the contained files' stats into the fingerprint
-            # (r12 ADVICE).
-            parts = tuple(
-                sorted(
-                    (fn, s.st_mtime_ns, s.st_size)
-                    for root, _, fns in os.walk(path)
-                    for fn in fns
-                    for s in (os.stat(os.path.join(root, fn)),)
-                )
-            )
-            return (st.st_mtime_ns, st.st_size, parts)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
 
 
 def _as_nullable(dt):
@@ -111,25 +76,26 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Some generations of ``events.parquet`` store ``ts`` as parquet INT64
     TIMESTAMP(NANOS), which Spark 4.x rejects at read time
-    (PARQUET_TYPE_ILLEGAL). We read those via ``nanosAsLong`` and rebuild
-    a microsecond timestamp — DuckDB (the oracle) reads the same file at
-    microsecond precision, so ``ts div 1000`` keeps both sides exactly
-    equal. Newer generations store a plain TIMESTAMP(MICROS), which both
-    engines read natively — detect by the arrived-at Spark type. The conf
-    is set here, not only in session.py, because the driver supplies its
-    own SparkSession.
+    (PARQUET_TYPE_ILLEGAL). Only when the footer shows that layout is
+    ``nanosAsLong`` set and a microsecond timestamp rebuilt — DuckDB
+    (the oracle) reads the same file at microsecond precision, so
+    ``ts div 1000`` keeps both sides exactly equal. Newer generations
+    store a plain TIMESTAMP(MICROS), which both engines read natively
+    and which leaves the caller's session conf untouched.
+
+    The read carries Spark's own inferred schema, memoized per file
+    fingerprint (:func:`stats.memo`): a bare ``spark.read.parquet`` runs
+    a 1-task schema-inference job on every read (measured 20 reads:
+    1.68 s inferred vs 0.34 s explicit), an explicit schema plans with
+    none. Metadata only — no data or results are cached.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    fp = _path_fingerprint(path)
-    cached = _SCHEMA_CACHE.get(path)
-    if cached is not None and fp is not None and cached[0] == fp:
-        df = spark.read.schema(cached[1]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if fp is not None:
-            _SCHEMA_CACHE[path] = (fp, df.schema)
+    if name == "events" and stats.is_nanos(path, "ts"):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = stats.memo(
+        path, "schema", lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes)["ts"] == "bigint":  # legacy NANOS
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Newer testdata generations write TIMESTAMP(MICROS, isAdjustedToUTC=
@@ -141,37 +107,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def approx_rows(
-    spark: SparkSession, sf_dir: str, name: str
-) -> int:
-    """O(1) row count of one fixture table from its parquet footer.
-
-    Shared by every operator that needs a cheap cardinality guard
-    (per-row-UDF refusals, broadcast-vs-shuffle gates) so the guard and
-    :func:`t`'s scan can never disagree about where the table lives —
-    both derive the path from the same ``{sf_dir}/{name}.parquet``
-    convention here. Falls back to a full ``count()`` only when the
-    footer isn't readable (non-file source, exotic layout); directories
-    of part-files sum their footers without scanning data pages.
-    """
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
-                for root, _, fns in os.walk(path)
-                for fn in fns
-                if fn.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return t(spark, sf_dir, name).count()
 
 
 #: Gate for broadcast hints on frames derived from SCALE-GROWING
@@ -202,41 +137,6 @@ _BROADCAST_DIM_MAX_ROWS = 8_000_000
 #: show it small.
 VOCAB_ROWS_PER_DOC = 64
 
-_HEAD_SAMPLE_CACHE: dict[tuple, list[str]] = {}
-
-
-def _documents_head_sample(sf_dir: str, n: int = 512) -> list[str]:
-    """First ≤n document texts, read driver-side via pyarrow (one
-    column, one batch, no Spark job) and cached per (path, size,
-    mtime_ns). Serves the corpus-statistic planning gates
-    (:func:`vocab_rows_per_doc`, :func:`vocab_sample_distinct`).
-    Raises on a missing/unreadable table — callers own the fallback."""
-    import os
-
-    path = f"{sf_dir}/documents.parquet"
-    if os.path.isdir(path):
-        cands = [
-            os.path.join(root, fn)
-            for root, _, fns in os.walk(path)
-            for fn in sorted(fns)
-            if fn.endswith(".parquet")
-        ]
-        fpath = sorted(cands)[0]
-    else:
-        fpath = path
-    st = os.stat(fpath)
-    key = (fpath, st.st_size, st.st_mtime_ns, n)
-    hit = _HEAD_SAMPLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(fpath)
-    batch = next(pf.iter_batches(batch_size=n, columns=["text"]))
-    texts = [txt or "" for txt in batch.column("text").to_pylist()]
-    _HEAD_SAMPLE_CACHE[key] = texts
-    return texts
-
 
 def vocab_sample_distinct(sf_dir: str, n: int = 512) -> int:
     """Distinct whitespace-token count across the first ≤n documents —
@@ -246,7 +146,7 @@ def vocab_sample_distinct(sf_dir: str, n: int = 512) -> int:
     dedup_tfidf_cosine). Returns a large sentinel on a missing table so
     callers default to the general-corpus plan."""
     try:
-        texts = _documents_head_sample(sf_dir, n)
+        texts = stats.documents_head_sample(sf_dir, n)
     except Exception:
         return 1 << 30
     vocab: set[str] = set()
@@ -258,8 +158,9 @@ def vocab_sample_distinct(sf_dir: str, n: int = 512) -> int:
 def vocab_rows_per_doc(sf_dir: str) -> int:
     """Distinct-terms-per-doc bound derived from the corpus itself.
 
-    Reads the first ≤512 rows of ``documents.parquet`` driver-side via
-    pyarrow (one column, one batch — no Spark job), measures the MAX
+    Reads the first ≤512 rows of ``documents.parquet`` driver-side
+    (:func:`stats.documents_head_sample`: one column, one batch — no
+    Spark job), measures the MAX
     distinct whitespace-token count per document, and doubles it for
     sample-vs-population headroom, flooring at the static
     ``VOCAB_ROWS_PER_DOC``. Deriving from data instead of trusting the
@@ -269,11 +170,11 @@ def vocab_rows_per_doc(sf_dir: str) -> int:
     check past the ceiling. Still best-effort (a head sample can
     under-read a heavy tail — hence the 2× margin and the floor); the
     gate's job is planning, not a hard memory guarantee. The head
-    sample is cached per (path, size, mtime_ns) so repeated gate reads
+    sample is memoized per file fingerprint so repeated gate reads
     cost nothing.
     """
     try:
-        texts = _documents_head_sample(sf_dir)
+        texts = stats.documents_head_sample(sf_dir)
         max_terms = max(
             (len({w for w in txt.split(" ") if w}) for txt in texts),
             default=0,
@@ -291,7 +192,8 @@ def gated_broadcast(
     rows_per_source_row: float = 1.0,
 ) -> DataFrame:
     """Broadcast-hint ``df`` (a projection/derivation of fixture table
-    ``table``) only while the table's O(1) footer row count ×
+    ``table``) only while the table's exact footer row count
+    (:func:`stats.rows`) ×
     ``rows_per_source_row`` is under ``spark.census.broadcastDimMaxRows``;
     otherwise return ``df`` un-hinted.
 
@@ -310,8 +212,8 @@ def gated_broadcast(
     tight bound, which stays broadcastable far past the point where
     lineitem's row count would close the gate — while table-subset
     corpora (the edges-only stress fixture carries no part.parquet)
-    fall back to the derivation source instead of crashing through
-    approx_rows' count() of a missing file. The LAST entry must be a
+    fall back to the derivation source instead of crashing on the
+    footer read of a missing file. The LAST entry must be a
     table the op actually reads (static-tested in test_tables.py), so
     the fallback always exists on any corpus the op can run on."""
     import os
@@ -326,7 +228,7 @@ def gated_broadcast(
     limit = int(
         spark.conf.get(BROADCAST_DIM_CONF, str(_BROADCAST_DIM_MAX_ROWS))
     )
-    if approx_rows(spark, sf_dir, table) * rows_per_source_row <= limit:
+    if stats.rows(sf_dir, table) * rows_per_source_row <= limit:
         return F.broadcast(df)
     return df
 

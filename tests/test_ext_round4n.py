@@ -101,12 +101,12 @@ def test_triangle_big_graph_path_matches_small_graph_path(
     count-per-order agg — checkpointing lineitem-scale blocks before
     the decision exhausted /tmp at 100x in r8). Forcing the big path
     by faking a huge footer count must yield a bit-identical answer."""
-    from census_postgres_py_spark.operators import ext_round4n as mod
+    from census_postgres_py_spark import stats
 
     small = sorted(
         map(tuple, queries["graph_triangle_count"](spark, SF_SMOKE).collect())
     )
-    monkeypatch.setattr(mod, "approx_rows", lambda *_: 10**12)
+    monkeypatch.setattr(stats, "rows", lambda *_: 10**12)
     big = sorted(
         map(tuple, queries["graph_triangle_count"](spark, SF_SMOKE).collect())
     )
@@ -120,15 +120,16 @@ def test_triangle_degree_orientation_invariant(spark, queries):
     exactly — same parts, same counts."""
     from census_postgres_py_spark.operators import ext_round4n
 
-    # Guard against a vacuous pass (r10 ADVICE): if footer stats were
-    # absent the forced run would silently fall back to id-orientation
-    # and forced == base would hold trivially. The same bounds check
-    # gates the remap inside the operator, so proving it non-None (and
-    # in packed-key range) here proves the orientation actually engages
-    # under the zeroed confs below.
-    bounds = ext_round4n._partkey_bounds(SF_SMOKE)
-    assert bounds is not None, "fixture parquet lost its footer stats"
-    assert 0 <= bounds[0] and bounds[1] <= 2**31 - 1
+    # Guard against a vacuous pass (r10 ADVICE): if the partkeys left
+    # the packed-key range the forced run would silently keep
+    # id-orientation and forced == base would hold trivially. The same
+    # range check gates the remap inside the operator, so proving it
+    # here proves the orientation actually engages under the zeroed
+    # confs below.
+    from census_postgres_py_spark import stats
+
+    lo, hi = stats.key_range(spark, SF_SMOKE, "lineitem", "l_partkey")
+    assert 0 <= lo and hi <= 2**31 - 1
 
     base = {
         (r["l_partkey"], r["n_triangles"])

@@ -1,57 +1,12 @@
 """Unit behavior of the tables helpers the broadcast gates depend on:
-approx_rows (O(1) footer count + count() fallback) and gated_broadcast
-(conf parsing, hint vs pass-through). The plan-level consequences are
-covered in tests/test_plans.py; these pin the primitives."""
+gated_broadcast (conf parsing, hint vs pass-through, preference
+tuples) and the vocabulary factor. The footer row count they read is
+pinned in tests/test_stats.py, the plan-level consequences in
+tests/test_plans.py."""
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
-
 from tests.conftest import SF_SMOKE
-
-
-def test_approx_rows_matches_footer_and_scan(spark):
-    from census_postgres_py_spark.tables import approx_rows, t
-
-    n = approx_rows(spark, SF_SMOKE, "orders")
-    assert n == pq.ParquetFile(f"{SF_SMOKE}/orders.parquet").metadata.num_rows
-    assert n == t(spark, SF_SMOKE, "orders").count()
-    assert n > 0
-
-
-def test_approx_rows_sums_footers_for_directory_dataset(spark, tmp_path):
-    # a directory of part-files (the sink layout) sums footers
-    from census_postgres_py_spark.tables import approx_rows, t
-
-    out = str(tmp_path / "orders.parquet")
-    t(spark, SF_SMOKE, "orders").limit(100).repartition(3).write.parquet(out)
-    assert approx_rows(spark, str(tmp_path), "orders") == 100
-
-
-def test_approx_rows_falls_back_to_count_on_unreadable_footer(
-    spark, tmp_path, monkeypatch
-):
-    # corrupt "parquet" file => pyarrow footer read raises => the
-    # count() fallback path runs; monkeypatch t() so the fallback is
-    # observable without a real scan of the bogus bytes
-    from census_postgres_py_spark import tables
-
-    bogus = tmp_path / "orders.parquet"
-    bogus.write_bytes(b"not a parquet file")
-
-    class _FakeDF:
-        def count(self):
-            return 7
-
-    calls = []
-
-    def fake_t(spark_, sf_dir_, name_):
-        calls.append(name_)
-        return _FakeDF()
-
-    monkeypatch.setattr(tables, "t", fake_t)
-    assert tables.approx_rows(spark, str(tmp_path), "orders") == 7
-    assert calls == ["orders"]
 
 
 def test_gated_broadcast_prices_vocab_expansion(spark):
@@ -59,15 +14,15 @@ def test_gated_broadcast_prices_vocab_expansion(spark):
     gated on docs × VOCAB_ROWS_PER_DOC, not the raw document count — a
     corpus under the 8M-doc cap can still carry a vocabulary far past
     the broadcast ceiling."""
+    from census_postgres_py_spark import stats
     from census_postgres_py_spark.tables import (
         BROADCAST_DIM_CONF,
         VOCAB_ROWS_PER_DOC,
-        approx_rows,
         gated_broadcast,
         t,
     )
 
-    n_docs = approx_rows(spark, SF_SMOKE, "documents")
+    n_docs = stats.rows(SF_SMOKE, "documents")
     df = t(spark, SF_SMOKE, "documents").select("doc_id")
     # cap between n_docs and n_docs × factor: key-level hint survives,
     # vocab-priced hint is dropped
@@ -157,16 +112,16 @@ def test_gated_broadcast_preference_tuple_falls_back_on_missing_table(
     full corpora, the derivation source on table-subset corpora."""
     import shutil
 
+    from census_postgres_py_spark import stats
     from census_postgres_py_spark.tables import (
         BROADCAST_DIM_CONF,
-        approx_rows,
         gated_broadcast,
         t,
     )
 
     df = t(spark, SF_SMOKE, "part").select("p_partkey")
-    n_part = approx_rows(spark, SF_SMOKE, "part")
-    n_li = approx_rows(spark, SF_SMOKE, "lineitem")
+    n_part = stats.rows(SF_SMOKE, "part")
+    n_li = stats.rows(SF_SMOKE, "lineitem")
     assert n_part < n_li
     # cap between |part| and |lineitem|: the part-keyed gate hints,
     # a lineitem-keyed gate would not — proving part was chosen
@@ -199,8 +154,8 @@ def test_gated_broadcast_keys_on_a_table_the_op_reads():
     function that also READS the key's GUARANTEED table via
     t(spark, sf_dir, "<tbl>"). Keying the gate on a table the op never
     reads crashes on table-subset corpora (e.g. the edges-only stress
-    corpus carries only orders+lineitem): approx_rows falls back to
-    t().count() on the missing file. Two key shapes are legal:
+    corpus carries only orders+lineitem): the footer row count of the
+    missing file raises. Two key shapes are legal:
 
     - a string: that table must be read by the op;
     - a preference tuple (r8 ADVICE): earlier entries are existence-

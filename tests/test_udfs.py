@@ -10,6 +10,7 @@ import pytest
 def test_udf_window_agg_refuses_production_volume(spark, monkeypatch):
     """The per-row-frame demo tier must fail fast past 1e6 rows with
     the fast twin named — same policy as the all-pairs cosine guard."""
+    from census_postgres_py_spark import stats
     from census_postgres_py_spark.operators import udfs as mod
 
     class FakeCount:
@@ -20,8 +21,8 @@ def test_udf_window_agg_refuses_production_volume(spark, monkeypatch):
             return self
 
     monkeypatch.setattr(mod, "t", lambda *a, **k: FakeCount())
-    # the guard reads the shared tables.approx_rows proxy (as imported
-    # into the operator module) — fake it past the threshold
-    monkeypatch.setattr(mod, "approx_rows", lambda *a, **k: 1_000_001)
+    # the guard reads the shared stats.rows footer count — fake it past
+    # the threshold
+    monkeypatch.setattr(stats, "rows", lambda *a, **k: 1_000_001)
     with pytest.raises(ValueError, match="udf_window_agg_fast"):
         mod.udf_window_agg(spark, "/nonexistent_sf_dir")
