@@ -3,7 +3,9 @@
 Each query here REALLY runs a Structured Streaming job: a file-source
 stream over the fixture parquet, micro-batches driven synchronously to
 completion (`processAllAvailable`), results landed in a memory sink or
-via `foreachBatch`. Because Spark's windowed aggregations are identical
+via `foreachBatch`. Event streams read the fixture in place
+(`tables.t(..., stream=True)`); only re-laid-out feeds go through
+`_cached_feed`. Because Spark's windowed aggregations are identical
 expressions on batch and stream, the stream results are still
 oracle-checkable against plain SQL — the strongest batch==stream
 equivalence check available (SURVEY.md §5.2 item 5).
@@ -77,11 +79,13 @@ def _fixture_fingerprint(sf_dir: str, table: str = "events") -> str:
 
 def _cached_feed(name: str, sf_dir: str, build, table: str = "events") -> str:
     """Materialize-once feed directory, fingerprint-validated and
-    atomically swapped into place. ``build(tmp_dir)`` writes the feed
-    into ``tmp_dir`` (created empty); the helper stamps the source
-    fixture's fingerprint into ``_FEED_READY`` (underscore-prefixed =>
-    invisible to Spark readers) and ``os.rename``s the finished dir
-    into place. Two failure modes this closes:
+    atomically swapped into place, for feeds laid out unlike the
+    fixture (dedup's two copies, custom_state's parts, sessionize's
+    time shards, the python-datasource shards). ``build(tmp_dir)``
+    writes the feed into ``tmp_dir`` (created empty); the helper stamps
+    the source fixture's fingerprint into ``_FEED_READY`` (underscore-
+    prefixed => invisible to Spark readers) and ``os.rename``s the
+    finished dir into place. Two failure modes this closes:
 
     - STALENESS: the marker stores ``_fixture_fingerprint`` (abs
       sf_dir + per-file size/mtime of the fixture), so a regenerated
@@ -150,29 +154,6 @@ def _cached_feed(name: str, sf_dir: str, build, table: str = "events") -> str:
         f"different fixture fingerprint — basename-colliding sf_dirs "
         f"are thrashing {final}"
     )
-
-
-def _events_stream(spark: SparkSession, sf_dir: str, max_files: int | None = None):
-    """File-source stream over the events fixture.
-
-    Spark's file stream source needs a DIRECTORY (a single .parquet
-    file fails the basePath check), and the fixture file stores ts as
-    INT64 TIMESTAMP(NANOS), which the parquet reader rejects outright —
-    so the fixture is materialized once per sf_dir into a scratch
-    directory via tables.t (which performs the ns→µs rebuild) and the
-    stream tails that directory. On a real deployment this stage IS the
-    landing zone: upstream writers drop parquet files in, the stream
-    picks them up per micro-batch."""
-    ev = t(spark, sf_dir, "events")
-    src_dir = _cached_feed(
-        f"events_src_{os.path.basename(sf_dir)}",
-        sf_dir,
-        lambda d: ev.write.mode("overwrite").parquet(d),
-    )
-    reader = spark.readStream.schema(ev.schema)
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files)
-    return reader.parquet(src_dir)
 
 
 #: State-store partition count for the SMALL-STATE streaming ops
@@ -257,7 +238,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark is what lets a 30-day event stream run in bounded
     memory: closed windows are evicted from the state store.
     """
-    ev = _events_stream(spark, sf_dir)
+    ev = t(spark, sf_dir, "events", stream=True)
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -347,7 +328,7 @@ def stream_foreachbatch_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    ev = _events_stream(spark, sf_dir)
+    ev = t(spark, sf_dir, "events", stream=True)
     q = ev.writeStream.foreachBatch(write_batch).start()
     try:
         q.processAllAvailable()
@@ -494,7 +475,7 @@ def _ss_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by the registered op (memory sink, driver contract) and by
     tools/decades_streaming_filesink_r12.py (parquet sink), so the
     decade evidence drives the REAL plan, not a copy."""
-    ev = _events_stream(spark, sf_dir)
+    ev = t(spark, sf_dir, "events", stream=True)
     bucket_ms = 1_800_000  # = the 30-minute window span
     views = (
         ev.filter(F.col("event_type") == "view")
@@ -666,7 +647,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("c_custkey").alias("user_id"), "n_name")
     )
-    ev = _events_stream(spark, sf_dir)
+    ev = t(spark, sf_dir, "events", stream=True)
     agg = (
         ev.join(broadcast(dim), "user_id")
         .groupBy("n_name")
@@ -794,7 +775,7 @@ def pipeline_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ephemeral=True,
     )
 
-    ev = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
+    ev = t(spark, sf_dir, "events", stream=True).withWatermark("ts", "1 hour")
     enriched = ev.join(F.broadcast(dim), "event_type")
     windowed = (
         enriched.groupBy(
@@ -1021,14 +1002,15 @@ def stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time as _time
 
-    # Feed DATA is cached per sf_dir (the materialize-once class, like
-    # _events_stream): file contents and their forced chronological
-    # mtimes are call-invariant, so rebuilding them per call was pure
-    # write churn (wall time is dominated by the micro-batches +
-    # statestore, measured unchanged at ~5.5s warm — this is a scratch-
-    # IO/hygiene win, not a latency one). The CHECKPOINT cannot be
-    # cached — a reused file-source checkpoint marks the feed consumed
-    # and the rerun would emit nothing — so it stays uuid-fresh per run.
+    # Feed DATA is cached per sf_dir (_cached_feed: time shards are a
+    # layout the fixture lacks, so it cannot stream in place): contents
+    # and forced chronological mtimes are call-invariant, so rebuilding
+    # them per call was pure write churn (wall time is dominated by the
+    # micro-batches + statestore, measured unchanged at ~5.5s warm —
+    # this is a scratch-IO/hygiene win, not a latency one). The
+    # CHECKPOINT cannot be cached — a reused file-source checkpoint
+    # marks the feed consumed and the rerun would emit nothing — so it
+    # stays uuid-fresh per run.
     ev = t(spark, sf_dir, "events").select(
         "user_id",
         "ts",
@@ -1334,7 +1316,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_sessionize_state precedent; A/B table and the conf override
     live at the constant).
     """
-    ev = _events_stream(spark, sf_dir)
+    ev = t(spark, sf_dir, "events", stream=True)
     counts = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

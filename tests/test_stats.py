@@ -203,5 +203,42 @@ def test_nanos_events_read_rebuilds_micros(spark, tmp_path):
         ]
         epoch = datetime(1970, 1, 1)
         assert got == [(w - epoch) // timedelta(microseconds=1) for w in when]
+
+        # the stream form applies the same fixup to the file in place
+        stream = t(spark, str(tmp_path), "events", stream=True)
+        assert stream.dtypes == df.dtypes
+        sink = f"nanos_{uuid.uuid4().hex[:12]}"
+        q = stream.writeStream.format("memory").queryName(sink).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        streamed = [
+            r[0] for r in spark.table(sink).orderBy("event_id").selectExpr(
+                "unix_micros(ts)"
+            ).collect()
+        ]
+        spark.catalog.dropTempView(sink)
+        assert streamed == got
     finally:
         spark.conf.unset(NANOS_CONF)
+
+
+def test_directory_layout_events_stream(spark, queries, tmp_path):
+    """A directory-layout ``events.parquet`` (2 part files) streams
+    through the same glob as the single fixture file, with the same
+    rows."""
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    half = events.num_rows // 2
+    out = tmp_path / "events.parquet"
+    out.mkdir()
+    pq.write_table(events.slice(0, half), str(out / "part-0.parquet"))
+    pq.write_table(events.slice(half), str(out / "part-1.parquet"))
+
+    want = sorted(
+        map(tuple, queries["stream_watermark"](spark, SF_SMOKE).collect())
+    )
+    got = sorted(
+        map(tuple, queries["stream_watermark"](spark, str(tmp_path)).collect())
+    )
+    assert want and got == want

@@ -270,6 +270,22 @@ def test_cached_feed_ops_are_repeat_call_stable(spark, queries):
         assert first and first == second, qid
 
 
+def test_event_streams_read_the_fixture_in_place(
+    spark, queries, monkeypatch, tmp_path
+):
+    """The plain events streams read the fixture file itself: no
+    ``events_src_*`` copy is written under a fresh tempdir, and a second
+    call in the same session returns the same non-empty rows — with the
+    fixture as the source, only the fresh checkpoint per call makes the
+    rerun replay the whole file."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for qid in ("stream_windowed_topk", "stream_watermark"):
+        first = sorted(map(tuple, queries[qid](spark, SF_SMOKE).collect()))
+        second = sorted(map(tuple, queries[qid](spark, SF_SMOKE).collect()))
+        assert first and first == second, qid
+    assert not list(tmp_path.glob("cppys_stream/events_src_*"))
+
+
 def test_cached_feed_validates_fingerprint_and_swaps_atomically(tmp_path):
     """ADVICE r7 (streaming/jobs.py:146): the materialize-once feeds
     must (a) cache-hit on an unchanged fixture, (b) REBUILD when the
