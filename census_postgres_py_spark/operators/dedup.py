@@ -53,9 +53,7 @@ CONT_PREFIX_EXTRA = 3
 # so the two-stage path is provably exact at arbitrary scale rather
 # than argued at the measured one (r10 VERDICT item 7). The default
 # keeps the measured hub-100x decade (1.89e9 votes × ~600²-shingle
-# docs → p ≤ 2e-5) comfortably on the hashed path with ~50x headroom;
-# ≤ 0 forces the raw path (test hook / paranoid deployments).
-COLLISION_BUDGET_CONF = "spark.census.dedup.collisionBudget"
+# docs → p ≤ 2e-5) comfortably on the hashed path with ~50x headroom.
 _COLLISION_BUDGET = 1e-3
 # Volume FLOOR for electing the hashed two-stage verify: below this
 # estimated raw-array candidate-shuffle size the prefilter's extra
@@ -66,7 +64,6 @@ _COLLISION_BUDGET = 1e-3
 # two-stage path exists for (raw ENOSPC'd at ~1 TB of actual shuffle,
 # r9 VERDICT item 2). The regimes sit 3 orders of magnitude apart, so
 # the default floor (64 GB) has huge margin on both sides.
-HASHED_VERIFY_MIN_BYTES_CONF = "spark.census.dedup.hashedVerifyMinBytes"
 _HASHED_VERIFY_MIN_BYTES = 64e9
 # Per-shingle raw-array cost estimate: 3 words of the measured corpora
 # average ~20 chars + UnsafeData array element overhead ≈ 40 B
@@ -126,8 +123,7 @@ def _with_dups_input_rows(spark: SparkSession, sf_dir: str) -> int:
     default provider can NEVER open the 20k checkpoint gate — that is
     intentional: the checkpoint path is reachable only via the stress
     harnesses' _with_dups seam swap (whose uncapped providers carry no
-    probe and fall back to the honest count()) or an explicit
-    SHINGLE_CHECKPOINT_CONF override."""
+    probe and fall back to the honest count())."""
     return 2 * min(DUP_MAX_DOC_ID, stats.rows(sf_dir, "documents"))
 
 
@@ -165,7 +161,6 @@ def _shingled(df: DataFrame) -> DataFrame:
 #: 317 s standalone on the 500k-doc web corpus). At the oracle-sized
 #: fixture (≤400 docs) the gate stays closed and the plan stays lazy —
 #: no checkpoint job in bench/driver runs.
-SHINGLE_CHECKPOINT_CONF = "spark.census.dedup.checkpointMinDocs"
 _SHINGLE_CHECKPOINT_MIN_DOCS = 20_000
 
 
@@ -186,12 +181,8 @@ def _input_docs_rows(spark: SparkSession, sf_dir: str, docs: DataFrame) -> int:
 
 
 def _docs_at_scale(spark: SparkSession, sf_dir: str, docs: DataFrame) -> bool:
-    limit = int(
-        spark.conf.get(
-            SHINGLE_CHECKPOINT_CONF, str(_SHINGLE_CHECKPOINT_MIN_DOCS)
-        )
-    )
-    return _input_docs_rows(spark, sf_dir, docs) >= limit
+    rows = _input_docs_rows(spark, sf_dir, docs)
+    return rows >= _SHINGLE_CHECKPOINT_MIN_DOCS
 
 
 def _shared_shingled(
@@ -199,7 +190,7 @@ def _shared_shingled(
 ) -> DataFrame:
     """Shingle-set frame, materialized once when the corpus is big
     enough that per-subtree recompute dominates (see
-    SHINGLE_CHECKPOINT_CONF). localCheckpoint, like the triangle op's
+    _SHINGLE_CHECKPOINT_MIN_DOCS). localCheckpoint, like the triangle op's
     small-graph path: executor-local, not fault-tolerant — a lost
     executor re-runs the job, the right trade for a derived frame that
     is cheap to rebuild but expensive to rebuild FOUR times."""
@@ -288,7 +279,7 @@ def _elect_hashed_verify(
 
     1. VOLUME FLOOR (perf): estimated raw-array candidate shuffle
        = votes_upper · 2 sides · avg_n_sh · _EST_BYTES_PER_SHINGLE
-       must exceed HASHED_VERIFY_MIN_BYTES_CONF. Below it the raw
+       must exceed _HASHED_VERIFY_MIN_BYTES. Below it the raw
        single-stage verify is both faster (measured 15.8 vs 41.1 s on
        the web-10x corpus — the prefilter's extra joins dominate) and
        trivially exact; above it the hashed path is what fits in disk
@@ -296,33 +287,21 @@ def _elect_hashed_verify(
     2. COLLISION BUDGET (safety): with |A∩B| ≤ max n_sh, corpus-wide
        undercount probability ≤ votes_upper · max_n² / 2⁶⁵ (birthday
        argument in _hashed_prefilter's docstring) must stay within
-       COLLISION_BUDGET_CONF, so the two-stage path is provably exact
-       at arbitrary scale, not argued at the measured one. Budget ≤ 0
-       forces the raw path outright (test hook).
+       _COLLISION_BUDGET, so the two-stage path is provably exact
+       at arbitrary scale, not argued at the measured one.
 
     Either way the output is row-identical — both verifies apply the
     same unrounded threshold to the same candidate set."""
-    spark = shingled.sparkSession
-    budget = float(
-        spark.conf.get(COLLISION_BUDGET_CONF, str(_COLLISION_BUDGET))
-    )
-    if budget <= 0:
-        return False
     votes = float(prefix_with_df.agg(F.sum("df")).collect()[0][0] or 0)
     st = shingled.agg(
         F.max("n_sh").alias("mx"), F.avg("n_sh").alias("av")
     ).collect()[0]
     max_n = float(st["mx"] or 0)
     avg_n = float(st["av"] or 0.0)
-    min_bytes = float(
-        spark.conf.get(
-            HASHED_VERIFY_MIN_BYTES_CONF, str(_HASHED_VERIFY_MIN_BYTES)
-        )
-    )
     est_bytes = votes * 2 * avg_n * _EST_BYTES_PER_SHINGLE
-    if est_bytes < min_bytes:
+    if est_bytes < _HASHED_VERIFY_MIN_BYTES:
         return False
-    return votes * max_n**2 / 2.0**65 <= budget
+    return votes * max_n**2 / 2.0**65 <= _COLLISION_BUDGET
 
 
 def _exact_jaccard_pairs(

@@ -35,8 +35,7 @@ _D38 = "decimal(38,0)"
 
 #: dedup_tfidf_cosine plan gate: corpora whose 512-doc head sample has
 #: at most this many distinct terms take the single-pass exact plan
-#: (see the op docstring). 0 forces the prefix plan (escape hatch).
-_SMALL_VOCAB_CONF = "spark.census.tfidf.smallVocabMax"
+#: (see the op docstring).
 _SMALL_VOCAB_MAX = 2048
 
 
@@ -297,7 +296,7 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     index rows there (nothing is rare), so the candidate set is
     nearly full⋈full ANYWAY. The op therefore samples the corpus
     vocabulary driver-side (tables.vocab_sample_distinct, O(1)
-    head batch) and, under ``spark.census.tfidf.smallVocabMax``
+    head batch) and, under ``_SMALL_VOCAB_MAX``
     (default 2048 distinct terms in a 512-doc sample), switches to
     the SINGLE-PASS exact plan: full⋈full inverted-index join,
     one pair-scale groupBy summing the EXACT integer dot with the
@@ -374,10 +373,7 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "term", "df", "w", "nsq")
     )
     sig = sig.localCheckpoint(eager=False)
-    small_vocab_max = int(
-        spark.conf.get(_SMALL_VOCAB_CONF, str(_SMALL_VOCAB_MAX))
-    )
-    if vocab_sample_distinct(sf_dir) <= small_vocab_max:
+    if vocab_sample_distinct(sf_dir) <= _SMALL_VOCAB_MAX:
         return _tfidf_cosine_small_vocab(spark, sig)
     # prefix flags: x̂ = w/‖w‖; maxŵ(t) broadcast (vocab-sized); a
     # suffix (rarest-first order => common terms AT the suffix end) is

@@ -31,11 +31,8 @@ from census_postgres_py_spark.tables import t
 # footer heuristic 3·|lineitem| under-counted for baskets >7 lines) and
 # falls back to plain shuffled hash joins on the node key above the
 # cap. ~48 M estimated edges; at ~16 B/element that bounds the
-# broadcast near 800 MB. Override per session with
-# spark.census.graph.broadcastAdjMaxEdges (set 0 to force the shuffle
-# path and skip the estimate entirely, a huge value to force broadcast).
+# broadcast near 800 MB.
 _ADJ_BROADCAST_MAX_EDGES = 48_000_000
-_ADJ_CONF = "spark.census.graph.broadcastAdjMaxEdges"
 
 # Degree-orientation gate for graph_triangle_count (r10). Probing the
 # degree distribution costs one lineitem scan + a part-keyed count, so
@@ -43,9 +40,7 @@ _ADJ_CONF = "spark.census.graph.broadcastAdjMaxEdges"
 # on when the max/mean part-occurrence ratio proves a power-law hub
 # (uniform corpora sit near 1, the zipf(1.1) stress corpus at ~1e5).
 _DEG_ORIENT_MIN_ROWS = 4_000_000
-_DEG_ORIENT_MIN_ROWS_CONF = "spark.census.graph.degreeOrientMinRows"
 _DEG_ORIENT_SKEW_RATIO = 32.0
-_DEG_ORIENT_SKEW_RATIO_CONF = "spark.census.graph.degreeOrientSkewRatio"
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,24 +253,19 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     by out-degree (the standard skew guard). The adjacency broadcast
     holds exactly when E itself is broadcastable (it is E, grouped:
     |E| total array elements) — so it is GATED on an exact upper
-    bound of |E| vs ``spark.census.graph.broadcastAdjMaxEdges``
-    (see _ADJ_BROADCAST_MAX_EDGES): Σ_orders C(k,2) over per-basket
-    DISTINCT-part counts, read off the operator's own basket table
+    bound of |E| vs ``_ADJ_BROADCAST_MAX_EDGES``: Σ_orders C(k,2) over
+    per-basket DISTINCT-part counts, read off the operator's own basket table
     (localCheckpointed once, serving the bound agg AND the main
     plan's first stage — the estimate adds a block scan, not a
     second lineitem shuffle). The r7 footer heuristic 3·|lineitem|
     was only valid for baskets of ≤7 lines (Σ C(k,2) ≤ 3k iff
     k ≤ 7) and UNDER-counted past that — this bound is
     shape-independent: it is exactly the per-basket pair count
-    before the global distinct, which only shrinks it. Skipped
-    entirely when the conf forces the shuffle path (cap ≤ 0, the
-    escape hatch). Past the cap both adjacency attachments become shuffled
-    hash joins on the node key, keeping the same Θ(wedges) intersect
-    work with shuffle-partition parallelism instead of a
-    per-executor copy of E.
+    before the global distinct, which only shrinks it. Past the cap
+    both adjacency attachments become shuffled hash joins on the node
+    key, keeping the same Θ(wedges) intersect work with
+    shuffle-partition parallelism instead of a per-executor copy of E.
     """
-    max_edges = int(spark.conf.get(_ADJ_CONF, str(_ADJ_BROADCAST_MAX_EDGES)))
-
     # DEGREE ORIENTATION (r10): the id-orientation above is only a
     # skew guard when ids are uncorrelated with popularity. On a
     # power-law corpus where the LOW ids are the hubs (the classic
@@ -300,18 +290,12 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2³⁰ (order only needs a deterministic function of the node; the
     # low 32 id bits keep keys unique), so the shift can never
     # overflow into the sign bit.
-    min_rows = int(
-        spark.conf.get(_DEG_ORIENT_MIN_ROWS_CONF, str(_DEG_ORIENT_MIN_ROWS))
-    )
-    skew_ratio = float(
-        spark.conf.get(_DEG_ORIENT_SKEW_RATIO_CONF, str(_DEG_ORIENT_SKEW_RATIO))
-    )
     pk_lo, pk_hi = stats.key_range(spark, sf_dir, "lineitem", "l_partkey")
     orient_by_degree = False
     if (
         0 <= pk_lo
         and pk_hi <= 2**31 - 1
-        and stats.rows(sf_dir, "lineitem") >= min_rows
+        and stats.rows(sf_dir, "lineitem") >= _DEG_ORIENT_MIN_ROWS
     ):
         li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         occ_lazy = li.groupBy("l_partkey").agg(F.count("*").alias("occ"))
@@ -328,7 +312,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in-process calls (selfcheck, pytest, repeated reps) skip the
         # lineitem scan; the first call of any process still measures.
         mx, av = _occ_skew_stats(sf_dir, occ_lazy)
-        orient_by_degree = bool(mx is not None and av and mx / av >= skew_ratio)
+        orient_by_degree = bool(
+            mx is not None and av and mx / av >= _DEG_ORIENT_SKEW_RATIO
+        )
         if orient_by_degree:
             occ = occ_lazy.localCheckpoint()
             packed = li.join(occ, "l_partkey").select(
@@ -343,9 +329,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     if not orient_by_degree:
         baskets = _baskets(spark, sf_dir)
-    if max_edges <= 0:
-        est_edges = max_edges + 1  # conf ≤ 0 forces shuffle; skip the agg
-    elif 3 * stats.rows(sf_dir, "lineitem") <= max_edges:
+    if 3 * stats.rows(sf_dir, "lineitem") <= _ADJ_BROADCAST_MAX_EDGES:
         # SMALL-GRAPH fast path, gated by an O(1) footer bound on the
         # basket table's SIZE (3·|lineitem| longs ≈ ≤128 MB at the
         # default cap — a bound on bytes checkpointed, NOT the
@@ -390,7 +374,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = edges.groupBy(F.col("pa").alias("node")).agg(
         F.collect_list("pb").alias("nbrs")
     )
-    if est_edges <= max_edges:
+    if est_edges <= _ADJ_BROADCAST_MAX_EDGES:
         adj = F.broadcast(adj)
     closed = (
         edges.join(

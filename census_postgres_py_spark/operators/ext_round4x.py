@@ -250,8 +250,7 @@ def emb_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _tile_rows_default budgets ~1/2 of per-core physical memory for
     # ~3 tile-sized transients and clamps to [2048, 8192]; on the
     # 128 GiB/32-core bench box it resolves to 8192 — the measured
-    # optimum. Conf-overridable so the knob stays PRICED by
-    # measurement, not asserted; the r10 event-log profile
+    # optimum. The r10 event-log profile
     # (tools/decades_r10.log) showed the dominant cost is NOT the sims
     # matrix but the ~1 ms/row FlatMapGroupsInPandas machinery on the
     # n×B exploded rows — so FEWER, BIGGER tiles win as long as the
@@ -259,12 +258,7 @@ def emb_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 777 s at the 100× decade vs 8192 tiles (25 blocks, 5M
     # row-instances) at 135.6 s, byte-identical output (the exact JVM
     # rescore decides membership; tiles only generate candidates).
-    block_rows = int(
-        spark.conf.get(
-            "spark.census.embsweep.tileRows",
-            str(_tile_rows_default(spark)),
-        )
-    )
+    block_rows = _tile_rows_default(spark)
     n_blocks = max(1, -(-n // block_rows))
 
     def _tile_candidates(pdf: pd.DataFrame):

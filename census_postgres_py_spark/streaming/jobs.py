@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark import stats
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import read_back, t
 
@@ -54,27 +55,17 @@ def _scratch(name: str, ephemeral: bool = False) -> str:
 
 def _fixture_fingerprint(sf_dir: str, table: str = "events") -> str:
     """Identity of a feed's source fixture: the absolute
-    ``<sf_dir>/<table>.parquet`` path plus every file's (size,
-    mtime_ns). Regenerating the fixture in place, or a different
-    sf_dir that happens to share a basename, changes the fingerprint
-    and invalidates the cached feed instead of silently replaying a
-    stale one that diverges from the batch oracle."""
+    ``<sf_dir>/<table>.parquet`` path plus its :func:`stats.fingerprint`
+    (mtime + size, per file for a directory table). Regenerating the
+    fixture in place, or a different sf_dir that happens to share a
+    basename, changes the fingerprint and invalidates the cached feed
+    instead of silently replaying a stale one that diverges from the
+    batch oracle."""
     import hashlib
 
     path = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    stats: list[tuple[str, int, int]] = []
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            for fname in sorted(files):
-                fpath = os.path.join(root, fname)
-                st = os.stat(fpath)
-                stats.append(
-                    (os.path.relpath(fpath, path), st.st_size, st.st_mtime_ns)
-                )
-    elif os.path.exists(path):
-        st = os.stat(path)
-        stats.append((table, st.st_size, st.st_mtime_ns))
-    return hashlib.sha256(repr((path, sorted(stats))).encode()).hexdigest()[:32]
+    ident = repr((path, stats.fingerprint(path)))
+    return hashlib.sha256(ident.encode()).hexdigest()[:32]
 
 
 def _cached_feed(name: str, sf_dir: str, build, table: str = "events") -> str:
@@ -88,7 +79,7 @@ def _cached_feed(name: str, sf_dir: str, build, table: str = "events") -> str:
     finished dir into place. Two failure modes this closes:
 
     - STALENESS: the marker stores ``_fixture_fingerprint`` (abs
-      sf_dir + per-file size/mtime of the fixture), so a regenerated
+      path + ``stats.fingerprint`` of the fixture), so a regenerated
       fixture or a basename-colliding sf_dir rebuilds instead of
       replaying a wrong feed forever.
     - CROSS-PROCESS RACE: the feed is built in a uuid'd sibling and
@@ -156,67 +147,71 @@ def _cached_feed(name: str, sf_dir: str, build, table: str = "events") -> str:
     )
 
 
-#: State-store partition count for the SMALL-STATE streaming ops
+#: State-store partition count for the stateful streaming ops
 #: (watermark/windowed aggs, dropDuplicatesWithinWatermark, per-user
-#: custom state: ≤100k state keys on every fixture decade). Streaming
-#: state partitioning is fixed by spark.sql.shuffle.partitions at
-#: checkpoint creation, and every partition costs a store commit per
-#: micro-batch, so the session's scan-sized default (32) quadruples
-#: the fixed cost for nothing — the stream_sessionize_state knob
-#: table established the pattern (its own A/B keeps 8). Interleaved
-#: A/B at sf0.1, 4-5 pairs each, parts 32 → 8 warm-min (r12):
-#: stream_watermark 1.60→0.98, stream_dedup_state 2.20→1.31,
+#: custom and sessionize state: ≤100k state keys on every fixture
+#: decade). Streaming state partitioning is fixed by
+#: spark.sql.shuffle.partitions at checkpoint creation, and every
+#: partition costs a store commit per micro-batch, so the session's
+#: scan-sized default (32) quadruples the fixed cost for nothing.
+#: Interleaved A/B at sf0.1, 4-5 pairs each, parts 32 → 8 warm-min
+#: (r12): stream_watermark 1.60→0.98, stream_dedup_state 2.20→1.31,
 #: stream_custom_state 5.40→4.11, stream_static_join 1.56→1.00,
 #: stream_windowed_topk 4.23→2.27 — 8 won every pair, outputs
-#: identical (partition count is execution detail). NOT applied to
-#: the stream-stream joins: their time-bucket-salted state is
-#: pair-scale and the r11 salting was validated 32-wide. A production
-#: deployment sizes this to its own state cardinality via the conf at
-#: stream launch.
-STREAM_STATE_PARTS_CONF = "spark.census.stream.statePartitions"
+#: identical (partition count is execution detail). Sessionize
+#: measured the other side (see _SESSIONIZE_FEED_SHARDS): 4 or 2
+#: partitions were SLOWER, its per-batch cost being the parallel
+#: python state fold. NOT applied to the stream-stream joins: their
+#: time-bucket-salted state is pair-scale and the r11 salting was
+#: validated 32-wide.
 _STREAM_STATE_PARTS = 8
 
 
 def _run_to_memory(
-    df: DataFrame, output_mode: str, state_parts: int | None = None
+    df: DataFrame,
+    output_mode: str,
+    state_parts: int | None = None,
+    checkpoint: str | None = None,
 ) -> DataFrame:
     """Drive a streaming DF to completion into a memory sink; return
-    the materialized table as a batch DataFrame. ``state_parts`` swaps
-    spark.sql.shuffle.partitions for the query's lifetime (the value
-    is locked into the state store at checkpoint creation) — session-
-    global during the swap, restored in the finally, same caveat as
-    the sessionize knob: any query planned on the shared session
-    during the window would inherit the swapped value, so this assumes
-    the SINGLE-THREADED operator execution the driver/bench/pytest
-    harnesses all use (r12 ADVICE — a production deployment sets the
-    conf once at stream launch instead of swapping)."""
+    the sink's rows as a batch DataFrame.
+
+    ``state_parts`` sets the query's state-store partition count.
+    Spark takes it from spark.sql.shuffle.partitions, read from a copy
+    of the session conf the query makes when it is constructed, so the
+    value is swapped in across ``start()`` only and the caller's value
+    (or its unset state) is restored as soon as ``start()`` returns.
+    A query planned concurrently on the same session inside that
+    window would inherit the swapped value. ``checkpoint`` pins the
+    checkpoint dir for callers that read the state store afterwards;
+    without it Spark uses a fresh temporary one. The sink's temp view
+    is dropped once resolved — the returned DataFrame keeps the rows —
+    so the caller's catalog gains no ``sink_*`` table."""
     spark = df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    old_parts = None
-    if state_parts is not None:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    try:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
-
-
-def _small_state_parts(spark: SparkSession) -> int:
-    return int(
-        spark.conf.get(STREAM_STATE_PARTS_CONF, str(_STREAM_STATE_PARTS))
+    writer = (
+        df.writeStream.outputMode(output_mode).format("memory").queryName(name)
     )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    key = "spark.sql.shuffle.partitions"
+    caller_parts = spark.conf.get(key, None)
+    if state_parts is not None:
+        spark.conf.set(key, str(state_parts))
+    try:
+        q = writer.start()
+    finally:
+        if caller_parts is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, caller_parts)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @register(
@@ -246,7 +241,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.unix_millis(F.col("w.start")).alias("hour_ms"), "n", "total_value")
     )
     return _run_to_memory(
-        agg, "complete", state_parts=_small_state_parts(spark)
+        agg, "complete", state_parts=_STREAM_STATE_PARTS
     )
 
 
@@ -291,7 +286,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     return _run_to_memory(
-        deduped, "append", state_parts=_small_state_parts(spark)
+        deduped, "append", state_parts=_STREAM_STATE_PARTS
     ).select("event_id", "event_type", "user_id")
 
 
@@ -409,7 +404,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     sunk = _run_to_memory(
-        updates, "update", state_parts=_small_state_parts(spark)
+        updates, "update", state_parts=_STREAM_STATE_PARTS
     )
     # last update per user == the full accumulation
     final = sunk.groupBy("user_id").agg(
@@ -659,7 +654,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return _run_to_memory(
-        agg, "complete", state_parts=_small_state_parts(spark)
+        agg, "complete", state_parts=_STREAM_STATE_PARTS
     )
 
 
@@ -924,9 +919,9 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and exercises watermark advance + event-time eviction (1 would
 # degenerate to batch mode). State partitions: FEWER is not cheaper —
 # the per-batch cost is dominated by the parallel python state fold,
-# not store commits, so halving partitions nearly doubled wall time.
+# not store commits, so halving partitions nearly doubled wall time
+# (the shipped 8 is _STREAM_STATE_PARTS).
 _SESSIONIZE_FEED_SHARDS = 2
-_SESSIONIZE_STATE_PARTS = 8
 
 
 @register(
@@ -1047,7 +1042,7 @@ def stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sessionize_run_stateful(
-    spark: SparkSession, src_dir: str, schema, ckpt: str | None = None
+    spark: SparkSession, src_dir: str, schema, ckpt: str
 ) -> DataFrame:
     """The bounded-state stateful core: watermarked file stream over
     ``src_dir`` (columns user_id, ts, ts_ms, event_id; one file per
@@ -1056,7 +1051,8 @@ def _sessionize_run_stateful(
     exactly once, unioned with the end-of-feed open sessions read from
     the state-store checkpoint. Shared by the operator and by the
     adversarial late-arrival test so the test exercises the REAL code
-    path. State partitions are sized to group cardinality (8 here —
+    path. ``ckpt`` is a fresh, caller-owned checkpoint dir. State
+    partitions are sized to group cardinality (_STREAM_STATE_PARTS —
     ~1.5k users in the fixture), not to the session's scan-sized
     shuffle default: every extra state partition costs a store commit
     per micro-batch."""
@@ -1192,73 +1188,41 @@ def _sessionize_run_stateful(
                 }
             )
 
-    # SESSION-GLOBAL swap, restored in the finally: streaming state-
-    # store partition count is fixed by spark.sql.shuffle.partitions at
-    # checkpoint creation (there is no per-query override for it), and
-    # 32 state partitions over this feed's key cardinality wastes more
-    # in per-partition store overhead than it buys. Any query PLANNED
-    # concurrently in this SparkSession during the swap would silently
-    # inherit 8 — the operator assumes the single-threaded session the
-    # driver/bench/pytest harnesses all use. A production deployment
-    # sets the conf once at stream launch instead.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_SESSIONIZE_STATE_PARTS)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .withWatermark("ts", "30 minutes")
+        # narrow the Arrow payload into the python fold (r10
+        # VERDICT item 5): Spark's analyzer REQUIRES the
+        # watermarked attribute to reach an EventTimeTimeout
+        # stateful op, so `ts` must stay — but the precomputed
+        # ts_ms long is redundant with it (the fold derives epoch
+        # ms from the timestamp vectorized), so drop it: 24 bytes
+        # per event across the Arrow boundary instead of 32, and
+        # parquet column pruning skips the ts_ms column at the
+        # feed scan
+        .select("user_id", "ts", "event_id")
     )
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .withWatermark("ts", "30 minutes")
-            # narrow the Arrow payload into the python fold (r10
-            # VERDICT item 5): Spark's analyzer REQUIRES the
-            # watermarked attribute to reach an EventTimeTimeout
-            # stateful op, so `ts` must stay — but the precomputed
-            # ts_ms long is redundant with it (the fold derives epoch
-            # ms from the timestamp vectorized), so drop it: 24 bytes
-            # per event across the Arrow boundary instead of 32, and
-            # parquet column pruning skips the ts_ms column at the
-            # feed scan
-            .select("user_id", "ts", "event_id")
-        )
-        updates = stream.groupBy("user_id").applyInPandasWithState(
-            update,
-            outputStructType=(
-                "user_id long, session_no long, start_ms long, "
-                "n_events long, dur_ms long"
-            ),
-            stateStructType=(
-                "sess_no long, start_ms long, n_events long, last_ms long"
-            ),
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        # per-RUN checkpoint (callers pass a fresh ephemeral dir; the
-        # src_dir-sibling default serves uuid-feed callers like the
-        # late-event test); the end-of-feed statestore read below
-        # consumes it LAZILY, so cleanup must wait for atexit
-        if ckpt is None:
-            ckpt = src_dir + "_ckpt"
-            import atexit as _atexit
-            import shutil as _shutil
-
-            _atexit.register(_shutil.rmtree, ckpt, ignore_errors=True)
-        name = f"sink_{uuid.uuid4().hex[:12]}"
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    closed = spark.table(name).select(
+    updates = stream.groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType=(
+            "user_id long, session_no long, start_ms long, "
+            "n_events long, dur_ms long"
+        ),
+        stateStructType=(
+            "sess_no long, start_ms long, n_events long, last_ms long"
+        ),
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    # per-RUN checkpoint (a reused one would mark the feed consumed);
+    # the end-of-feed statestore read below consumes it LAZILY, so the
+    # caller owns its cleanup
+    sunk = _run_to_memory(
+        updates, "update", state_parts=_STREAM_STATE_PARTS, checkpoint=ckpt
+    )
+    closed = sunk.select(
         "user_id", "session_no", "start_ms", "n_events", "dur_ms"
     )
     # end-of-feed flush: sessions still open in the final state
@@ -1312,9 +1276,8 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties break on event_type for a total order.
 
     State partitions are sized to STATE CARDINALITY, not the session's
-    scan-sized shuffle default — see _STREAM_STATE_PARTS (the
-    stream_sessionize_state precedent; A/B table and the conf override
-    live at the constant).
+    scan-sized shuffle default — see _STREAM_STATE_PARTS (A/B table at
+    the constant).
     """
     ev = t(spark, sf_dir, "events", stream=True)
     counts = (
@@ -1328,7 +1291,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sunk = _run_to_memory(
-        counts, "complete", state_parts=_small_state_parts(spark)
+        counts, "complete", state_parts=_STREAM_STATE_PARTS
     )
     w = Window.partitionBy("hour_ms").orderBy(
         F.col("n").desc(), "event_type"

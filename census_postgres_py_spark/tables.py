@@ -130,7 +130,6 @@ def t(
 #: single-executor ceiling. Above the gate the hint is dropped and the
 #: planner/AQE picks the strategy from real stats (which may STILL be
 #: broadcast when a selective filter makes the side genuinely small).
-BROADCAST_DIM_CONF = "spark.census.broadcastDimMaxRows"
 _BROADCAST_DIM_MAX_ROWS = 8_000_000
 
 #: FLOOR for the expansion factor on TERM-level derivations of
@@ -205,7 +204,7 @@ def gated_broadcast(
     """Broadcast-hint ``df`` (a projection/derivation of fixture table
     ``table``) only while the table's exact footer row count
     (:func:`stats.rows`) ×
-    ``rows_per_source_row`` is under ``spark.census.broadcastDimMaxRows``;
+    ``rows_per_source_row`` is under ``_BROADCAST_DIM_MAX_ROWS``;
     otherwise return ``df`` un-hinted.
 
     The raw row count of the UNDERLYING table is a conservative upper
@@ -236,10 +235,8 @@ def gated_broadcast(
                 chosen = cand
                 break
         table = chosen
-    limit = int(
-        spark.conf.get(BROADCAST_DIM_CONF, str(_BROADCAST_DIM_MAX_ROWS))
-    )
-    if stats.rows(sf_dir, table) * rows_per_source_row <= limit:
+    rows = stats.rows(sf_dir, table) * rows_per_source_row
+    if rows <= _BROADCAST_DIM_MAX_ROWS:
         return F.broadcast(df)
     return df
 

@@ -213,13 +213,19 @@ def test_simhash_band_width_is_output_invariant(spark, queries):
     assert got == want
 
 
-def test_shingle_checkpoint_gate_is_output_invariant(spark, queries):
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_shingle_checkpoint_gate_is_output_invariant(
+    spark, queries, monkeypatch
+):
     # Force the shared-shingled checkpoint gate OPEN at fixture scale
     # and pin that every gated op's output is unchanged — the
-    # checkpoint is a materialization point, never a semantic one.
-    from census_postgres_py_spark.operators.dedup import (
-        SHINGLE_CHECKPOINT_CONF,
-    )
+    # checkpoint is a materialization point, never a semantic one. The
+    # plan shows whether the gate opened: a localCheckpoint'd frame
+    # scans as ExistingRDD.
+    from census_postgres_py_spark.operators import dedup
 
     ids = (
         "dedup_ngram_jaccard",
@@ -227,58 +233,61 @@ def test_shingle_checkpoint_gate_is_output_invariant(spark, queries):
         "dedup_simhash",
         "dedup_minhash",
     )
-    base = {
-        q: sorted(map(tuple, queries[q](spark, SF_SMOKE).collect()))
-        for q in ids
-    }
-    spark.conf.set(SHINGLE_CHECKPOINT_CONF, "1")
-    try:
-        for q in ids:
-            got = sorted(map(tuple, queries[q](spark, SF_SMOKE).collect()))
-            assert got == base[q], q
-    finally:
-        spark.conf.unset(SHINGLE_CHECKPOINT_CONF)
+    base = {}
+    for q in ids:
+        df = queries[q](spark, SF_SMOKE)
+        assert "ExistingRDD" not in _executed_plan(df), q
+        base[q] = sorted(map(tuple, df.collect()))
+    monkeypatch.setattr(dedup, "_SHINGLE_CHECKPOINT_MIN_DOCS", 1)
+    for q in ids:
+        df = queries[q](spark, SF_SMOKE)
+        assert "ExistingRDD" in _executed_plan(df), q
+        assert sorted(map(tuple, df.collect())) == base[q], q
 
 
-def test_hashed_verify_election_is_output_invariant(spark, queries):
+def test_hashed_verify_election_is_output_invariant(
+    spark, queries, monkeypatch
+):
     """r10 VERDICT item 7 + the r11 volume floor: with the shingle
     gate forced open, _elect_hashed_verify picks the verify mode from
     (volume floor, collision budget). All three reachable states —
     default election (volume floor rejects the tiny fixture → raw),
     forced-hashed (floor 0), and forced-raw (budget 0) — must
     reproduce the fixture output exactly: the election is a
-    perf/provable-exactness switch, never a semantic one."""
-    from census_postgres_py_spark.operators.dedup import (
-        COLLISION_BUDGET_CONF,
-        HASHED_VERIFY_MIN_BYTES_CONF,
-        SHINGLE_CHECKPOINT_CONF,
-    )
+    perf/provable-exactness switch, never a semantic one. A spy on the
+    election pins that each state really took its branch."""
+    from census_postgres_py_spark.operators import dedup
 
     ids = ("dedup_ngram_jaccard", "dedup_containment")
     base = {
         q: sorted(map(tuple, queries[q](spark, SF_SMOKE).collect()))
         for q in ids
     }
-    spark.conf.set(SHINGLE_CHECKPOINT_CONF, "1")  # open the scale gate
-    try:
-        # default election (fixture volume is far below the floor → raw)
+    elected = []
+    real_elect = dedup._elect_hashed_verify
+
+    def spy(*args):
+        elected.append(real_elect(*args))
+        return elected[-1]
+
+    monkeypatch.setattr(dedup, "_elect_hashed_verify", spy)
+    monkeypatch.setattr(dedup, "_SHINGLE_CHECKPOINT_MIN_DOCS", 1)
+
+    def check(state, hashed):
+        elected.clear()
         for q in ids:
             got = sorted(map(tuple, queries[q](spark, SF_SMOKE).collect()))
-            assert got == base[q], f"{q} (default election)"
-        # floor 0: hashed two-stage path forced on
-        spark.conf.set(HASHED_VERIFY_MIN_BYTES_CONF, "0")
-        for q in ids:
-            got = sorted(map(tuple, queries[q](spark, SF_SMOKE).collect()))
-            assert got == base[q], f"{q} (forced hashed path)"
-        # budget 0 overrides the floor: raw verify forced
-        spark.conf.set(COLLISION_BUDGET_CONF, "0")
-        for q in ids:
-            got = sorted(map(tuple, queries[q](spark, SF_SMOKE).collect()))
-            assert got == base[q], f"{q} (forced raw path)"
-    finally:
-        spark.conf.unset(SHINGLE_CHECKPOINT_CONF)
-        spark.conf.unset(HASHED_VERIFY_MIN_BYTES_CONF)
-        spark.conf.unset(COLLISION_BUDGET_CONF)
+            assert got == base[q], f"{q} ({state})"
+        assert elected == [hashed] * len(ids), state
+
+    # default election (fixture volume is far below the floor → raw)
+    check("default election", False)
+    # floor 0: hashed two-stage path forced on
+    monkeypatch.setattr(dedup, "_HASHED_VERIFY_MIN_BYTES", 0)
+    check("forced hashed path", True)
+    # budget 0 overrides the floor: raw verify forced
+    monkeypatch.setattr(dedup, "_COLLISION_BUDGET", 0)
+    check("forced raw path", False)
 
 
 def test_collision_budget_bound_arithmetic(spark):

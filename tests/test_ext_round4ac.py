@@ -92,26 +92,36 @@ def test_tfidf_cosine_matches_bruteforce(spark, queries):
         assert abs(got_map[k] - expected[k]) < 2e-6
 
 
-def test_tfidf_cosine_prefix_and_small_vocab_plans_agree(spark, queries):
+def test_tfidf_cosine_prefix_and_small_vocab_plans_agree(
+    spark, queries, monkeypatch
+):
     """r9 plan gate: the fixture corpus takes the single-pass
-    small-vocab plan; forcing spark.census.tfidf.smallVocabMax=0
+    small-vocab plan; patching ext_round4ac._SMALL_VOCAB_MAX to 0
     exercises the prefix+bound plan. Both must return byte-identical
     pairs — the gate is a physical-plan choice, never a semantic one.
     (This is also the prefix path's standing coverage now that every
-    small fixture routes to the single-pass plan.)"""
-    small = sorted(
-        map(tuple, queries["dedup_tfidf_cosine"](spark, SF_SMOKE).collect())
-    )
-    spark.conf.set("spark.census.tfidf.smallVocabMax", "0")
-    try:
-        prefix = sorted(
-            map(
-                tuple,
-                queries["dedup_tfidf_cosine"](spark, SF_SMOKE).collect(),
-            )
-        )
-    finally:
-        spark.conf.unset("spark.census.tfidf.smallVocabMax")
+    small fixture routes to the single-pass plan.) A spy on the
+    single-pass builder pins which plan each run took."""
+    from census_postgres_py_spark.operators import ext_round4ac
+
+    calls = []
+    real_small = ext_round4ac._tfidf_cosine_small_vocab
+
+    def spy(*args):
+        calls.append(1)
+        return real_small(*args)
+
+    monkeypatch.setattr(ext_round4ac, "_tfidf_cosine_small_vocab", spy)
+
+    def run():
+        df = queries["dedup_tfidf_cosine"](spark, SF_SMOKE)
+        return sorted(map(tuple, df.collect()))
+
+    small = run()
+    assert len(calls) == 1
+    monkeypatch.setattr(ext_round4ac, "_SMALL_VOCAB_MAX", 0)
+    prefix = run()
+    assert len(calls) == 1
     assert small and small == prefix
 
 

@@ -113,38 +113,36 @@ def test_triangle_big_graph_path_matches_small_graph_path(
     assert small and small == big
 
 
-def test_triangle_degree_orientation_invariant(spark, queries):
+def test_triangle_degree_orientation_invariant(spark, queries, monkeypatch):
     """Triangle sets are invariant under ANY consistent edge
     orientation, so forcing the r10 degree-orientation remap
     (pk' = occ<<32 | part) must reproduce the id-oriented output
-    exactly — same parts, same counts."""
+    exactly — same parts, same counts. The plan shows which
+    orientation ran: only the remap unpacks the low 32 bits."""
     from census_postgres_py_spark.operators import ext_round4n
 
     # Guard against a vacuous pass (r10 ADVICE): if the partkeys left
     # the packed-key range the forced run would silently keep
     # id-orientation and forced == base would hold trivially. The same
     # range check gates the remap inside the operator, so proving it
-    # here proves the orientation actually engages under the zeroed
-    # confs below.
+    # here proves the orientation can engage under the zeroed
+    # constants below; the plan's low-32-bit mask shows it did.
     from census_postgres_py_spark import stats
 
     lo, hi = stats.key_range(spark, SF_SMOKE, "lineitem", "l_partkey")
     assert 0 <= lo and hi <= 2**31 - 1
 
-    base = {
-        (r["l_partkey"], r["n_triangles"])
-        for r in queries["graph_triangle_count"](spark, SF_SMOKE).collect()
-    }
-    spark.conf.set(ext_round4n._DEG_ORIENT_MIN_ROWS_CONF, "0")
-    spark.conf.set(ext_round4n._DEG_ORIENT_SKEW_RATIO_CONF, "0")
-    try:
-        forced = {
-            (r["l_partkey"], r["n_triangles"])
-            for r in queries["graph_triangle_count"](
-                spark, SF_SMOKE
-            ).collect()
-        }
-    finally:
-        spark.conf.unset(ext_round4n._DEG_ORIENT_MIN_ROWS_CONF)
-        spark.conf.unset(ext_round4n._DEG_ORIENT_SKEW_RATIO_CONF)
+    mask = str((1 << 32) - 1)
+
+    def run():
+        df = queries["graph_triangle_count"](spark, SF_SMOKE)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan, {(r["l_partkey"], r["n_triangles"]) for r in df.collect()}
+
+    base_plan, base = run()
+    assert mask not in base_plan
+    monkeypatch.setattr(ext_round4n, "_DEG_ORIENT_MIN_ROWS", 0)
+    monkeypatch.setattr(ext_round4n, "_DEG_ORIENT_SKEW_RATIO", 0)
+    forced_plan, forced = run()
+    assert mask in forced_plan
     assert forced == base

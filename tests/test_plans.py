@@ -158,9 +158,11 @@ def test_dynamic_partition_pruning_fires(spark, queries):
     assert any("dynamicpruning" in line.lower() for line in fact_scan), plan
 
 
-def test_triangle_adjacency_broadcast_gate_both_modes(spark, queries):
+def test_triangle_adjacency_broadcast_gate_both_modes(
+    spark, queries, monkeypatch
+):
     """graph_triangle_count's adjacency broadcast is gated on an O(1)
-    footer estimate of |E| vs spark.census.graph.broadcastAdjMaxEdges
+    footer estimate of |E| vs ext_round4n._ADJ_BROADCAST_MAX_EDGES
     (r6 VERDICT item 2: an ungated F.broadcast of a table that grows
     with E is a cluster-killer past executor memory). autoBroadcast is
     forced off so the physical plan reflects the GATE's decision, not
@@ -168,7 +170,7 @@ def test_triangle_adjacency_broadcast_gate_both_modes(spark, queries):
     plans both adjacency attachments as BroadcastHashJoin anyway; gate
     closed (cap 0) → both become shuffled joins, no nested-loop
     fallback, and the answer is bit-identical."""
-    from census_postgres_py_spark.operators.ext_round4n import _ADJ_CONF
+    from census_postgres_py_spark.operators import ext_round4n
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -176,7 +178,7 @@ def test_triangle_adjacency_broadcast_gate_both_modes(spark, queries):
         plan_hinted = _plan(hinted)
         assert plan_hinted.count("BroadcastHashJoin") >= 2, plan_hinted
 
-        spark.conf.set(_ADJ_CONF, "0")
+        monkeypatch.setattr(ext_round4n, "_ADJ_BROADCAST_MAX_EDGES", 0)
         shuffled = queries["graph_triangle_count"](spark, SF_SMOKE)
         plan_shuffled = _plan(shuffled)
         assert "BroadcastHashJoin" not in plan_shuffled, plan_shuffled
@@ -191,7 +193,6 @@ def test_triangle_adjacency_broadcast_gate_both_modes(spark, queries):
             map(tuple, shuffled.collect())
         )
     finally:
-        spark.conf.unset(_ADJ_CONF)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
@@ -199,17 +200,17 @@ def test_triangle_adjacency_broadcast_gate_both_modes(spark, queries):
     "qid",
     ["win_share_of_total", "agg_topn_others", "join_multiway_star"],
 )
-def test_dim_broadcast_gate_both_modes(spark, queries, qid):
+def test_dim_broadcast_gate_both_modes(spark, queries, qid, monkeypatch):
     """Every broadcast hint on a frame derived from a SCALE-GROWING
     table (part/customer/filtered orders) goes through
     tables.gated_broadcast: at fixture scale the hint plans a
-    BroadcastHashJoin; with spark.census.broadcastDimMaxRows forced to
+    BroadcastHashJoin; with tables._BROADCAST_DIM_MAX_ROWS patched to
     0 (simulating a 100 TB table) the hint is dropped and the join
     degrades to a shuffled strategy — never a nested-loop — with a
     bit-identical answer. Fixed-cardinality dims (region/nation) keep
     their unconditional hints, so the star join still shows ≥1
     BroadcastHashJoin even with the gate closed."""
-    from census_postgres_py_spark.tables import BROADCAST_DIM_CONF
+    from census_postgres_py_spark import tables
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -217,7 +218,7 @@ def test_dim_broadcast_gate_both_modes(spark, queries, qid):
         plan_hinted = _plan(hinted)
         assert "BroadcastHashJoin" in plan_hinted, plan_hinted
 
-        spark.conf.set(BROADCAST_DIM_CONF, "0")
+        monkeypatch.setattr(tables, "_BROADCAST_DIM_MAX_ROWS", 0)
         shuffled = queries[qid](spark, SF_SMOKE)
         plan_shuffled = _plan(shuffled)
         assert "BroadcastNestedLoopJoin" not in plan_shuffled
@@ -228,15 +229,18 @@ def test_dim_broadcast_gate_both_modes(spark, queries, qid):
             >= 1
         ), plan_shuffled
         if qid == "join_multiway_star":
-            # region/nation are NOT gated — their hints must survive
+            # region/nation are NOT gated — their hints must survive,
+            # while the gated dims' hints are gone
             assert "BroadcastHashJoin" in plan_shuffled, plan_shuffled
+            assert plan_shuffled.count("BroadcastHashJoin") < (
+                plan_hinted.count("BroadcastHashJoin")
+            ), plan_shuffled
         else:
             assert "BroadcastHashJoin" not in plan_shuffled, plan_shuffled
         assert sorted(map(tuple, hinted.collect())) == sorted(
             map(tuple, shuffled.collect())
         )
     finally:
-        spark.conf.unset(BROADCAST_DIM_CONF)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 

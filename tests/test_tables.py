@@ -1,5 +1,5 @@
 """Unit behavior of the tables helpers the broadcast gates depend on:
-gated_broadcast (conf parsing, hint vs pass-through, preference
+gated_broadcast (the row cap, hint vs pass-through, preference
 tuples) and the vocabulary factor. The footer row count they read is
 pinned in tests/test_stats.py, the plan-level consequences in
 tests/test_plans.py."""
@@ -9,14 +9,13 @@ from __future__ import annotations
 from tests.conftest import SF_SMOKE
 
 
-def test_gated_broadcast_prices_vocab_expansion(spark):
+def test_gated_broadcast_prices_vocab_expansion(spark, monkeypatch):
     """ADVICE r7 (tables.py:107): term-level vocabulary frames must be
     gated on docs × VOCAB_ROWS_PER_DOC, not the raw document count — a
     corpus under the 8M-doc cap can still carry a vocabulary far past
     the broadcast ceiling."""
-    from census_postgres_py_spark import stats
+    from census_postgres_py_spark import stats, tables
     from census_postgres_py_spark.tables import (
-        BROADCAST_DIM_CONF,
         VOCAB_ROWS_PER_DOC,
         gated_broadcast,
         t,
@@ -28,22 +27,17 @@ def test_gated_broadcast_prices_vocab_expansion(spark):
     # vocab-priced hint is dropped
     cap = n_docs * VOCAB_ROWS_PER_DOC // 2
     assert n_docs < cap < n_docs * VOCAB_ROWS_PER_DOC
-    spark.conf.set(BROADCAST_DIM_CONF, str(cap))
-    try:
-        keyed = gated_broadcast(spark, SF_SMOKE, "documents", df)
-        assert (
-            "hint" in keyed._jdf.queryExecution().logical().toString().lower()
-        )
-        vocab = gated_broadcast(
-            spark,
-            SF_SMOKE,
-            "documents",
-            df,
-            rows_per_source_row=VOCAB_ROWS_PER_DOC,
-        )
-        assert vocab is df
-    finally:
-        spark.conf.unset(BROADCAST_DIM_CONF)
+    monkeypatch.setattr(tables, "_BROADCAST_DIM_MAX_ROWS", cap)
+    keyed = gated_broadcast(spark, SF_SMOKE, "documents", df)
+    assert "hint" in keyed._jdf.queryExecution().logical().toString().lower()
+    vocab = gated_broadcast(
+        spark,
+        SF_SMOKE,
+        "documents",
+        df,
+        rows_per_source_row=VOCAB_ROWS_PER_DOC,
+    )
+    assert vocab is df
 
 
 def test_vocab_rows_per_doc_derives_from_corpus_stats(tmp_path):
@@ -81,43 +75,31 @@ def test_vocab_rows_per_doc_derives_from_corpus_stats(tmp_path):
     assert vocab_rows_per_doc(str(empty_dir)) == VOCAB_ROWS_PER_DOC
 
 
-def test_gated_broadcast_hints_only_under_the_cap(spark):
-    from census_postgres_py_spark.tables import (
-        BROADCAST_DIM_CONF,
-        gated_broadcast,
-        t,
-    )
+def test_gated_broadcast_hints_only_under_the_cap(spark, monkeypatch):
+    from census_postgres_py_spark import tables
+    from census_postgres_py_spark.tables import gated_broadcast, t
 
     df = t(spark, SF_SMOKE, "part").select("p_partkey")
     hinted = gated_broadcast(spark, SF_SMOKE, "part", df)
     # hint surfaces as a ResolvedHint/UnresolvedHint node in the plan
     assert "hint" in hinted._jdf.queryExecution().logical().toString().lower()
-    spark.conf.set(BROADCAST_DIM_CONF, "0")
-    try:
-        plain = gated_broadcast(spark, SF_SMOKE, "part", df)
-        assert (
-            "hint"
-            not in plain._jdf.queryExecution().logical().toString().lower()
-        )
-        assert plain is df
-    finally:
-        spark.conf.unset(BROADCAST_DIM_CONF)
+    monkeypatch.setattr(tables, "_BROADCAST_DIM_MAX_ROWS", 0)
+    plain = gated_broadcast(spark, SF_SMOKE, "part", df)
+    plan = plain._jdf.queryExecution().logical().toString().lower()
+    assert "hint" not in plan
+    assert plain is df
 
 
 def test_gated_broadcast_preference_tuple_falls_back_on_missing_table(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """r8 ADVICE: a preference tuple keys the gate on the first
     candidate whose parquet exists — the tight part-sized bound on
     full corpora, the derivation source on table-subset corpora."""
     import shutil
 
-    from census_postgres_py_spark import stats
-    from census_postgres_py_spark.tables import (
-        BROADCAST_DIM_CONF,
-        gated_broadcast,
-        t,
-    )
+    from census_postgres_py_spark import stats, tables
+    from census_postgres_py_spark.tables import gated_broadcast, t
 
     df = t(spark, SF_SMOKE, "part").select("p_partkey")
     n_part = stats.rows(SF_SMOKE, "part")
@@ -125,27 +107,18 @@ def test_gated_broadcast_preference_tuple_falls_back_on_missing_table(
     assert n_part < n_li
     # cap between |part| and |lineitem|: the part-keyed gate hints,
     # a lineitem-keyed gate would not — proving part was chosen
-    spark.conf.set(BROADCAST_DIM_CONF, str((n_part + n_li) // 2))
-    try:
-        hinted = gated_broadcast(
-            spark, SF_SMOKE, ("part", "lineitem"), df
-        )
-        assert (
-            "hint" in hinted._jdf.queryExecution().logical().toString().lower()
-        )
-        # subset corpus without part.parquet: falls back to lineitem,
-        # which is over the cap => no hint, and crucially NO crash
-        sub = tmp_path / "sf_subset"
-        sub.mkdir()
-        shutil.copy(
-            f"{SF_SMOKE}/lineitem.parquet", str(sub / "lineitem.parquet")
-        )
-        plain = gated_broadcast(
-            spark, str(sub), ("part", "lineitem"), df
-        )
-        assert plain is df
-    finally:
-        spark.conf.unset(BROADCAST_DIM_CONF)
+    monkeypatch.setattr(
+        tables, "_BROADCAST_DIM_MAX_ROWS", (n_part + n_li) // 2
+    )
+    hinted = gated_broadcast(spark, SF_SMOKE, ("part", "lineitem"), df)
+    assert "hint" in hinted._jdf.queryExecution().logical().toString().lower()
+    # subset corpus without part.parquet: falls back to lineitem,
+    # which is over the cap => no hint, and crucially NO crash
+    sub = tmp_path / "sf_subset"
+    sub.mkdir()
+    shutil.copy(f"{SF_SMOKE}/lineitem.parquet", str(sub / "lineitem.parquet"))
+    plain = gated_broadcast(spark, str(sub), ("part", "lineitem"), df)
+    assert plain is df
 
 
 def test_gated_broadcast_keys_on_a_table_the_op_reads():
