@@ -309,27 +309,9 @@ def main() -> int:
     sf = float(m.group(1).rstrip(".")) if m else None
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyspark.sql import SparkSession
+    from census_postgres_py_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("census-spark-bench")
-        # Heap must be set before the JVM launches. The default 1g is
-        # enough for most headline queries but not for the dense-graph
-        # ones (graph_triangle_count shuffles ~50M wedge rows at
-        # sf0.1) — and a single OOM kills the shared SparkContext and
-        # every query after it.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("census-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

@@ -1335,9 +1335,7 @@ def sink_csv_escaped(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiLine=true, and emits md5(payload) per doc — the oracle
     computes the same md5 from the definition, so one flipped or lost
     byte anywhere in the write/read pair fails the hash."""
-    import os
-
-    from census_postgres_py_spark.operators.scans import _scratch
+    from census_postgres_py_spark import scratch
 
     d = t(spark, sf_dir, "documents")
     payload = F.concat(
@@ -1348,7 +1346,7 @@ def sink_csv_escaped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source"),
     )
     out = d.select("doc_id", payload.alias("payload"))
-    path = _scratch(f"csv_escaped_{os.path.basename(sf_dir)}")
+    path = scratch.call_dir("csv_escaped")
     out.coalesce(4).write.mode("overwrite").option("header", True).csv(path)
     back = (
         spark.read.option("header", True)

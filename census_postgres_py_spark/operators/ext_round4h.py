@@ -12,12 +12,12 @@ Contract discipline identical to the other extension modules.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark import scratch
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import read_back, t
 
@@ -237,11 +237,7 @@ def sink_dynamic_partition_overwrite(
     Doubling is an exact float op (×2 is a power of two), so the
     corrected cents are engine-identical.
     """
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cppys_scratch",
-        f"dpo_events_{os.path.basename(sf_dir)}",
-    )
+    base = scratch.call_dir("dpo_events")
     ev = t(spark, sf_dir, "events").select("event_id", "event_type", "value")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(base)
     correction = ev.filter(F.col("event_type") == "purchase").withColumn(

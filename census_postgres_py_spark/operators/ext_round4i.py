@@ -226,14 +226,9 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     can state it by construction; row and key counts prove the
     round-trip lost nothing.
     """
-    import os
-    import tempfile
+    from census_postgres_py_spark import scratch
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "cppys_scratch",
-        f"meta_nation_{os.path.basename(sf_dir)}",
-    )
+    path = scratch.call_dir("meta_nation")
     nat = t(spark, sf_dir, "nation")
     nat.repartition(4).write.mode("overwrite").parquet(path)
     back = read_back(spark, nat.schema, path).select(

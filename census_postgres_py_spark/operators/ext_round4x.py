@@ -17,14 +17,11 @@ with the unpruned oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark import stats
-from census_postgres_py_spark.operators.scans import _scratch
+from census_postgres_py_spark import scratch, stats
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, read_back, t
 
@@ -427,14 +424,15 @@ def pipeline_manifest_prune_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job unless a writer left no statistics).
     n_keys = stats.key_range(spark, sf_dir, "orders", "o_orderkey")[1] + 1
     lo, hi = n_keys // 4, n_keys // 2 - 1
-    base = _scratch(f"orders_zoned_{os.path.basename(sf_dir)}")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        (
-            t(spark, sf_dir, "orders")
-            .repartitionByRange(8, "o_orderkey")
-            .write.mode("overwrite")
-            .parquet(base)
-        )
+    base = scratch.cached(
+        "orders_zoned",
+        sf_dir,
+        lambda d: t(spark, sf_dir, "orders")
+        .repartitionByRange(8, "o_orderkey")
+        .write.mode("overwrite")
+        .parquet(d),
+        "orders",
+    )
     files = stats.files(base)
     zoned_schema = t(spark, sf_dir, "orders").schema
     zones = stats.bounds(spark, files, "o_orderkey")

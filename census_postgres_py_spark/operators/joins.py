@@ -453,29 +453,23 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     executed plan carries ``dynamicpruningexpression(o_year IN
     dynamicpruning#...)`` in the fact's PartitionFilters —
     tests/test_plans.py pins exactly that. The partitioned copy is
-    written once per sf_dir (scratch marker), standing in for the
+    written once per fixture (``scratch.cached``), standing in for the
     already-partitioned fact a warehouse would own.
     """
-    import os
+    from census_postgres_py_spark import scratch
 
-    from census_postgres_py_spark.operators.scans import _scratch
-
-    fact_dir = _scratch(f"orders_dpp_{os.path.basename(sf_dir)}")
-    if not os.path.exists(os.path.join(fact_dir, "_SUCCESS")):
-        (
-            t(spark, sf_dir, "orders")
-            .withColumn("o_year", F.year("o_orderdate"))
-            .write.mode("overwrite")
-            .partitionBy("o_year")
-            .parquet(fact_dir)
-        )
-    fact = read_back(
-        spark,
-        t(spark, sf_dir, "orders")
-        .withColumn("o_year", F.year("o_orderdate"))
-        .schema,
-        fact_dir,
+    by_year = t(spark, sf_dir, "orders").withColumn(
+        "o_year", F.year("o_orderdate")
     )
+    fact_dir = scratch.cached(
+        "orders_dpp",
+        sf_dir,
+        lambda d: by_year.write.mode("overwrite")
+        .partitionBy("o_year")
+        .parquet(d),
+        "orders",
+    )
+    fact = read_back(spark, by_year.schema, fact_dir)
     years = spark.createDataFrame(
         [(y, f"y{y % 100}") for y in range(1995, 2002)],
         "dim_year int, label string",

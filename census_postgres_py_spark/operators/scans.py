@@ -10,12 +10,12 @@ the original table — lossless round-trip == hash match.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from census_postgres_py_spark import scratch
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.sources.csv_sequence import (
     read_sequence_csv,
@@ -28,12 +28,6 @@ from census_postgres_py_spark.sources.fixed_width import (
 )
 from census_postgres_py_spark.sources.metadata_schema import schema_from_metadata
 from census_postgres_py_spark.tables import read_back, t
-
-
-def _scratch(name: str) -> str:
-    base = os.path.join(tempfile.gettempdir(), "cppys_scratch")
-    os.makedirs(base, exist_ok=True)
-    return os.path.join(base, name)
 
 
 @register(
@@ -65,7 +59,7 @@ def scan_csv_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACS sequence-file-style scan: headerless CSV, explicit schema,
     '.' jam values as NULL. Round-trips `nation` through the format;
     hash-equality with the parquet original proves losslessness."""
-    path = _scratch("nation_seq_csv")
+    path = scratch.call_dir("nation_seq_csv")
     nation = t(spark, sf_dir, "nation")
     write_sequence_csv(nation, path)
     schema = T.StructType(
@@ -113,7 +107,7 @@ def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read, aggregate. Integer payloads keep the round-trip exact
     (float round-trip via JSON is exercised in tests, not the oracle).
     """
-    path = _scratch("events_jsonl")
+    path = scratch.call_dir("events_jsonl")
     ev = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -148,7 +142,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by order year — the (year, span, stusab) layout of
     SURVEY.md §1.2 that enables partition pruning at 100 TB — then
     re-read and aggregate per partition."""
-    path = _scratch("orders_by_year")
+    path = scratch.call_dir("orders_by_year")
     o = t(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("long")
     )
@@ -292,7 +286,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = target.join(
         updates.select("o_orderkey"), "o_orderkey", "left_anti"
     ).unionByName(updates)
-    path = _scratch("orders_merged")
+    path = scratch.call_dir("orders_merged")
     merged.write.mode("overwrite").parquet(path)
     back = read_back(spark, merged.schema, path)
     return back.groupBy("o_orderpriority").agg(
@@ -338,7 +332,7 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(*cols)
             .write.bucketBy(8, key)
             .sortBy(key)
-            .option("path", _scratch(tbl))
+            .option("path", scratch.call_dir(tbl))
             .mode("overwrite")
             .saveAsTable(tbl)
         )
@@ -376,10 +370,13 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC; hash-equality with the parquet original proves the format
     conversion is lossless, the same bar as scan_csv_schema.
     """
-    path = _scratch(f"customer_orc_{os.path.basename(sf_dir)}")
     cust = t(spark, sf_dir, "customer")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        cust.write.mode("overwrite").orc(path)
+    path = scratch.cached(
+        "customer_orc",
+        sf_dir,
+        lambda d: cust.write.mode("overwrite").orc(d),
+        "customer",
+    )
     return spark.read.orc(path).select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
@@ -407,18 +404,19 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema comes from the table catalog instead — but the scan itself
     stays one pass with pushdown intact.
     """
-    path = _scratch(f"orders_evo_{os.path.basename(sf_dir)}")
     o = t(spark, sf_dir, "orders")
-    if not os.path.exists(os.path.join(path, "_SUCCESS_V2")):
+
+    def _build(d: str) -> None:
         v1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
         )
-        v1.write.mode("overwrite").parquet(path)
+        v1.write.mode("overwrite").parquet(d)
         v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
-        v2.write.mode("append").parquet(path)
-        open(os.path.join(path, "_SUCCESS_V2"), "w").close()
+        v2.write.mode("append").parquet(d)
+
+    path = scratch.cached("orders_evo", sf_dir, _build, "orders")
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(path)
@@ -446,17 +444,20 @@ def sink_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     is lossless.
     """
     cols = ["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"]
-    frag = _scratch(f"li_frag_{os.path.basename(sf_dir)}")
     li = t(spark, sf_dir, "lineitem").select(*cols)
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-        li.repartition(64).write.mode("overwrite").parquet(frag)
+    frag = scratch.cached(
+        "li_frag",
+        sf_dir,
+        lambda d: li.repartition(64).write.mode("overwrite").parquet(d),
+        "lineitem",
+    )
     total = sum(
         os.path.getsize(os.path.join(frag, f))
         for f in os.listdir(frag)
         if f.endswith(".parquet")
     )
     n_out = max(1, total // (128 * 1024 * 1024))
-    compact = _scratch(f"li_compact_{os.path.basename(sf_dir)}")
+    compact = scratch.call_dir("li_compact")
     read_back(spark, li.schema, frag).repartition(int(n_out)).write.mode(
         "overwrite"
     ).parquet(compact)
@@ -480,21 +481,20 @@ def scan_csv_dropmalformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-equality with the clean source proves nothing valid was
     dropped and nothing invalid survived.
     """
-    path = _scratch(f"nation_dirty_csv_{os.path.basename(sf_dir)}")
-    marker = os.path.join(path, "_DONE")
     nation = t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def _build(d: str) -> None:
         rows = nation.collect()  # nation is 25 rows — driver-side render ok
-        with open(os.path.join(path, "part-dirty.csv"), "w") as f:
+        with open(os.path.join(d, "part-dirty.csv"), "w") as f:
             for i, r in enumerate(rows):
                 f.write(f"{r.n_nationkey},{r.n_name},{r.n_regionkey}\n")
                 if i % 7 == 0:  # interleave deterministic junk lines
                     f.write("GARBAGE LINE WITHOUT COMMAS\n")
                     f.write("not_a_number,Broken\n")
-        open(marker, "w").close()
+
+    path = scratch.cached("nation_dirty_csv", sf_dir, _build, "nation")
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.IntegerType()),
@@ -519,12 +519,17 @@ def scan_csv_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames) for the cluster to parallelize — the read itself is the
     easy part, the file layout is the scale decision.
     """
-    path = _scratch(f"nation_csv_gz_{os.path.basename(sf_dir)}")
     nation = t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        nation.write.mode("overwrite").option("compression", "gzip").csv(path)
+    path = scratch.cached(
+        "nation_csv_gz",
+        sf_dir,
+        lambda d: nation.write.mode("overwrite")
+        .option("compression", "gzip")
+        .csv(d),
+        "nation",
+    )
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.IntegerType()),
@@ -553,16 +558,17 @@ def sink_partitioned_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     different selective-read cost at 100 TB.
     """
     cols = ["l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"]
-    path = _scratch(f"li_sorted_{os.path.basename(sf_dir)}")
     li = t(spark, sf_dir, "lineitem").select(*cols)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            li.repartition("l_returnflag")
-            .sortWithinPartitions("l_orderkey")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag")
-            .parquet(path)
-        )
+    path = scratch.cached(
+        "li_sorted",
+        sf_dir,
+        lambda d: li.repartition("l_returnflag")
+        .sortWithinPartitions("l_orderkey")
+        .write.mode("overwrite")
+        .partitionBy("l_returnflag")
+        .parquet(d),
+        "lineitem",
+    )
     return read_back(spark, li.schema, path).select(*cols)
 
 
@@ -583,19 +589,18 @@ def scan_text_wholefile(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates, so the first job is usually exactly this scan feeding
     sink_compact_files.
     """
-    path = _scratch(f"docs_wholefile_{os.path.basename(sf_dir)}")
     docs = (
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 40)
         .select("doc_id", "text")
     )
-    marker = os.path.join(path, "_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def _build(d: str) -> None:
         for r in docs.collect():  # 40 files — driver-side write is the point
-            with open(os.path.join(path, f"doc_{r.doc_id:06d}.txt"), "w") as f:
+            with open(os.path.join(d, f"doc_{r.doc_id:06d}.txt"), "w") as f:
                 f.write(r.text)
-        open(marker, "w").close()
+
+    path = scratch.cached("docs_wholefile", sf_dir, _build, "documents")
     raw = spark.read.text(os.path.join(path, "doc_*.txt"), wholetext=True)
     return raw.select(
         F.regexp_extract(F.input_file_name(), r"doc_(\d+)\.txt", 1)
@@ -625,19 +630,18 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         InputPartition,
     )
 
-    path = _scratch(f"pyds_nation_{os.path.basename(sf_dir)}")
     nation = t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    marker = os.path.join(path, "_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def _build(d: str) -> None:
         rows = nation.collect()
         for shard in range(5):
-            with open(os.path.join(path, f"shard_{shard}.csv"), "w") as f:
+            with open(os.path.join(d, f"shard_{shard}.csv"), "w") as f:
                 for r in rows[shard::5]:
                     f.write(f"{r.n_nationkey},{r.n_name},{r.n_regionkey}\n")
-        open(marker, "w").close()
+
+    path = scratch.cached("pyds_nation", sf_dir, _build, "nation")
 
     class SeqCsvReader(DataSourceReader):
         def __init__(self, options: dict) -> None:
@@ -714,7 +718,7 @@ def scan_log_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long").cast("string"),
     )
-    path = _scratch("app_log_lines")
+    path = scratch.call_dir("app_log_lines")
     o.select(line.alias("value")).write.mode("overwrite").text(path)
     raw = spark.read.text(path)
     return raw.select(
@@ -753,14 +757,12 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan_text_wholefile apply — this scan feeds sink_compact_files."""
     from census_postgres_py_spark.operators.multimodal import _encode_img
 
-    path = _scratch(f"imgs_binary_{os.path.basename(sf_dir)}")
-    marker = os.path.join(path, "_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+    def _build(d: str) -> None:
         for doc_id in range(40):  # 40 files — driver write is the point
-            with open(os.path.join(path, f"img_{doc_id:06d}.simg"), "wb") as f:
+            with open(os.path.join(d, f"img_{doc_id:06d}.simg"), "wb") as f:
                 f.write(_encode_img(doc_id))
-        open(marker, "w").close()
+
+    path = scratch.cached("imgs_binary", sf_dir, _build, "documents")
     raw = spark.read.format("binaryFile").load(
         os.path.join(path, "img_*.simg")
     )
@@ -809,15 +811,13 @@ def scan_jsonl_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed values) so the oracle can verify the parser recovered
     every good line and quarantined every bad one.
     """
-    path = _scratch(f"orders_jsonl_perm_{os.path.basename(sf_dir)}")
-    marker = os.path.join(path, "_DONE")
     keys = (
         t(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 4000)
         .select("o_orderkey")
     )
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def _build(d: str) -> None:
         lines = keys.withColumn(
             "line",
             F.when(
@@ -835,8 +835,9 @@ def scan_jsonl_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         ).select("line")
-        lines.write.mode("overwrite").text(path)
-        open(marker, "w").close()
+        lines.write.mode("overwrite").text(d)
+
+    path = scratch.cached("orders_jsonl_perm", sf_dir, _build, "orders")
     schema = "k long, v long, _corrupt string"
     back = (
         spark.read.schema(schema)
@@ -876,12 +877,15 @@ def sink_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping index — join_partition_pruned demonstrates the read side
     consuming exactly these semantics via DPP.
     """
-    path = _scratch(f"orders_manifest_{os.path.basename(sf_dir)}")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        t(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-            "o_orderpriority"
-        ).parquet(path)
+    path = scratch.cached(
+        "orders_manifest",
+        sf_dir,
+        lambda d: t(spark, sf_dir, "orders")
+        .write.mode("overwrite")
+        .partitionBy("o_orderpriority")
+        .parquet(d),
+        "orders",
+    )
     back = read_back(spark, t(spark, sf_dir, "orders").schema, path)
     return back.groupBy("o_orderpriority").agg(
         F.count("*").cast("long").alias("n_rows"),

@@ -31,11 +31,11 @@ makes downstream geography-filtered scans prune at 100 TB.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark import scratch
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.sources.csv_sequence import (
     read_sequence_csv,
@@ -62,12 +62,6 @@ GEO_LAYOUT = [
 ]
 
 
-def _scratch(name: str) -> str:
-    base = os.path.join(tempfile.gettempdir(), "cppys_pipeline")
-    os.makedirs(base, exist_ok=True)
-    return os.path.join(base, name)
-
-
 def _stusab():
     # synthetic 2-char state code: 5 "states" spread over the nations
     # (fixture n_name values carry no geography, so key off nationkey;
@@ -80,10 +74,12 @@ def _round2(col):
     return F.floor(col * 100 + F.lit(0.5)) / 100
 
 
-def _synthesize_inputs(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    """Render ACS-shaped geoheader + e/m sequence files from the
-    fixture star schema. Deterministic; the oracle re-derives the same
-    quantities from the original tables."""
+def _synthesize_inputs(
+    spark: SparkSession, sf_dir: str, out: str
+) -> tuple[str, str, str]:
+    """Render ACS-shaped geoheader + e/m sequence files under ``out``
+    from the fixture star schema. Deterministic; the oracle re-derives
+    the same quantities from the original tables."""
     nation = t(spark, sf_dir, "nation")
     customer = t(spark, sf_dir, "customer")
 
@@ -114,7 +110,7 @@ def _synthesize_inputs(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]
         ).alias("geoid"),
         F.col("n_name").alias("name"),
     )
-    geo_path = _scratch(f"geo_{os.path.basename(sf_dir)}")
+    geo_path = os.path.join(out, "geo")
 
     def seq_rows(filetype: str, margin: bool) -> DataFrame:
         c1 = F.col("pop")
@@ -136,8 +132,8 @@ def _synthesize_inputs(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]
             c2.alias(f"{TABLE_ID}002"),
         )
 
-    e_path = _scratch(f"e_{os.path.basename(sf_dir)}")
-    m_path = _scratch(f"m_{os.path.basename(sf_dir)}")
+    e_path = os.path.join(out, "e")
+    m_path = os.path.join(out, "m")
     # r13: the three scratch writes are independent once per_nation is
     # checkpointed, so submit them from a small thread pool (guide
     # §2.6 — actions are only sequential because driver code calls
@@ -185,7 +181,8 @@ def pipeline_acs_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full reference lifecycle in one composed dataflow; returns
     the derived census table (geoid-keyed, coded estimate + margin
     columns) re-read from its partitioned parquet sink."""
-    geo_path, e_path, m_path = _synthesize_inputs(spark, sf_dir)
+    out = scratch.call_dir("acs_pipeline")
+    geo_path, e_path, m_path = _synthesize_inputs(spark, sf_dir, out)
 
     # metadata -> schema; schema -> jam-value-aware CSV scans
     schema = sequence_table_schema(TABLE_ID, N_CELLS)
@@ -210,7 +207,7 @@ def pipeline_acs_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("geoid", "name", "stusab", *cells, *[f"{c}_m" for c in cells])
     )
 
-    sink = _scratch(f"sink_{os.path.basename(sf_dir)}")
+    sink = os.path.join(out, "sink")
     derived.write.mode("overwrite").partitionBy("stusab").parquet(sink)
     return read_back(spark, derived.schema, sink).select(
         "geoid", "name", "stusab", *cells, *[f"{c}_m" for c in cells]

@@ -1,10 +1,15 @@
 """SparkSession factory tuned for this engine.
 
 Local-mode defaults mirror what we would set fleet-wide on a real
-cluster: AQE on (runtime re-planning, skew-join splitting, partition
-coalescing), shuffle partitions sized to cores rather than the 200
+cluster: shuffle partitions sized to cores rather than the 200
 default, UTC session timezone (required for DuckDB-oracle timestamp
-parity), and Arrow enabled so any Pandas-UDF path is vectorized.
+parity), and Arrow enabled so any Pandas-UDF path is vectorized. AQE,
+with skew-join splitting and partition coalescing, is Spark's default
+and is left to it.
+
+The driver heap is fixed when the JVM launches: ``SPARK_DRIVER_MEM``
+(default 8g, enough for the dense-graph queries at sf0.1, which OOM at
+Spark's 1g default).
 """
 
 from __future__ import annotations
@@ -23,12 +28,9 @@ def get_spark(app_name: str = "census_postgres_py_spark") -> SparkSession:
         # ~cores, not 200: at local scale 200 partitions is pure overhead;
         # on a real cluster this is set to 2-3x total cores.
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

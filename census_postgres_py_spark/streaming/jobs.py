@@ -4,10 +4,12 @@ Each query here REALLY runs a Structured Streaming job: a file-source
 stream over the fixture parquet, micro-batches driven synchronously to
 completion (`processAllAvailable`), results landed in a memory sink or
 via `foreachBatch`. Event streams read the fixture in place
-(`tables.t(..., stream=True)`); only re-laid-out feeds go through
-`_cached_feed`. Because Spark's windowed aggregations are identical
-expressions on batch and stream, the stream results are still
-oracle-checkable against plain SQL — the strongest batch==stream
+(`tables.t(..., stream=True)`); feeds laid out unlike the fixture are
+materialized once per fixture fingerprint (`scratch.cached`), and what
+a call writes (foreachBatch sinks, landing dirs, checkpoints) goes to
+its own `scratch.call_dir`. Because Spark's windowed aggregations are
+identical expressions on batch and stream, the stream results are
+still oracle-checkable against plain SQL — the strongest batch==stream
 equivalence check available (SURVEY.md §5.2 item 5).
 
 Scale notes: on a real cluster the file source becomes Kafka, the
@@ -19,132 +21,17 @@ unchanged.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark import stats
+from census_postgres_py_spark import scratch
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import read_back, t
 
 HOUR_MS = 3_600_000
-
-
-def _scratch(name: str, ephemeral: bool = False) -> str:
-    """Scratch dir under tempdir/cppys_stream.
-
-    ``ephemeral=True`` is for uuid-suffixed per-CALL dirs (foreachBatch
-    outputs, checkpoints): they're atexit-rmtree'd so repeated bench
-    runs don't accumulate scratch. Cleanup can't happen eagerly at the
-    end of the operator — the returned DataFrame reads the memory sink
-    / state-store checkpoint LAZILY, after the operator returns.
-    Materialize-once stream FEEDS go through ``_cached_feed`` instead
-    (fingerprint-validated, atomically swapped)."""
-    base = os.path.join(tempfile.gettempdir(), "cppys_stream", name)
-    os.makedirs(base, exist_ok=True)
-    if ephemeral:
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return base
-
-
-def _fixture_fingerprint(sf_dir: str, table: str = "events") -> str:
-    """Identity of a feed's source fixture: the absolute
-    ``<sf_dir>/<table>.parquet`` path plus its :func:`stats.fingerprint`
-    (mtime + size, per file for a directory table). Regenerating the
-    fixture in place, or a different sf_dir that happens to share a
-    basename, changes the fingerprint and invalidates the cached feed
-    instead of silently replaying a stale one that diverges from the
-    batch oracle."""
-    import hashlib
-
-    path = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    ident = repr((path, stats.fingerprint(path)))
-    return hashlib.sha256(ident.encode()).hexdigest()[:32]
-
-
-def _cached_feed(name: str, sf_dir: str, build, table: str = "events") -> str:
-    """Materialize-once feed directory, fingerprint-validated and
-    atomically swapped into place, for feeds laid out unlike the
-    fixture (dedup's two copies, custom_state's parts, sessionize's
-    time shards, the python-datasource shards). ``build(tmp_dir)``
-    writes the feed into ``tmp_dir`` (created empty); the helper stamps
-    the source fixture's fingerprint into ``_FEED_READY`` (underscore-
-    prefixed => invisible to Spark readers) and ``os.rename``s the
-    finished dir into place. Two failure modes this closes:
-
-    - STALENESS: the marker stores ``_fixture_fingerprint`` (abs
-      path + ``stats.fingerprint`` of the fixture), so a regenerated
-      fixture or a basename-colliding sf_dir rebuilds instead of
-      replaying a wrong feed forever.
-    - CROSS-PROCESS RACE: the feed is built in a uuid'd sibling and
-      renamed into place (atomic within one filesystem), so concurrent
-      processes (pytest + the driver) can never interleave partial
-      writes behind the marker. The loser of the swap race re-reads the
-      winner's ``_FEED_READY`` before adopting it: two processes with
-      DIFFERENT sf_dirs sharing a basename produce the same feed name
-      with different fingerprints, so a blind adopt would hand back the
-      wrong feed — on mismatch the loser retries the build/swap loop
-      (r8 ADVICE).
-
-    Feed dirs stay persistent within tempdir lifetime by design: they
-    are the materialize-once stream sources (checkpoints, by contrast,
-    must stay uuid-per-run — a reused file-source checkpoint marks the
-    feed consumed and replays NOTHING)."""
-    import shutil
-
-    base = os.path.join(tempfile.gettempdir(), "cppys_stream")
-    os.makedirs(base, exist_ok=True)
-    fp = _fixture_fingerprint(sf_dir, table)
-    final = os.path.join(base, name)
-    marker = os.path.join(final, "_FEED_READY")
-
-    def _marker_matches() -> bool:
-        try:
-            with open(marker) as fh:
-                return fh.read().strip() == fp
-        except OSError:
-            return False
-
-    # Bounded retry: each pass either adopts a fingerprint-matching
-    # feed or swaps its own build into place; a loop only happens when
-    # a basename-colliding builder with a DIFFERENT sf_dir keeps
-    # winning swaps, which self-resolves as soon as one side's rename
-    # sticks (last rename wins; both sides verify before adopting).
-    for _attempt in range(5):
-        if _marker_matches():
-            return final
-        tmp = os.path.join(base, f"_{name}.build-{uuid.uuid4().hex[:8]}")
-        os.makedirs(tmp, exist_ok=True)
-        build(tmp)
-        with open(os.path.join(tmp, "_FEED_READY"), "w") as fh:
-            fh.write(fp)
-        stale = os.path.join(base, f"_{name}.stale-{uuid.uuid4().hex[:8]}")
-        try:
-            if os.path.exists(final):
-                os.rename(final, stale)
-            os.rename(tmp, final)
-            shutil.rmtree(stale, ignore_errors=True)
-            return final
-        except OSError:
-            # Lost the swap race to a concurrent builder. Only adopt
-            # the winner's feed if it carries OUR fingerprint — a
-            # different-sf_dir basename collision does not (r8 ADVICE:
-            # the loser must verify, not assume).
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(stale, ignore_errors=True)
-            if _marker_matches():
-                return final
-    raise RuntimeError(
-        f"feed {name!r}: lost the swap race 5 times to builders with a "
-        f"different fixture fingerprint — basename-colliding sf_dirs "
-        f"are thrashing {final}"
-    )
 
 
 #: State-store partition count for the stateful streaming ops
@@ -266,16 +153,14 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "user_id", "ts"
     )
 
-    # materialize-once (_cached_feed): the two-copy redelivery feed is
-    # call-invariant; _run_to_memory uses a fresh implicit checkpoint
+    # materialize-once (scratch.cached): the two-copy redelivery feed
+    # is call-invariant; _run_to_memory uses a fresh implicit checkpoint
     # per run, so a cached feed replays fully
     def _build(d: str) -> None:
         ev.coalesce(1).write.mode("overwrite").parquet(d)
         ev.coalesce(1).write.mode("append").parquet(d)
 
-    src_dir = _cached_feed(
-        f"dedup_src_{os.path.basename(sf_dir)}", sf_dir, _build
-    )
+    src_dir = scratch.cached("dedup_src", sf_dir, _build, "events")
 
     stream = (
         spark.readStream.schema(ev.schema)
@@ -310,10 +195,7 @@ def stream_foreachbatch_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation re-aggregates across batch outputs, so the oracle total
     is exact regardless of how many micro-batches ran.
     """
-    out_dir = _scratch(
-        f"feb_out_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:8]}",
-        ephemeral=True,
-    )
+    out_dir = scratch.call_dir("feb_out")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         (
@@ -375,12 +257,13 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = t(spark, sf_dir, "events").select("user_id", "value")
     # several part files => several micro-batches => real state reuse;
-    # materialize-once (_cached_feed): the memory-sink run uses a
+    # materialize-once (scratch.cached): the memory-sink run uses a
     # fresh implicit checkpoint per run, so a cached feed replays fully
-    src_dir = _cached_feed(
-        f"custom_state_src_{os.path.basename(sf_dir)}",
+    src_dir = scratch.cached(
+        "custom_state_src",
         sf_dir,
         lambda d: ev.repartition(4).write.mode("overwrite").parquet(d),
+        "events",
     )
 
     def update(key, pdfs, state: GroupState):
@@ -547,10 +430,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     at most one null row per view. Unmatched exploded clicks are the
     right side of a left join and emit nothing.
     """
-    src_dir = _scratch(
-        f"ssl_src_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:8]}",
-        ephemeral=True,
-    )
+    src_dir = scratch.call_dir("ssl_src")
     ev = t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
@@ -679,14 +559,12 @@ def stream_incremental_availablenow(
     therefore equals the plain batch filter over ALL events (the
     oracle): incremental processing changed the cost, not the answer.
     On a cluster this exact job shape (AvailableNow + checkpoint +
-    append sink) is the idempotent nightly refresh; re-running it with
-    nothing new to consume is a no-op, which re-invocations of this
-    operator also exercise.
+    append sink) is the idempotent nightly refresh. Each call lands,
+    checkpoints and sinks in its own ``scratch.call_dir``, so every
+    call runs both triggers.
     """
-    base = os.path.basename(sf_dir)
-    src = _scratch(f"incr_src_{base}")
-    ckpt = _scratch(f"incr_ckpt_{base}")
-    out = _scratch(f"incr_out_{base}")
+    d = scratch.call_dir("incr")
+    src, ckpt, out = (os.path.join(d, p) for p in ("src", "ckpt", "out"))
     ev = t(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -707,19 +585,9 @@ def stream_incremental_availablenow(
         )
         q.awaitTermination()
 
-    phase1 = os.path.join(src, "_PHASE1")
-    phase2 = os.path.join(src, "_PHASE2")
-    if not os.path.exists(phase1):
-        ev.filter(F.col("event_id") % 2 == 0).write.mode(
-            "overwrite"
-        ).parquet(src)
-        open(phase1, "w").close()
+    ev.filter(F.col("event_id") % 2 == 0).write.parquet(src)
     run_once()
-    if not os.path.exists(phase2):
-        ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(
-            src
-        )
-        open(phase2, "w").close()
+    ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
     run_once()
     return read_back(spark, ev.schema, out)
 
@@ -765,10 +633,7 @@ def pipeline_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         ["event_type", "weight"],
     )
-    out_dir = _scratch(
-        f"pse2e_out_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:8]}",
-        ephemeral=True,
-    )
+    out_dir = scratch.call_dir("pse2e_out")
 
     ev = t(spark, sf_dir, "events", stream=True).withWatermark("ts", "1 hour")
     enriched = ev.join(F.broadcast(dim), "event_type")
@@ -850,12 +715,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in rows[shard::5]:
                     f.write(f"{r.n_nationkey},{r.n_name},{r.n_regionkey}\n")
 
-    path = _cached_feed(
-        f"pyds_stream_nation_{os.path.basename(sf_dir)}",
-        sf_dir,
-        _build,
-        table="nation",
-    )
+    path = scratch.cached("pyds_stream_nation", sf_dir, _build, "nation")
 
     class ShardStreamReader(SimpleDataSourceStreamReader):
         def __init__(self, options: dict) -> None:
@@ -997,15 +857,15 @@ def stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time as _time
 
-    # Feed DATA is cached per sf_dir (_cached_feed: time shards are a
+    # Feed DATA is cached per fixture (scratch.cached: time shards are a
     # layout the fixture lacks, so it cannot stream in place): contents
     # and forced chronological mtimes are call-invariant, so rebuilding
     # them per call was pure write churn (wall time is dominated by the
     # micro-batches + statestore, measured unchanged at ~5.5s warm —
     # this is a scratch-IO/hygiene win, not a latency one). The
     # CHECKPOINT cannot be cached — a reused file-source checkpoint
-    # marks the feed consumed and the rerun would emit nothing — so it
-    # stays uuid-fresh per run.
+    # marks the feed consumed and the rerun would emit nothing — so each
+    # call gets its own (scratch.call_dir).
     ev = t(spark, sf_dir, "events").select(
         "user_id",
         "ts",
@@ -1028,16 +888,13 @@ def stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (base_mtime + 10 * i, base_mtime + 10 * i),
             )
 
-    src_dir = _cached_feed(
-        f"sessionize_state_src_{os.path.basename(sf_dir)}"
-        f"_s{_SESSIONIZE_FEED_SHARDS}",
+    src_dir = scratch.cached(
+        f"sessionize_state_src_s{_SESSIONIZE_FEED_SHARDS}",
         sf_dir,
         _build,
+        "events",
     )
-    ckpt = _scratch(
-        f"sessionize_ckpt_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:8]}",
-        ephemeral=True,
-    )
+    ckpt = scratch.call_dir("sessionize_ckpt")
     return _sessionize_run_stateful(spark, src_dir, ev.schema, ckpt=ckpt)
 
 

@@ -102,24 +102,69 @@ def test_keep_best_survivors_dominate_their_group(spark, queries):
     assert joined.filter("l_quantity != want").count() == 0
 
 
-def test_compaction_reduces_file_count_losslessly(spark, queries):
+def test_compaction_reduces_file_count_losslessly(
+    spark, queries, monkeypatch, tmp_path
+):
     import os
     import tempfile
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     queries["sink_compact_files"](spark, SF_SMOKE).count()
-    scratch = os.path.join(tempfile.gettempdir(), "cppys_scratch")
-    frag = os.path.join(scratch, "li_frag_sf0.001")
-    compact = os.path.join(scratch, "li_compact_sf0.001")
+    [frag] = tmp_path.glob("cppys_cache/li_frag-*")
+    [compact] = tmp_path.glob("cppys_call/li_compact-*")
     n = lambda d: sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
     assert n(frag) == 64
     assert n(compact) < 8  # 6k rows is well under one 128 MB target file
 
 
-def test_incremental_availablenow_is_idempotent(spark, queries):
-    a = queries["stream_incremental_availablenow"](spark, SF_SMOKE).count()
-    # re-running with nothing new to consume must be a no-op
-    b = queries["stream_incremental_availablenow"](spark, SF_SMOKE).count()
-    assert a == b
+def test_incremental_availablenow_second_trigger_reads_only_odd_half(
+    spark, queries, monkeypatch, tmp_path
+):
+    """One call triggers twice on one checkpoint: the first run reads
+    the even-key half it landed, and the second reads only the odd-key
+    half landed after it — the checkpoint skips what run 1 consumed."""
+    import tempfile
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from census_postgres_py_spark.tables import t
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows_read: dict[str, int] = {}  # run id -> input rows, in run order
+    ended: set[str] = set()
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if str(tmp_path) in p.sources[0].description:
+                run = str(p.runId)
+                rows_read[run] = rows_read.get(run, 0) + p.numInputRows
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            ended.add(str(event.runId))
+
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        out = queries["stream_incremental_availablenow"](spark, SF_SMOKE)
+        deadline = time.monotonic() + 60
+        while time.monotonic() < deadline and not (
+            len(rows_read) == 2 and set(rows_read) <= ended
+        ):
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    ev = t(spark, SF_SMOKE, "events")
+    halves = [ev.filter(F.col("event_id") % 2 == k).count() for k in (0, 1)]
+    assert list(rows_read.values()) == halves
+    assert out.count() == ev.filter(F.col("value") > 250.0).count()
 
 
 def test_merge_schema_null_pads_old_files(spark, queries):
@@ -182,7 +227,9 @@ def test_dedup_e2e_partitions_the_corpus(spark, queries):
     assert all(r["survivor_id"] < 1_000_000 for r in multi)
 
 
-def test_sorted_sink_rowgroup_stats_are_disjoint(spark, queries):
+def test_sorted_sink_rowgroup_stats_are_disjoint(
+    spark, queries, monkeypatch, tmp_path
+):
     """The mechanism row-group skipping needs: within each written
     file, consecutive row groups carry non-overlapping l_orderkey
     min/max ranges (sortWithinPartitions made them disjoint)."""
@@ -192,9 +239,13 @@ def test_sorted_sink_rowgroup_stats_are_disjoint(spark, queries):
 
     import pyarrow.parquet as pq
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     queries["sink_partitioned_sorted"](spark, SF_SMOKE).count()
-    base = os.path.join(tempfile.gettempdir(), "cppys_scratch", "li_sorted_sf0.001")
-    files = glob.glob(os.path.join(base, "l_returnflag=*", "*.parquet"))
+    files = glob.glob(
+        os.path.join(
+            tmp_path, "cppys_cache", "li_sorted-*", "l_returnflag=*", "*.parquet"
+        )
+    )
     assert files
     checked = 0
     for f in files:

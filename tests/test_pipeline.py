@@ -24,12 +24,13 @@ def test_pipeline_shape_and_keys(spark, queries):
     assert any(r["b01001002_m"] is not None for r in rows)
 
 
-def test_pipeline_sink_is_partitioned_by_state(spark, queries):
+def test_pipeline_sink_is_partitioned_by_state(
+    spark, queries, monkeypatch, tmp_path
+):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     queries["pipeline_acs_e2e"](spark, SF_SMOKE)
-    sink = os.path.join(
-        tempfile.gettempdir(),
-        "cppys_pipeline",
-        f"sink_{os.path.basename(SF_SMOKE)}",
+    [sink] = glob.glob(
+        os.path.join(tmp_path, "cppys_call", "acs_pipeline-*", "sink")
     )
     parts = glob.glob(os.path.join(sink, "stusab=*"))
     assert len(parts) > 1, "sink not partitioned by stusab"

@@ -55,14 +55,16 @@ def test_no_all_pairs_join_in_candidate_paths(spark, queries, qid):
     assert "BroadcastNestedLoopJoin" not in plan, qid
 
 
-def test_partition_pruning_on_partitioned_sink(spark, queries):
+def test_partition_pruning_on_partitioned_sink(
+    spark, queries, monkeypatch, tmp_path
+):
     """A year-filtered read of the partitioned sink must prune at the
     partition level (PartitionFilters), not scan-and-filter."""
-    import os
     import tempfile
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     queries["sink_parquet"](spark, SF_SMOKE).collect()  # materialize sink
-    path = os.path.join(tempfile.gettempdir(), "cppys_scratch", "orders_by_year")
+    [path] = map(str, tmp_path.glob("cppys_call/orders_by_year-*"))
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(path).filter(F.col("o_year") == 1995)

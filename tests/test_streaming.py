@@ -7,10 +7,12 @@ output mode)."""
 
 from __future__ import annotations
 
-import shutil
+import os
 import tempfile
 
-from tests.conftest import SF_SMOKE
+import pytest
+
+from tests.conftest import SF_SMOKE, SF_T2
 
 
 def _rowset(df):
@@ -253,140 +255,178 @@ def test_sessionize_state_late_events(spark, tmp_path):
     }, got
 
 
-def test_cached_feed_ops_are_repeat_call_stable(spark, queries):
-    """The marker-cached streaming feeds (sessionize / dedup_state /
-    custom_state) must return IDENTICAL results on a second call in the
-    same session. This pins the checkpoint-per-run invariant: the feed
-    data may be cached, but a reused file-source CHECKPOINT would mark
-    every feed file consumed and the second run would silently emit
-    nothing — exactly the regression this test exists to catch."""
-    for qid in (
+@pytest.fixture(scope="module")
+def scratch_ids(spark, queries, tmp_path_factory):
+    """Every registered id whose call leaves files under a fresh
+    ``tempfile.tempdir`` — found by calling each one, not listed, so a
+    writer added later is covered without editing the tests."""
+    root = tmp_path_factory.mktemp("scratch_ids")
+    found = []
+    with pytest.MonkeyPatch.context() as mp:
+        for qid in sorted(queries):
+            d = root / qid
+            d.mkdir()
+            mp.setattr(tempfile, "tempdir", str(d))
+            queries[qid](spark, SF_SMOKE)
+            if any(d.iterdir()):
+                found.append(qid)
+    assert {
+        "sink_parquet",
+        "scan_orc",
+        "pipeline_acs_e2e",
         "stream_sessionize_state",
-        "stream_dedup_state",
-        "stream_custom_state",
-    ):
-        from tests.conftest import SF_SMOKE
+    } <= set(found), found
+    return found
 
-        first = sorted(map(tuple, queries[qid](spark, SF_SMOKE).collect()))
-        second = sorted(map(tuple, queries[qid](spark, SF_SMOKE).collect()))
+
+def _sorted_rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_cached_feed_ops_are_repeat_call_stable(spark, queries, scratch_ids):
+    """Every op that writes scratch returns the same rows when called
+    twice, and a result held from the first call still reads after the
+    second call. Per-call outputs go to a new directory each call, so
+    the second call cannot overwrite what the held result reads; the
+    cached stream feeds replay fully because each run still starts
+    from a fresh checkpoint."""
+    for qid in scratch_ids:
+        held = queries[qid](spark, SF_SMOKE)
+        again = queries[qid](spark, SF_SMOKE)
+        first, second = _sorted_rows(held), _sorted_rows(again)
         assert first and first == second, qid
+
+
+def test_cached_inputs_follow_the_fixture_not_its_basename(
+    spark, queries, scratch_ids, tmp_path, monkeypatch
+):
+    """A directory named like SF_T2 but holding SF_SMOKE's tables
+    answers as SF_SMOKE after a call on the real SF_T2 has filled the
+    scratch: a cached input is found by its fixture's fingerprint, never
+    by the basename of ``sf_dir``. Each id is compared with a call on
+    that directory under an empty tempdir. Every scratch id runs, not
+    only those with a cached input, so the test needs no knowledge of
+    which policy a site uses; per-call ids pass by construction."""
+    fake = tmp_path / "fixture" / os.path.basename(SF_T2)
+    fake.mkdir(parents=True)
+    for entry in os.listdir(SF_SMOKE):
+        (fake / entry).symlink_to(os.path.join(SF_SMOKE, entry))
+    for qid in scratch_ids:
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / f"alone_{qid}"))
+        os.mkdir(tempfile.tempdir)
+        alone = _sorted_rows(queries[qid](spark, str(fake)))
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / f"after_{qid}"))
+        os.mkdir(tempfile.tempdir)
+        queries[qid](spark, SF_T2)
+        assert _sorted_rows(queries[qid](spark, str(fake))) == alone, qid
 
 
 def test_event_streams_read_the_fixture_in_place(
     spark, queries, monkeypatch, tmp_path
 ):
-    """The plain events streams read the fixture file itself: no
-    ``events_src_*`` copy is written under a fresh tempdir, and a second
-    call in the same session returns the same non-empty rows — with the
-    fixture as the source, only the fresh checkpoint per call makes the
-    rerun replay the whole file."""
+    """The plain events streams read the fixture file itself: nothing
+    is written under a fresh tempdir, and a second call in the same
+    session returns the same non-empty rows — with the fixture as the
+    source, only the fresh checkpoint per call makes the rerun replay
+    the whole file."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     for qid in ("stream_windowed_topk", "stream_watermark"):
         first = sorted(map(tuple, queries[qid](spark, SF_SMOKE).collect()))
         second = sorted(map(tuple, queries[qid](spark, SF_SMOKE).collect()))
         assert first and first == second, qid
-    assert not list(tmp_path.glob("cppys_stream/events_src_*"))
+    assert not list(tmp_path.iterdir())
 
 
-def test_cached_feed_validates_fingerprint_and_swaps_atomically(tmp_path):
-    """ADVICE r7 (streaming/jobs.py:146): the materialize-once feeds
-    must (a) cache-hit on an unchanged fixture, (b) REBUILD when the
-    fixture is regenerated in place or the marker is stale — not
-    silently replay a wrong feed forever — and (c) never expose a
-    half-built dir (the marker is only ever inside a fully-built dir
-    that was os.rename'd into place)."""
-    import os
+def _fake_fixture(root, name="sf_fake"):
+    sf = root / name
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"v1")
+    return str(sf)
 
-    from census_postgres_py_spark.streaming import jobs
 
-    builds = []
-
+def _recording_build(builds):
     def build(d):
         builds.append(d)
         with open(os.path.join(d, "data.csv"), "w") as f:
             f.write("1\n")
 
-    name = "test_feed_fingerprint"
-    d1 = jobs._cached_feed(name, SF_SMOKE, build)
+    return build
+
+
+def test_cached_feed_validates_fingerprint_and_swaps_atomically(
+    monkeypatch, tmp_path
+):
+    """``scratch.cached`` names its directory by the fixture's
+    fingerprint: an unchanged fixture is a cache hit, a fixture touched
+    in place gets a new directory (the old one stays for results that
+    still read it), and the build runs in a sibling directory that is
+    renamed into place, so no reader sees a half-built input."""
+    from census_postgres_py_spark import scratch
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = _fake_fixture(tmp_path)
+    builds = []
+    build = _recording_build(builds)
+
+    d1 = scratch.cached("feed", sf, build, "events")
     assert len(builds) == 1
-    # the build ran in a sibling tmp dir, then got renamed into place
-    assert builds[0] != d1
-    fp = jobs._fixture_fingerprint(SF_SMOKE)
-    with open(os.path.join(d1, "_FEED_READY")) as f:
-        assert f.read().strip() == fp
+    assert os.path.basename(d1) == f"feed-{scratch.fingerprint(sf, 'events')}"
+    assert os.path.dirname(builds[0]) == os.path.dirname(d1)
+    assert builds[0] != d1 and not os.path.exists(builds[0])
+    assert os.path.exists(os.path.join(d1, "data.csv"))
 
     # unchanged fixture => cache hit, no rebuild
-    d2 = jobs._cached_feed(name, SF_SMOKE, build)
-    assert d2 == d1 and len(builds) == 1
+    assert scratch.cached("feed", sf, build, "events") == d1
+    assert len(builds) == 1
 
-    # stale marker (fixture regenerated in place / basename collision
-    # with a different sf_dir) => rebuild, marker restored
-    with open(os.path.join(d1, "_FEED_READY"), "w") as f:
-        f.write("stale-fingerprint")
-    d3 = jobs._cached_feed(name, SF_SMOKE, build)
-    assert len(builds) == 2 and d3 == d1
-    with open(os.path.join(d3, "_FEED_READY")) as f:
-        assert f.read().strip() == fp
-    assert os.path.exists(os.path.join(d3, "data.csv"))
+    # fixture rewritten in place => new directory, old one untouched
+    st = os.stat(os.path.join(sf, "events.parquet"))
+    os.utime(
+        os.path.join(sf, "events.parquet"),
+        ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000),
+    )
+    d2 = scratch.cached("feed", sf, build, "events")
+    assert d2 != d1 and len(builds) == 2
+    assert os.path.exists(os.path.join(d1, "data.csv"))
+    assert os.path.exists(os.path.join(d2, "data.csv"))
 
-    # a different sf_dir yields a different fingerprint by path alone
-    alt = tmp_path / "sfalt"
-    alt.mkdir()
-    assert jobs._fixture_fingerprint(str(alt)) != fp
-
-    import shutil
-
-    shutil.rmtree(d1, ignore_errors=True)
+    # same basename, different directory => different fingerprint
+    (tmp_path / "elsewhere").mkdir()
+    other = _fake_fixture(tmp_path / "elsewhere")
+    assert scratch.fingerprint(other, "events") != scratch.fingerprint(
+        sf, "events"
+    )
 
 
-def test_cached_feed_race_loser_verifies_winner_fingerprint(monkeypatch, tmp_path):
-    """ADVICE r8 (streaming/jobs.py): when the swap rename fails (lost
-    a cross-process race), the loser must NOT blindly adopt the
-    winner's dir — a basename-colliding builder with a DIFFERENT
-    sf_dir leaves a feed with a different fingerprint. The loser must
-    re-verify the final marker and retry the build/swap until its own
-    fingerprint is in place."""
-    import os
+def test_cached_feed_race_loser_verifies_winner_fingerprint(
+    monkeypatch, tmp_path
+):
+    """A builder whose rename loses to a concurrent builder adopts the
+    winner's directory without building again: the directory it lost
+    to carries its own fixture fingerprint in its name, so it holds the
+    same input."""
+    from census_postgres_py_spark import scratch
 
-    from census_postgres_py_spark.streaming import jobs
-
-    name = "test_feed_racecheck"
-    base = os.path.join(tempfile.gettempdir(), "cppys_stream")
-    os.makedirs(base, exist_ok=True)
-    final = os.path.join(base, name)
-    shutil.rmtree(final, ignore_errors=True)
-    fp = jobs._fixture_fingerprint(SF_SMOKE)
-
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = _fake_fixture(tmp_path)
+    final = os.path.join(
+        tmp_path, "cppys_cache", f"feed-{scratch.fingerprint(sf, 'events')}"
+    )
     builds = []
 
     def build(d):
         builds.append(d)
-        with open(os.path.join(d, "data.csv"), "w") as f:
-            f.write("1\n")
+        # the concurrent winner renames its build into place first
+        os.makedirs(final)
+        with open(os.path.join(final, "data.csv"), "w") as f:
+            f.write("winner\n")
 
-    real_rename = os.rename
-    fail_next = {"n": 1}
-
-    def racy_rename(src, dst):
-        # Simulate losing the swap: the first tmp->final rename raises,
-        # and the "winner" (a different-sf_dir builder) has already
-        # installed a feed with a FOREIGN fingerprint.
-        if dst == final and fail_next["n"] > 0:
-            fail_next["n"] -= 1
-            os.makedirs(final, exist_ok=True)
-            with open(os.path.join(final, "_FEED_READY"), "w") as f:
-                f.write("foreign-fingerprint")
-            raise OSError("simulated lost swap race")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", racy_rename)
-    d = jobs._cached_feed(name, SF_SMOKE, build)
-    # the loser retried (2 builds) instead of adopting the foreign feed
-    assert len(builds) == 2 and d == final
-    with open(os.path.join(d, "_FEED_READY")) as f:
-        assert f.read().strip() == fp
-    assert os.path.exists(os.path.join(d, "data.csv"))
-    shutil.rmtree(final, ignore_errors=True)
+    assert scratch.cached("feed", sf, build, "events") == final
+    assert len(builds) == 1 and not os.path.exists(builds[0])
+    with open(os.path.join(final, "data.csv")) as f:
+        assert f.read() == "winner\n"
+    assert scratch.cached("feed", sf, build, "events") == final
+    assert len(builds) == 1
 
 
 #: Every registered op that drives a stream into a memory sink.

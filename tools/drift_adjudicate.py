@@ -140,30 +140,12 @@ def main() -> int:
         return 0
 
     print(f"warm re-timing {len(outliers)} outlier(s): {outliers}")
-    from pyspark.sql import SparkSession
-
     from census_postgres_py_spark import registry
+    from census_postgres_py_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # EXACTLY bench.py's session config — the first cut of this tool
-    # omitted spark.driver.memory (default 1g) and GC thrash produced
-    # sustained 5x false "regressions" on shuffle-heavy queries
-    # (dedup_minhash 13.8 s vs its true 2.3 s warm minimum). Anchors
-    # are only comparable under the anchor's own session.
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .appName("drift-adjudicate")
-        .getOrCreate()
-    )
+    # bench.py's own session: anchors are only comparable under it (a
+    # 1g driver heap once read 5x false "regressions" from GC thrash).
+    spark = get_spark("drift-adjudicate")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.all_queries()
     regressions: list[tuple[str, float, float]] = []

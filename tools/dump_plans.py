@@ -25,20 +25,9 @@ def main() -> int:
     ap.add_argument("ids", nargs="+")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from census_postgres_py_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("census-spark-dump-plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("census-spark-dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

@@ -26,23 +26,9 @@ def main() -> int:
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, here)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    from census_postgres_py_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("census-spark-jobs-sweep")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("census-spark-jobs-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 

@@ -97,7 +97,7 @@ def main() -> int:
         .appName("census-spark-stage-audit")
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+            os.environ.get("SPARK_DRIVER_MEM", "8g"),
         )
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
