@@ -338,6 +338,11 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     o = spark.table("cppys_orders_bucketed")
     li = spark.table("cppys_lineitem_bucketed")
+    # the resolved frames keep the bucketed relations (files stay in
+    # the call dir), so the catalog entries can go: the caller's
+    # catalog ends the call as it began
+    for name, _, _ in pairs:
+        spark.sql(f"DROP TABLE cppys_{name}_bucketed")
     # hint("merge"): at fixture scale Catalyst would broadcast orders
     # and the bucketing would never engage; at 100 TB neither side is
     # broadcastable and SMJ-over-buckets is the plan this op exists to

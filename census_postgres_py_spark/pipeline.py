@@ -21,11 +21,17 @@ only the bytes on disk. The oracle reproduces the final derived table
 straight from nation ⋈ customer, so lossless file round-trips are
 part of what the hash-match proves.
 
-Scale posture: each stage is linear and shuffle-free except the one
-groupBy (per-geography aggregation) and the final partitioned write;
-geoheader is dimension-sized and broadcast. Partitioning the sink by
-`stusab` mirrors the reference's schema-per-state layout and is what
-makes downstream geography-filtered scans prune at 100 TB.
+Scale posture: the synthetic inputs have one row per nation, fixed in
+size like `tables.BROADCAST_DIMS`, so Spark computes them in one
+aggregation and the driver writes the three files with plain file I/O
+— three Spark write jobs would add a commit protocol and, without
+libhadoop, a forked `chmod` per Hadoop-created file (README, "Files
+cost forks"). The paper's stages stay Spark: the schema-explicit CSV
+scans and the fixed-width parse are linear and shuffle-free, the
+dimension-sized geoheader is broadcast into the joins, and only the
+final partitioned write shuffles. Partitioning the sink by `stusab`
+mirrors the reference's schema-per-state layout and is what makes
+downstream geography-filtered scans prune at 100 TB.
 """
 
 from __future__ import annotations
@@ -39,11 +45,11 @@ from census_postgres_py_spark import scratch
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.sources.csv_sequence import (
     read_sequence_csv,
-    write_sequence_csv,
+    sequence_csv_line,
 )
 from census_postgres_py_spark.sources.fixed_width import (
     FixedWidthField,
-    format_fixed_width,
+    fixed_width_line,
     parse_fixed_width_lines,
 )
 from census_postgres_py_spark.sources.metadata_schema import sequence_table_schema
@@ -74,16 +80,32 @@ def _round2(col):
     return F.floor(col * 100 + F.lit(0.5)) / 100
 
 
+def _write_lines(path: str, lines: list[str]) -> None:
+    """One text file of ``lines`` in a new directory ``path`` — read by
+    ``spark.read.csv``/``text`` like a one-task Spark write, without the
+    commit protocol or the Hadoop-created ``.crc``/``_SUCCESS`` files."""
+    os.makedirs(path)
+    with open(
+        os.path.join(path, "part-00000"), "w", encoding="utf-8", newline="\n"
+    ) as f:
+        f.writelines(line + "\n" for line in lines)
+
+
 def _synthesize_inputs(
     spark: SparkSession, sf_dir: str, out: str
 ) -> tuple[str, str, str]:
     """Render ACS-shaped geoheader + e/m sequence files under ``out``
     from the fixture star schema. Deterministic; the oracle re-derives
-    the same quantities from the original tables."""
+    the same quantities from the original tables.
+
+    One row per nation, so every value — the 2dp rounding and the jam
+    ``when`` included — is computed by Spark in one select (numbers
+    bit-identical to the oracle's) and collected once; the driver
+    writes the three files."""
     nation = t(spark, sf_dir, "nation")
     customer = t(spark, sf_dir, "customer")
-
-    per_nation = (
+    pop, bal = F.col("pop"), F.col("bal")
+    rows = (
         nation.join(
             customer, customer.c_nationkey == nation.n_nationkey, "left"
         )
@@ -92,66 +114,49 @@ def _synthesize_inputs(
             F.count("c_custkey").cast("double").alias("pop"),
             _round2(F.sum("c_acctbal")).alias("bal"),
         )
-    )
-    # r13: three writer branches (geoheader text + e/m sequence CSVs)
-    # consume this nation-sized frame; uncheckpointed, each re-ran the
-    # customer join + groupBy from scratch — 3 serial driver-blocking
-    # rebuilds of the same 25 rows (guide §5, the pagerank-checkpoint
-    # precedent for ≥3 consumers). Materialize once; each write
-    # becomes a single tiny job over the checkpointed rows.
-    per_nation = per_nation.localCheckpoint(eager=False)
-
-    geo = per_nation.select(
-        _stusab().alias("stusab"),
-        F.lit("040").alias("sumlevel"),
-        (F.col("n_nationkey") + 1).cast("int").alias("logrecno"),
-        F.concat(
-            F.lit("04000US"), F.lpad(F.col("n_nationkey").cast("string"), 2, "0")
-        ).alias("geoid"),
-        F.col("n_name").alias("name"),
-    )
-    geo_path = os.path.join(out, "geo")
-
-    def seq_rows(filetype: str, margin: bool) -> DataFrame:
-        c1 = F.col("pop")
-        c2 = F.col("bal")
-        if margin:
-            # margins: 10% of estimate, jam-suppressed for small pops
-            c1 = _round2(F.col("pop") * 0.1)
-            c2 = F.when(
-                F.col("pop") >= JAM_POP_FLOOR, _round2(F.col("bal") * 0.1)
-            )  # else NULL -> written as the '.' jam value
-        return per_nation.select(
-            F.lit("ACSSF").alias("fileid"),
-            F.lit(filetype).alias("filetype"),
+        .select(
             _stusab().alias("stusab"),
-            F.lit("000").alias("chariter"),
-            F.lit(1).alias("sequence"),
+            F.lit("040").alias("sumlevel"),
             (F.col("n_nationkey") + 1).cast("int").alias("logrecno"),
-            c1.alias(f"{TABLE_ID}001"),
-            c2.alias(f"{TABLE_ID}002"),
+            F.concat(
+                F.lit("04000US"),
+                F.lpad(F.col("n_nationkey").cast("string"), 2, "0"),
+            ).alias("geoid"),
+            F.col("n_name").alias("name"),
+            pop.alias("e1"),
+            bal.alias("e2"),
+            # margins: 10% of estimate, jam-suppressed for small pops
+            _round2(pop * 0.1).alias("m1"),
+            F.when(pop >= JAM_POP_FLOOR, _round2(bal * 0.1)).alias("m2"),
         )
+        .collect()
+    )
+
+    geo_path = os.path.join(out, "geo")
+    _write_lines(geo_path, [fixed_width_line(r, GEO_LAYOUT) for r in rows])
+
+    columns = sequence_table_schema(TABLE_ID, N_CELLS).fieldNames()
+
+    def seq_lines(filetype: str, c1: str, c2: str) -> list[str]:
+        lines = []
+        for r in rows:
+            v = {
+                "fileid": "ACSSF",
+                "filetype": filetype,
+                "stusab": r["stusab"],
+                "chariter": "000",
+                "sequence": 1,
+                "logrecno": r["logrecno"],
+                f"{TABLE_ID}001": r[c1],
+                f"{TABLE_ID}002": r[c2],  # NULL -> the '.' jam value
+            }
+            lines.append(sequence_csv_line(v[c] for c in columns))
+        return lines
 
     e_path = os.path.join(out, "e")
     m_path = os.path.join(out, "m")
-    # r13: the three scratch writes are independent once per_nation is
-    # checkpointed, so submit them from a small thread pool (guide
-    # §2.6 — actions are only sequential because driver code calls
-    # them sequentially); three tiny jobs overlap instead of running
-    # as three serial driver round trips.
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = (
-        lambda: format_fixed_width(geo, GEO_LAYOUT)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .text(geo_path),
-        lambda: write_sequence_csv(seq_rows("2014e5", margin=False), e_path),
-        lambda: write_sequence_csv(seq_rows("2014m5", margin=True), m_path),
-    )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(w) for w in writes]:
-            fut.result()
+    _write_lines(e_path, seq_lines("2014e5", "e1", "e2"))
+    _write_lines(m_path, seq_lines("2014m5", "m1", "m2"))
     return geo_path, e_path, m_path
 
 

@@ -58,3 +58,16 @@ def format_fixed_width(df: DataFrame, layout: list[FixedWidthField]) -> DataFram
         for f in layout
     ]
     return df.select(F.concat(*parts).alias("value"))
+
+
+def fixed_width_line(row, layout: list[FixedWidthField]) -> str:
+    """Render one row as :func:`format_fixed_width` renders it — the
+    driver-side twin for rows already collected (a ``Row`` or a dict,
+    read by field name): each field's text (``None`` as empty)
+    space-padded, or cut, to the field's width."""
+    return "".join(
+        ("" if row[f.name] is None else str(row[f.name]))[: f.length].ljust(
+            f.length
+        )
+        for f in layout
+    )

@@ -27,31 +27,70 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark import scratch
+from census_postgres_py_spark import scratch, stats
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import read_back, t
 
 HOUR_MS = 3_600_000
 
 
-#: State-store partition count for the stateful streaming ops
-#: (watermark/windowed aggs, dropDuplicatesWithinWatermark, per-user
-#: custom and sessionize state: ≤100k state keys on every fixture
-#: decade). Streaming state partitioning is fixed by
-#: spark.sql.shuffle.partitions at checkpoint creation, and every
-#: partition costs a store commit per micro-batch, so the session's
-#: scan-sized default (32) quadruples the fixed cost for nothing.
-#: Interleaved A/B at sf0.1, 4-5 pairs each, parts 32 → 8 warm-min
-#: (r12): stream_watermark 1.60→0.98, stream_dedup_state 2.20→1.31,
-#: stream_custom_state 5.40→4.11, stream_static_join 1.56→1.00,
-#: stream_windowed_topk 4.23→2.27 — 8 won every pair, outputs
-#: identical (partition count is execution detail). Sessionize
-#: measured the other side (see _SESSIONIZE_FEED_SHARDS): 4 or 2
-#: partitions were SLOWER, its per-batch cost being the parallel
-#: python state fold. NOT applied to the stream-stream joins: their
+#: State-store partition count of the two applyInPandasWithState ops
+#: (stream_custom_state, stream_sessionize_state), and the cap of
+#: :func:`_state_parts` for the four ops with JVM-side state.
+#: Streaming state partitioning is fixed by spark.sql.shuffle.partitions
+#: at checkpoint creation, and every partition costs a store commit per
+#: micro-batch, so the session's scan-sized default (32) quadruples the
+#: fixed cost for nothing. Interleaved A/B at sf0.1, 4-5 pairs each,
+#: parts 32 → 8 warm-min (r12): stream_watermark 1.60→0.98,
+#: stream_dedup_state 2.20→1.31, stream_custom_state 5.40→4.11,
+#: stream_static_join 1.56→1.00, stream_windowed_topk 4.23→2.27 — 8
+#: won every pair, outputs identical (partition count is execution
+#: detail). NOT applied to the stream-stream joins: their
 #: time-bucket-salted state is pair-scale and the r11 salting was
 #: validated 32-wide.
+#:
+#: Below 8, the cost is files: each state partition writes a
+#: ``1.delta`` and its checksum file per batch, each with a Hadoop
+#: ``.crc`` twin, each renamed into place — 5 ``chmod`` + 16
+#: ``readlink`` child processes per partition without libhadoop
+#: (README, "Files cost forks"). Same JVM, interleaved, sf0.1 (events:
+#: 100,000 rows), median seconds at 8 / 2 / 1 partitions, result
+#: digests identical at every count:
+#:
+#: ====================  =====  =====  =====
+#: op                      8      2      1
+#: ====================  =====  =====  =====
+#: stream_windowed_topk  1.034  0.794  0.748
+#: stream_watermark      1.106  0.811  0.788
+#: stream_static_join    1.144  0.818  0.787
+#: stream_dedup_state    2.045  1.746  2.116
+#: stream_custom_state   9.30   10.27  14.38
+#: ====================  =====  =====  =====
+#:
+#: The Python-state ops keep 8: each of their micro-batches is a
+#: parallel python fold, so fewer partitions is slower (sessionize
+#: too was slower at 4 and at 2 in r12; see _SESSIONIZE_FEED_SHARDS).
 _STREAM_STATE_PARTS = 8
+
+#: Source rows per state partition for the JVM-state ops
+#: (:func:`_state_parts`). 50,000 gives 2 partitions at sf0.1, the
+#: best total of the four ops in the table above (4.17 s vs 4.44 s at
+#: 1 and 5.33 s at 8): the windowed aggregations lose 0.02-0.05 s to
+#: a second partition, the dedup (whose state holds every event_id)
+#: gains 0.37 s. sf0.01 gets 1; the cap is reached at 400,000 rows.
+_STATE_ROWS_PER_PART = 50_000
+
+
+def _state_parts(sf_dir: str, table: str) -> int:
+    """State-store partitions for a key-level stateful aggregation of
+    fixture ``table``: one per ``_STATE_ROWS_PER_PART`` source rows,
+    between 1 and ``_STREAM_STATE_PARTS``. As in
+    ``tables.gated_broadcast``, the source's exact footer row count
+    (:func:`stats.rows`, no Spark job) is a conservative upper bound on
+    the state rows of an aggregation that keeps at most one row per
+    source row."""
+    n = -(-stats.rows(sf_dir, table) // _STATE_ROWS_PER_PART)
+    return max(1, min(_STREAM_STATE_PARTS, n))
 
 
 def _run_to_memory(
@@ -128,7 +167,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.unix_millis(F.col("w.start")).alias("hour_ms"), "n", "total_value")
     )
     return _run_to_memory(
-        agg, "complete", state_parts=_STREAM_STATE_PARTS
+        agg, "complete", state_parts=_state_parts(sf_dir, "events")
     )
 
 
@@ -171,7 +210,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     return _run_to_memory(
-        deduped, "append", state_parts=_STREAM_STATE_PARTS
+        deduped, "append", state_parts=_state_parts(sf_dir, "events")
     ).select("event_id", "event_type", "user_id")
 
 
@@ -534,7 +573,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return _run_to_memory(
-        agg, "complete", state_parts=_STREAM_STATE_PARTS
+        agg, "complete", state_parts=_state_parts(sf_dir, "events")
     )
 
 
@@ -1132,9 +1171,9 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete output mode emits every window for the oracle compare;
     ties break on event_type for a total order.
 
-    State partitions are sized to STATE CARDINALITY, not the session's
-    scan-sized shuffle default — see _STREAM_STATE_PARTS (A/B table at
-    the constant).
+    State partitions follow the source row count (_state_parts), not
+    the session's scan-sized shuffle default — A/B table at
+    _STREAM_STATE_PARTS.
     """
     ev = t(spark, sf_dir, "events", stream=True)
     counts = (
@@ -1148,7 +1187,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sunk = _run_to_memory(
-        counts, "complete", state_parts=_STREAM_STATE_PARTS
+        counts, "complete", state_parts=_state_parts(sf_dir, "events")
     )
     w = Window.partitionBy("hour_ms").orderBy(
         F.col("n").desc(), "event_type"

@@ -34,3 +34,19 @@ def test_pipeline_sink_is_partitioned_by_state(
     )
     parts = glob.glob(os.path.join(sink, "stusab=*"))
     assert len(parts) > 1, "sink not partitioned by stusab"
+
+
+def test_pipeline_inputs_are_written_by_the_driver(
+    spark, queries, monkeypatch, tmp_path
+):
+    """The 25-row synthetic inputs are plain files written by the
+    driver: ``geo/``, ``e/`` and ``m/`` each hold one data file and no
+    Hadoop ``.crc`` or ``_SUCCESS`` file — only the partitioned
+    ``sink/`` goes through a Spark write."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    queries["pipeline_acs_e2e"](spark, SF_SMOKE)
+    [call] = glob.glob(os.path.join(tmp_path, "cppys_call", "acs_pipeline-*"))
+    assert sorted(os.listdir(call)) == ["e", "geo", "m", "sink"]
+    for part in ("geo", "e", "m"):
+        assert len(os.listdir(os.path.join(call, part))) == 1, part
+    assert os.path.exists(os.path.join(call, "sink", "_SUCCESS"))

@@ -145,6 +145,21 @@ def test_bucketed_join_no_input_exchange(spark, queries):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
+def test_bucketed_sink_leaves_the_catalog_unchanged(spark, queries):
+    """sink_bucketed drops its two bucketed tables once ``spark.table``
+    has resolved them: the caller's catalog ends the call as it began,
+    and the result still reads the bucketed files (rows, and the
+    shuffle-free SortMergeJoin of the test above)."""
+    before = {tb.name for tb in spark.catalog.listTables()}
+    df = queries["sink_bucketed"](spark, SF_SMOKE)
+    after = {tb.name for tb in spark.catalog.listTables()}
+    assert after <= before and not {n for n in after if n.startswith("cppys_")}
+    plan = _plan(df)
+    assert "SortMergeJoin" in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert df.count() > 0
+
+
 def test_dynamic_partition_pruning_fires(spark, queries):
     """join_partition_pruned's whole point: the fact scan's
     PartitionFilters must carry a runtime dynamicpruningexpression

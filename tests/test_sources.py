@@ -7,8 +7,14 @@ from __future__ import annotations
 
 import pytest
 
+from census_postgres_py_spark.sources.csv_sequence import (
+    read_sequence_csv,
+    sequence_csv_line,
+    write_sequence_csv,
+)
 from census_postgres_py_spark.sources.fixed_width import (
     FixedWidthField,
+    fixed_width_line,
     format_fixed_width,
     parse_fixed_width_lines,
 )
@@ -58,6 +64,69 @@ def test_fixed_width_round_trip(spark):
     assert {tuple(r) for r in back.collect()} == {
         (1, "alpha", 2.5), (42, "beta", -1.25),
     }
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_driver_rendered_sequence_csv_reads_like_the_spark_writer(
+    spark, tmp_path
+):
+    """Lines rendered on the driver by ``sequence_csv_line`` read back
+    through ``read_sequence_csv`` to exactly the rows that
+    ``write_sequence_csv`` round-trips from the same frame: a NULL
+    margin as the '.' jam, integral and non-integral doubles, and
+    doubles Spark writes in exponent form."""
+    schema = sequence_table_schema("b01001", 3)
+    src = spark.createDataFrame(
+        [
+            ("ACSSF", "2014m5", "S0", "000", 1, 1, 12.0, None, 0.1),
+            ("ACSSF", "2014m5", "S1", "000", 1, 2, 1234.56, 0.3, -7.0),
+            ("ACSSF", "2014e5", "S2", "000", 1, 25, 1.0e7, 1.0e-5, 2.5e16),
+        ],
+        schema,
+    )
+    spark_dir = str(tmp_path / "spark")
+    write_sequence_csv(src, spark_dir)
+    driver_dir = tmp_path / "driver"
+    driver_dir.mkdir()
+    (driver_dir / "part-00000").write_text(
+        "".join(sequence_csv_line(r) + "\n" for r in src.collect())
+    )
+    want = _rows(read_sequence_csv(spark, spark_dir, schema))
+    assert _rows(read_sequence_csv(spark, str(driver_dir), schema)) == want
+    assert any("b01001002=None" in r for r in want), want
+
+
+def test_sequence_csv_line_refuses_cells_that_need_quoting():
+    with pytest.raises(ValueError, match="needs quoting"):
+        sequence_csv_line(["a,b", 1.0])
+
+
+def test_driver_rendered_fixed_width_parses_like_format_fixed_width(spark):
+    """``fixed_width_line`` renders what ``format_fixed_width`` renders:
+    the same parsed rows for a NULL field, an int, and a name longer
+    than its field (both cut it to the field width)."""
+    layout = [
+        FixedWidthField("stusab", 1, 2, "string"),
+        FixedWidthField("logrecno", 3, 7, "int"),
+        FixedWidthField("name", 10, 32, "string"),
+    ]
+    src = spark.createDataFrame(
+        [
+            ("S0", 1, "ALGERIA"),
+            ("S1", 1234567, "A" * 32 + "-cut off past the field"),
+            (None, 25, None),
+        ],
+        "stusab string, logrecno int, name string",
+    )
+    lines = spark.createDataFrame(
+        [(fixed_width_line(r, layout),) for r in src.collect()], "value string"
+    )
+    want = _rows(parse_fixed_width_lines(format_fixed_width(src, layout), layout))
+    assert _rows(parse_fixed_width_lines(lines, layout)) == want
+    assert any("name='" + "A" * 32 + "'" in r for r in want), want
 
 
 def test_jdbc_writer_config_construction(spark):

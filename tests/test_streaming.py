@@ -492,3 +492,64 @@ def test_run_to_memory_state_parts_outlive_the_start_swap(spark, tmp_path):
     assert meta and {r["numPartitions"] for r in meta} == {
         jobs._STREAM_STATE_PARTS
     }, meta
+
+
+#: The ops whose state lives in the JVM state store, sized by
+#: ``jobs._state_parts``; the applyInPandasWithState ops keep
+#: ``jobs._STREAM_STATE_PARTS``.
+_JVM_STATE_OPS = (
+    "stream_windowed_topk",
+    "stream_watermark",
+    "stream_static_join",
+    "stream_dedup_state",
+)
+_PYTHON_STATE_OPS = ("stream_custom_state", "stream_sessionize_state")
+
+
+@pytest.fixture
+def state_parts_seen(monkeypatch):
+    """The ``state_parts`` each ``_run_to_memory`` call is given."""
+    from census_postgres_py_spark.streaming import jobs
+
+    seen = []
+    real = jobs._run_to_memory
+
+    def spy(df, output_mode, state_parts=None, checkpoint=None):
+        seen.append(state_parts)
+        return real(df, output_mode, state_parts, checkpoint)
+
+    monkeypatch.setattr(jobs, "_run_to_memory", spy)
+    return seen
+
+
+@pytest.mark.parametrize("qid", _JVM_STATE_OPS)
+def test_jvm_state_ops_size_state_to_source_rows(
+    spark, queries, qid, monkeypatch, state_parts_seen
+):
+    """A JVM-state op gets ``_state_parts`` — one partition per
+    ``_STATE_ROWS_PER_PART`` source rows — so SF_SMOKE runs on fewer
+    partitions than the cap; with ``_STATE_ROWS_PER_PART`` patched to 1
+    (a 100 TB stream) it gets the cap, with identical rows."""
+    from census_postgres_py_spark.streaming import jobs
+
+    small = jobs._state_parts(SF_SMOKE, "events")
+    assert small < jobs._STREAM_STATE_PARTS
+    sized = _sorted_rows(queries[qid](spark, SF_SMOKE))
+    assert state_parts_seen == [small]
+
+    monkeypatch.setattr(jobs, "_STATE_ROWS_PER_PART", 1)
+    capped = _sorted_rows(queries[qid](spark, SF_SMOKE))
+    assert state_parts_seen == [small, jobs._STREAM_STATE_PARTS]
+    assert sized and sized == capped
+
+
+@pytest.mark.parametrize("qid", _PYTHON_STATE_OPS)
+def test_python_state_ops_keep_the_fixed_state_parts(
+    spark, queries, qid, state_parts_seen
+):
+    """Each micro-batch of an applyInPandasWithState op is a parallel
+    python fold, so these keep ``_STREAM_STATE_PARTS`` at any size."""
+    from census_postgres_py_spark.streaming import jobs
+
+    assert queries[qid](spark, SF_SMOKE).count() > 0
+    assert state_parts_seen == [jobs._STREAM_STATE_PARTS]
