@@ -12,6 +12,13 @@ FIXTURES.md: no near-duplicate texts exist in `documents`, so each
 query first INJECTS deterministic mutated copies (doc_id + 1_000_000,
 last 2 tokens dropped — functions/text.drop_last_tokens) and then must
 re-discover them.
+
+The document ops are frame functions ``op(docs, n_docs)``: a
+(doc_id, text) corpus and an upper bound on its rows, which decides the
+scale gate (_SHINGLE_CHECKPOINT_MIN_DOCS) without a Spark job
+(``edit_distance(docs)`` has no gate). Their registered ids are thin
+adapters that pass the oracle-sized corpus (_corpus); stress runs pass
+any corpus they like.
 """
 
 from __future__ import annotations
@@ -31,11 +38,9 @@ from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
 DUP_OFFSET = 1_000_000
-# Oracle-sized corpus cap: _with_dups filters doc_id < DUP_MAX_DOC_ID
-# and its input_rows probe derives its bound from the SAME constant,
-# so the filter and the checkpoint-gate probe cannot silently
-# disagree (r9 ADVICE). Stress harnesses lift the cap by swapping the
-# _with_dups seam (tools/stress_bench.py::_uncapped_docs).
+# Oracle-sized corpus cap of the registered ops (the oracle SQL's
+# `doc_id < 200`); only _corpus reads it, so the filter and the scale
+# gate's row bound cannot disagree.
 DUP_MAX_DOC_ID = 200
 N_HASHES = 64  # minhash signature length
 N_BANDS = 16  # => rows-per-band r = 4
@@ -100,34 +105,37 @@ _ORACLE_SHINGLES = """
 """
 
 
-def _with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents (doc_id < DUP_MAX_DOC_ID) + deterministic mutated
-    copies."""
+def _with_generations(docs: DataFrame, gens: tuple[int, ...]) -> DataFrame:
+    """``docs`` plus one deterministic mutated copy per generation: the
+    i-th (from 1) drops the last ``gens[i - 1]`` tokens and adds
+    i·DUP_OFFSET to doc_id."""
+    corpus = docs
+    for i, k in enumerate(gens, 1):
+        corpus = corpus.unionByName(
+            docs.select(
+                (F.col("doc_id") + i * DUP_OFFSET).alias("doc_id"),
+                drop_last_tokens("text", k).alias("text"),
+            )
+        )
+    return corpus
+
+
+def _corpus(
+    spark: SparkSession, sf_dir: str, gens: tuple[int, ...] = (2,)
+) -> tuple[DataFrame, int]:
+    """(corpus, n_docs) of a registered dedup op: documents with doc_id
+    < DUP_MAX_DOC_ID plus the ``gens`` mutation generations, and an
+    upper bound on the corpus rows from the parquet footer — so the
+    scale gate costs no Spark job on any registered call."""
     docs = (
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < DUP_MAX_DOC_ID)
         .select("doc_id", "text")
     )
-    dups = docs.select(
-        (F.col("doc_id") + DUP_OFFSET).alias("doc_id"),
-        drop_last_tokens("text", 2).alias("text"),
+    n_docs = (1 + len(gens)) * min(
+        DUP_MAX_DOC_ID, stats.rows(sf_dir, "documents")
     )
-    return docs.unionByName(dups)
-
-
-def _with_dups_input_rows(spark: SparkSession, sf_dir: str) -> int:
-    """O(1) upper bound on _with_dups' output rows (originals + one
-    mutated copy of each, capped at DUP_MAX_DOC_ID originals) from the
-    parquet footer — lets the checkpoint gate answer without a Spark
-    job. Because the bound is capped at 2*DUP_MAX_DOC_ID = 400, the
-    default provider can NEVER open the 20k checkpoint gate — that is
-    intentional: the checkpoint path is reachable only via the stress
-    harnesses' _with_dups seam swap (whose uncapped providers carry no
-    probe and fall back to the honest count())."""
-    return 2 * min(DUP_MAX_DOC_ID, stats.rows(sf_dir, "documents"))
-
-
-_with_dups.input_rows = _with_dups_input_rows
+    return _with_generations(docs, gens), n_docs
 
 
 def _shingled(df: DataFrame) -> DataFrame:
@@ -159,35 +167,12 @@ def _shingled(df: DataFrame) -> DataFrame:
 #: time was redundant derivation (measured: the checkpointed CC
 #: pipeline ran the identical candidate+verify dataflow at 35.6 s vs
 #: 317 s standalone on the 500k-doc web corpus). At the oracle-sized
-#: fixture (≤400 docs) the gate stays closed and the plan stays lazy —
+#: fixture (≤600 docs) the gate stays closed and the plan stays lazy —
 #: no checkpoint job in bench/driver runs.
 _SHINGLE_CHECKPOINT_MIN_DOCS = 20_000
 
 
-def _input_docs_rows(spark: SparkSession, sf_dir: str, docs: DataFrame) -> int:
-    """Row count of the op's REAL input for the checkpoint gate.
-
-    ``_with_dups`` is resolved at CALL time (module global), so the
-    stress harnesses' seam swap is visible here: the default provider
-    carries an ``input_rows`` probe that answers from the parquet
-    footer + its own static cap — O(1), no Spark job, so the gate is
-    free on every registered/bench/driver call (a naive docs.count()
-    measured +0.5-0.7 s warm per query). A swapped provider without
-    the probe falls back to the honest count() — only paid at stress
-    scale, where it is noise (embedding_cosine's tiling-gate
-    precedent)."""
-    probe = getattr(_with_dups, "input_rows", None)
-    return probe(spark, sf_dir) if probe is not None else docs.count()
-
-
-def _docs_at_scale(spark: SparkSession, sf_dir: str, docs: DataFrame) -> bool:
-    rows = _input_docs_rows(spark, sf_dir, docs)
-    return rows >= _SHINGLE_CHECKPOINT_MIN_DOCS
-
-
-def _shared_shingled(
-    spark: SparkSession, sf_dir: str, docs: DataFrame
-) -> DataFrame:
+def _shared_shingled(docs: DataFrame, at_scale: bool) -> DataFrame:
     """Shingle-set frame, materialized once when the corpus is big
     enough that per-subtree recompute dominates (see
     _SHINGLE_CHECKPOINT_MIN_DOCS). localCheckpoint, like the triangle op's
@@ -195,7 +180,7 @@ def _shared_shingled(
     executor re-runs the job, the right trade for a derived frame that
     is cheap to rebuild but expensive to rebuild FOUR times."""
     sh = _shingled(docs)
-    return sh.localCheckpoint() if _docs_at_scale(spark, sf_dir, docs) else sh
+    return sh.localCheckpoint() if at_scale else sh
 
 
 def _rescore_survivors_raw(
@@ -357,21 +342,22 @@ def _exact_jaccard_pairs(
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ngram_jaccard(*_corpus(spark, sf_dir))
+
+
+def ngram_jaccard(docs: DataFrame, n_docs: int) -> DataFrame:
     """EXACT n-gram Jaccard dedup via inverted shingle index.
 
     Candidate generation = equi-join on shingle (each shared shingle
     votes once), so cost is Σ collisions, not n². The exact Jaccard
     follows from |A∩B| counted by the join plus per-doc shingle counts
     — no second pass over the texts. The shingle frame is shared via
-    the count-gated checkpoint (_shared_shingled) past fixture scale:
+    the row-bound-gated checkpoint (_shared_shingled) past fixture scale:
     the index/prefix/verify subtrees otherwise each re-shingle the
     corpus (measured 317 → 27.6 s at the 500k-doc web corpus).
     """
-    docs = _with_dups(spark, sf_dir)
-    return _inverted_index_jaccard(
-        _shared_shingled(spark, sf_dir, docs),
-        at_scale=_docs_at_scale(spark, sf_dir, docs),
-    )
+    at_scale = n_docs >= _SHINGLE_CHECKPOINT_MIN_DOCS
+    return _inverted_index_jaccard(_shared_shingled(docs, at_scale), at_scale)
 
 
 def _inverted_index_jaccard(
@@ -473,6 +459,10 @@ def _inverted_index_jaccard(
 
 @register("dedup_minhash")  # LSH recall < 1 by design => rows-only check
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return minhash(*_corpus(spark, sf_dir))
+
+
+def minhash(docs: DataFrame, n_docs: int) -> DataFrame:
     """MinHash + LSH banding near-dup detection (the 100 TB path).
 
     shingle -> 64 minhashes (xxhash64 seeded per permutation) -> 16
@@ -491,9 +481,8 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT ops (jaccard/containment/cc), whose output contract is
     row-identity with the naive plan.
     """
-    docs = _with_dups(spark, sf_dir)
-    at_scale = _docs_at_scale(spark, sf_dir, docs)
-    shingled = _shared_shingled(spark, sf_dir, docs)
+    at_scale = n_docs >= _SHINGLE_CHECKPOINT_MIN_DOCS
+    shingled = _shared_shingled(docs, at_scale)
     ex = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
     sig = ex.groupBy("doc_id").agg(
         *[
@@ -568,6 +557,10 @@ def _simhash_fp(with_dups: DataFrame) -> DataFrame:
 
 @register("dedup_simhash")  # bit-band candidate gen => rows-only check
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return simhash(*_corpus(spark, sf_dir))
+
+
+def simhash(docs: DataFrame, n_docs: int) -> DataFrame:
     """SimHash (64-bit) near-dup detection.
 
     Per doc: tokens -> xxhash64 -> per-bit +/-1 votes -> sign bits ->
@@ -594,9 +587,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_bits = 64
     n_bands = 4
     band_width = n_bits // n_bands
-    docs = _with_dups(spark, sf_dir)
     fp = _simhash_fp(docs)
-    if _docs_at_scale(spark, sf_dir, docs):
+    if n_docs >= _SHINGLE_CHECKPOINT_MIN_DOCS:
         # both band-join sides consume fp; past fixture scale the
         # 64-sum vote aggregation is too expensive to run twice
         fp = fp.localCheckpoint()
@@ -761,40 +753,38 @@ def min_label_cc(edges: DataFrame, nodes: DataFrame) -> DataFrame:
 
 @register("dedup_clusters_cc", oracle=_ORACLE_CC)
 def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return clusters_cc(*_corpus(spark, sf_dir, (2, 4)))
+
+
+def clusters_cc(docs: DataFrame, n_docs: int) -> DataFrame:
     """Duplicate-CLUSTER assignment: connected components over the
     near-dup pair graph, cluster_id = min doc_id in the component.
 
     Pairs alone don't dedup a corpus — A~B and B~C must collapse to ONE
     keeper even when A~C was never emitted. This is the step between
     "LSH found pairs" and "drop all but one per cluster" in every
-    production pipeline. Corpus = documents(<200) + two mutation
-    generations (drop-2 and drop-4 tokens), so components are chains,
-    not just pairs, and label propagation genuinely has to iterate.
+    production pipeline. The registered corpus is documents(<200) + two
+    mutation generations (drop-2 and drop-4 tokens), so components are
+    chains, not just pairs, and label propagation genuinely has to
+    iterate.
 
     Algorithm: `min_label_cc` — min-label propagation with pointer
     doubling, O(log diameter) rounds (see its docstring for the scale
     argument). Oracle: DuckDB recursive CTE reaching the same fixpoint.
     """
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < DUP_MAX_DOC_ID)
-        .select("doc_id", "text")
-    )
-    corpus = docs
-    for gen, k in ((1, 2), (2, 4)):
-        corpus = corpus.unionByName(
-            docs.select(
-                (F.col("doc_id") + gen * DUP_OFFSET).alias("doc_id"),
-                drop_last_tokens("text", k).alias("text"),
-            )
-        )
+    return _clusters(docs, n_docs)[1]
+
+
+def _clusters(docs: DataFrame, n_docs: int) -> tuple[DataFrame, DataFrame]:
+    """(shingled, clusters): the corpus's shingle frame and its
+    (doc_id, cluster_id) assignment (clusters_cc)."""
     # Materialize once: the shingle frame feeds the inverted index, the
     # CC node set, AND (in the e2e pipeline) the survivor sizes —
     # without this the tokenize+shingle scan re-runs per consumer
     # (measured 16 s/pass on the 10x stress corpus).
-    shingled = _shingled(corpus).localCheckpoint()
+    shingled = _shingled(docs).localCheckpoint()
     pairs = _inverted_index_jaccard(
-        shingled, at_scale=_docs_at_scale(spark, sf_dir, corpus)
+        shingled, at_scale=n_docs >= _SHINGLE_CHECKPOINT_MIN_DOCS
     ).select("a_id", "b_id")
     edges = (
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
@@ -804,7 +794,7 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     labels = min_label_cc(edges, shingled.select("doc_id"))
-    return labels.select(
+    return shingled, labels.select(
         "doc_id", F.col("label").cast("long").alias("cluster_id")
     )
 
@@ -968,6 +958,10 @@ EDIT_D = 32  # max edit distance; injected suffix-deletions are 6-18
     """,
 )
 def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return edit_distance(_corpus(spark, sf_dir)[0])
+
+
+def edit_distance(docs: DataFrame) -> DataFrame:
     """EXACT edit-distance near-dup pairs (Levenshtein <= EDIT_D) via
     lossless length-band blocking.
 
@@ -987,7 +981,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed behind `dedup_minhash`'s LSH candidates. The band join
     keeps the same shape either way.
     """
-    docs = _with_dups(spark, sf_dir).withColumn("len", F.length("text"))
+    docs = docs.withColumn("len", F.length("text"))
     band = (F.col("len") / EDIT_D).cast("long")
     a = docs.select(
         F.col("doc_id").alias("a_id"),
@@ -1028,6 +1022,10 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return containment(*_corpus(spark, sf_dir))
+
+
+def containment(docs: DataFrame, n_docs: int) -> DataFrame:
     """ASYMMETRIC containment dedup: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|
     ≥ 0.9 — "A is (nearly) a sub-document of B". Jaccard misses the
     quote/excerpt/prefix-copy case (a 10% excerpt of a long doc has
@@ -1065,9 +1063,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-index, and both verify subtrees otherwise each re-shingle the
     corpus (measured 324 → 30.5 s at the 500k-doc web corpus).
     """
-    docs = _with_dups(spark, sf_dir)
-    at_scale = _docs_at_scale(spark, sf_dir, docs)
-    shingled = _shared_shingled(spark, sf_dir, docs)
+    at_scale = n_docs >= _SHINGLE_CHECKPOINT_MIN_DOCS
+    shingled = _shared_shingled(docs, at_scale)
     ex = shingled.select(
         "doc_id", "n_sh", F.explode("shingles").alias("shingle")
     )
@@ -1205,14 +1202,18 @@ assert _ORACLE_DEDUP_E2E != _ORACLE_CC  # the tail swap must have landed
 
 @register("pipeline_dedup_e2e", oracle=_ORACLE_DEDUP_E2E)
 def pipeline_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return survivors(*_corpus(spark, sf_dir, (2, 4)))
+
+
+def survivors(docs: DataFrame, n_docs: int) -> DataFrame:
     """The composed corpus-dedup lifecycle — candidate pairs → exact
     verify → connected components → ONE survivor per cluster — i.e.
     what dedup_* stages do separately, run end-to-end the way a
     training-data refresh actually runs them.
 
-    Cluster assignment comes from dedup_clusters_cc (inverted-index
-    candidates, exact Jaccard >= 0.5, iterative min-label CC); the
-    survivor policy is keep-the-richest: most shingles wins, doc_id
+    Cluster assignment comes from clusters_cc (inverted-index
+    candidates, exact Jaccard >= 0.5, iterative min-label CC), whose
+    checkpointed shingle frame also gives the sizes; the survivor policy is keep-the-richest: most shingles wins, doc_id
     breaks ties (dedup_keep_best's shape applied to near-dup clusters).
     Output is one row per cluster with its survivor and size, so the
     dedup rate is directly visible. Every stage is keyed — inverted
@@ -1220,22 +1221,8 @@ def pipeline_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     no stage is all-pairs, which is what lets the same dataflow run at
     corpus scale.
     """
-    clusters = dedup_clusters_cc(spark, sf_dir)
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < DUP_MAX_DOC_ID)
-        .select("doc_id", "text")
-    )
-    corpus = docs
-    for gen, k in ((1, 2), (2, 4)):
-        corpus = corpus.unionByName(
-            docs.select(
-                (F.col("doc_id") + gen * DUP_OFFSET).alias("doc_id"),
-                drop_last_tokens("text", k).alias("text"),
-            )
-        )
-    sizes = _shingled(corpus).select("doc_id", "n_sh")
-    joined = clusters.join(sizes, "doc_id")
+    shingled, clusters = _clusters(docs, n_docs)
+    joined = clusters.join(shingled.select("doc_id", "n_sh"), "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_sh").desc(), F.col("doc_id")
     )

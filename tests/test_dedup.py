@@ -147,12 +147,9 @@ def test_containment_prefix_plan_matches_naive(spark, queries):
     # the array_intersect re-score is the same |A∩B| the join counts).
     from pyspark.sql import functions as F
 
-    from census_postgres_py_spark.operators.dedup import (
-        _shingled,
-        _with_dups,
-    )
+    from census_postgres_py_spark.operators.dedup import _corpus, _shingled
 
-    shingled = _shingled(_with_dups(spark, SF_SMOKE))
+    shingled = _shingled(_corpus(spark, SF_SMOKE)[0])
     ex = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
     a = ex.select(F.col("doc_id").alias("a_id"), "shingle")
     b = ex.select(F.col("doc_id").alias("b_id"), "shingle")
@@ -191,12 +188,9 @@ def test_simhash_band_width_is_output_invariant(spark, queries):
     # bucket collisions at scale) without touching output.
     from pyspark.sql import functions as F
 
-    from census_postgres_py_spark.operators.dedup import (
-        _simhash_fp,
-        _with_dups,
-    )
+    from census_postgres_py_spark.operators.dedup import _corpus, _simhash_fp
 
-    fp = _simhash_fp(_with_dups(spark, SF_SMOKE))
+    fp = _simhash_fp(_corpus(spark, SF_SMOKE)[0])
     a = fp.select(F.col("doc_id").alias("a_id"), F.col("simhash").alias("a_fp"))
     b = fp.select(F.col("doc_id").alias("b_id"), F.col("simhash").alias("b_fp"))
     ham = F.bit_count(F.col("a_fp").bitwiseXOR(F.col("b_fp")))
@@ -288,6 +282,66 @@ def test_hashed_verify_election_is_output_invariant(
     # budget 0 overrides the floor: raw verify forced
     monkeypatch.setattr(dedup, "_COLLISION_BUDGET", 0)
     check("forced raw path", False)
+
+
+#: registered id -> the frame function its adapter calls with
+#: (docs, n_docs); n_docs decides the shingle checkpoint gate.
+_GATED = {
+    "dedup_ngram_jaccard": "ngram_jaccard",
+    "dedup_minhash": "minhash",
+    "dedup_simhash": "simhash",
+    "dedup_containment": "containment",
+    "dedup_clusters_cc": "clusters_cc",
+    "pipeline_dedup_e2e": "survivors",
+}
+
+
+@pytest.mark.parametrize("qid", sorted(_GATED))
+def test_gate_row_bound_covers_the_corpus(spark, queries, monkeypatch, qid):
+    """The footer bound an adapter hands its frame function must cover
+    the corpus it hands over: a 2-generation bound for a 3-generation
+    corpus would keep the checkpoint gate shut past its threshold."""
+    from census_postgres_py_spark.operators import dedup
+
+    seen = []
+    monkeypatch.setattr(
+        dedup, _GATED[qid], lambda docs, n_docs: seen.append((docs, n_docs))
+    )
+    queries[qid](spark, SF_SMOKE)
+    [(docs, n_docs)] = seen
+    assert n_docs >= docs.count(), qid
+
+
+def test_survivors_run_uncapped_without_patching(spark):
+    """The e2e survivor step over all fixture documents plus both
+    mutation generations equals the pipeline_dedup_e2e oracle with its
+    doc_id < 200 cap removed — called as a plain frame function, so the
+    module is left exactly as it was."""
+    import duckdb
+
+    from census_postgres_py_spark import stats
+    from census_postgres_py_spark.operators import dedup
+    from census_postgres_py_spark.tables import t
+
+    before = dict(vars(dedup))
+    docs = dedup._with_generations(
+        t(spark, SF_SMOKE, "documents").select("doc_id", "text"), (2, 4)
+    )
+    n_docs = 3 * stats.rows(SF_SMOKE, "documents")
+    got = sorted(map(tuple, dedup.survivors(docs, n_docs).collect()))
+
+    sql = dedup._ORACLE_DEDUP_E2E.replace(" WHERE doc_id < 200", "")
+    assert "< 200" not in sql
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SF_SMOKE}/documents.parquet')"
+    )
+    want = sorted(con.execute(sql).fetchall())
+    assert got == want
+    assert sum(n for _, _, n in got) == n_docs  # every document, uncapped
+    assert vars(dedup).keys() == before.keys()
+    assert all(vars(dedup)[k] is v for k, v in before.items())
 
 
 def test_collision_budget_bound_arithmetic(spark):
@@ -439,12 +493,12 @@ def test_hashed_verify_matches_raw_verify(spark):
     from pyspark.sql import functions as F
 
     from census_postgres_py_spark.operators.dedup import (
+        _corpus,
         _exact_jaccard_pairs,
         _shingled,
-        _with_dups,
     )
 
-    shingled = _shingled(_with_dups(spark, SF_SMOKE))
+    shingled = _shingled(_corpus(spark, SF_SMOKE)[0])
 
     # deterministic collision-freedom on this corpus: distinct shingles
     # <-> distinct hashes (the premise that makes the A/B an identity)

@@ -97,18 +97,9 @@ def main() -> int:
     ap.add_argument("ids", nargs="*")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from census_postgres_py_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-sweep")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("plan-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

@@ -9,14 +9,11 @@ per-op wall seconds + the scaling ratio. A bucketed path should scale
 ~linearly in rows + collisions; an accidental all-pairs path would show
 a ~100x blowup — that cliff is what this harness exists to catch.
 
-dedup_minhash / dedup_simhash cap their corpus at doc_id < 200 by
-SURVEY design (oracle-sized fixture); the stress run lifts the cap by
-patching the `_with_dups` seam so those ops process the FULL documents
-table at both scales. pipeline_dedup_e2e's cap is inline, so its
-dataflow (inverted-index candidates -> exact Jaccard -> min-label CC ->
-survivor per cluster) is re-composed here uncapped from the same module
-helpers (`_shingled`, `_inverted_index_jaccard`) — identical plan
-shape, full corpus.
+The registered dedup ids cap their corpus at doc_id < 200 (the
+oracle-sized fixture), so the dedup rows call the frame functions of
+operators/dedup.py instead, on the FULL documents table with its
+footer row count as the scale gate's bound. The session comes from
+`session.get_spark` (SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM).
 
 Usage: python tools/stress_bench.py [--sf01 /root/testdata/sf0.1]
        [--sf1 /tmp/stress_sf1]
@@ -47,48 +44,29 @@ def _uncapped_docs(spark, sf_dir):
     )
 
 
-def _cc_pipeline_uncapped(spark, sf_dir):
-    """pipeline_dedup_e2e's dataflow over the FULL corpus (no doc_id
-    cap, no synthetic mutation generations — the stress corpus has
-    planted near-dups of its own)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-    from census_postgres_py_spark.operators.dedup import (
-        _inverted_index_jaccard,
-        _shingled,
-        min_label_cc,
+def _uncapped(fn):
+    """Registry-shaped (spark, sf_dir) call of a dedup frame function
+    over the full corpus (no mutation generations — the stress corpus
+    has planted near-dups of its own)."""
+    from census_postgres_py_spark import stats
+
+    return lambda spark, sf_dir: fn(
+        _uncapped_docs(spark, sf_dir), stats.rows(sf_dir, "documents")
     )
 
-    shingled = _shingled(_uncapped_docs(spark, sf_dir)).localCheckpoint()
-    pairs = _inverted_index_jaccard(shingled, at_scale=True).select(
-        "a_id", "b_id"
-    )
-    edges = (
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("b_id").alias("src"), F.col("a_id").alias("dst")
-            )
-        )
-        .localCheckpoint()
-    )
-    labels = min_label_cc(edges, shingled.select("doc_id"))
-    sizes = shingled.select("doc_id", "n_sh")
-    joined = labels.join(sizes, "doc_id")
-    w = Window.partitionBy("label").orderBy(
-        F.col("n_sh").desc(), F.col("doc_id")
-    )
-    wc = Window.partitionBy("label")
-    return (
-        joined.select(
-            "label",
-            "doc_id",
-            F.row_number().over(w).alias("rn"),
-            F.count("*").over(wc).alias("n_docs"),
-        )
-        .filter(F.col("rn") == 1)
-        .select("label", "doc_id", "n_docs")
-    )
+
+def _scaling(spark, name, fn, base_dir, big_dir) -> dict[str, float]:
+    """Wall seconds of ``fn`` to a noop sink at both scales, and their
+    ratio."""
+    row = {}
+    for label, sf_dir in (("sf0.1", base_dir), ("sf1", big_dir)):
+        t0 = time.time()
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        row[label] = round(time.time() - t0, 3)
+        print(f"{name} @ {label}: {row[label]:.2f}s", flush=True)
+    row["ratio"] = round(row["sf1"] / row["sf0.1"], 2)
+    print(f"{name} scaling ratio (10x rows): {row['ratio']}x", flush=True)
+    return row
 
 
 def main() -> None:
@@ -97,123 +75,62 @@ def main() -> None:
     ap.add_argument("--sf1", default="/tmp/stress_sf1")
     ap.add_argument("--heaps01", default="/tmp/stress_heaps_1x")
     ap.add_argument("--heaps1", default="/tmp/stress_heaps_10x")
-    ap.add_argument("--cpus", default="32")
     args = ap.parse_args()
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("stress-bench")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from census_postgres_py_spark import registry
     from census_postgres_py_spark.operators import dedup
+    from census_postgres_py_spark.session import get_spark
 
-    orig = dedup._with_dups
-    dedup._with_dups = _uncapped_docs
-    try:
-        qs = registry.all_queries()
-        runs = [
-            ("dedup_minhash", lambda s, d: qs["dedup_minhash"](s, d)),
-            ("dedup_simhash", lambda s, d: qs["dedup_simhash"](s, d)),
-            (
-                "dedup_embedding_cosine",
-                lambda s, d: qs["dedup_embedding_cosine"](s, d),
-            ),
-            (
-                "join_similarity_ivf",
-                lambda s, d: qs["join_similarity_ivf"](s, d),
-            ),
-            ("pipeline_dedup_cc", _cc_pipeline_uncapped),
-            # r5 VERDICT item 4: the prefix-filtered signature-cosine path
-            ("dedup_tfidf_cosine", lambda s, d: qs["dedup_tfidf_cosine"](s, d)),
-            # r5 VERDICT item 6: the heavy-headline non-dedup families.
-            # gen_stress grows orders/lineitem AND the part key space 10x
-            # (empirical basket-size histogram), so the co-purchase graph
-            # keeps its per-part degree like real TPC-H sf0.1 -> sf1.
-            (
-                "graph_triangle_count",
-                lambda s, d: qs["graph_triangle_count"](s, d),
-            ),
-            (
-                "join_bipartite_projection",
-                lambda s, d: qs["join_bipartite_projection"](s, d),
-            ),
-            (
-                "graph_pagerank_iter",
-                lambda s, d: qs["graph_pagerank_iter"](s, d),
-            ),
-            ("agg_basket_lift", lambda s, d: qs["agg_basket_lift"](s, d)),
-            (
-                "join_complement_rank",
-                lambda s, d: qs["join_complement_rank"](s, d),
-            ),
-            (
-                "stream_windowed_topk",
-                lambda s, d: qs["stream_windowed_topk"](s, d),
-            ),
-            # r6: the bounded-state sessionizer (open-session-tail state
-            # + event-time timeout eviction) against 10x events — the
-            # scale axis its r5 full-history predecessor would have
-            # failed (work per user was O(batches x history)).
-            (
-                "stream_sessionize_state",
-                lambda s, d: qs["stream_sessionize_state"](s, d),
-            ),
-        ]
-        # one warm-up pass so JVM/Arrow first-touch isn't in either side
-        runs[0][1](spark, args.sf01).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        results: dict[str, dict[str, float]] = {}
-        for name, fn in runs:
-            results[name] = {}
-            for label, sf_dir in (("sf0.1", args.sf01), ("sf1", args.sf1)):
-                t0 = time.time()
-                fn(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                dt = time.time() - t0
-                results[name][label] = round(dt, 3)
-                print(f"{name} @ {label}: {dt:.2f}s", flush=True)
-            r = results[name]
-            r["ratio"] = round(r["sf1"] / r["sf0.1"], 2)
-            print(f"{name} scaling ratio (10x rows): {r['ratio']}x", flush=True)
-        # tf-idf cosine on the Heaps-law-vocab corpus: the driver-shaped
-        # fixture's fixed 40-word vocab makes the TRUE answer Θ(n²)
-        # (99,878 -> 6,735,382 pairs for 10x docs, measured via the
-        # DuckDB oracle), so the base row above is output-bound for any
-        # candidate generator. This row is the same operator on a corpus
-        # whose vocabulary grows ~√n (Zipf frequencies) — the realistic
-        # shape where near-dup density is linear and the prefix filter
-        # has rare terms to index.
-        if os.path.isdir(args.heaps01) and os.path.isdir(args.heaps1):
-            name = "dedup_tfidf_cosine_heaps"
-            results[name] = {}
-            for label, sf_dir in (
-                ("sf0.1", args.heaps01),
-                ("sf1", args.heaps1),
-            ):
-                t0 = time.time()
-                qs["dedup_tfidf_cosine"](spark, sf_dir).write.mode(
-                    "overwrite"
-                ).format("noop").save()
-                dt = time.time() - t0
-                results[name][label] = round(dt, 3)
-                print(f"{name} @ {label}: {dt:.2f}s", flush=True)
-            r = results[name]
-            r["ratio"] = round(r["sf1"] / r["sf0.1"], 2)
-            print(f"{name} scaling ratio (10x rows): {r['ratio']}x", flush=True)
-        print(json.dumps(results))
-    finally:
-        dedup._with_dups = orig
+    spark = get_spark("stress-bench")
+    spark.sparkContext.setLogLevel("ERROR")
 
+    qs = registry.all_queries()
+    runs = [
+        ("dedup_minhash", _uncapped(dedup.minhash)),
+        ("dedup_simhash", _uncapped(dedup.simhash)),
+        ("dedup_embedding_cosine", qs["dedup_embedding_cosine"]),
+        ("join_similarity_ivf", qs["join_similarity_ivf"]),
+        ("pipeline_dedup_cc", _uncapped(dedup.survivors)),
+        # r5 VERDICT item 4: the prefix-filtered signature-cosine path
+        ("dedup_tfidf_cosine", qs["dedup_tfidf_cosine"]),
+        # r5 VERDICT item 6: the heavy-headline non-dedup families.
+        # gen_stress grows orders/lineitem AND the part key space 10x
+        # (empirical basket-size histogram), so the co-purchase graph
+        # keeps its per-part degree like real TPC-H sf0.1 -> sf1.
+        ("graph_triangle_count", qs["graph_triangle_count"]),
+        ("join_bipartite_projection", qs["join_bipartite_projection"]),
+        ("graph_pagerank_iter", qs["graph_pagerank_iter"]),
+        ("agg_basket_lift", qs["agg_basket_lift"]),
+        ("join_complement_rank", qs["join_complement_rank"]),
+        ("stream_windowed_topk", qs["stream_windowed_topk"]),
+        # r6: the bounded-state sessionizer (open-session-tail state
+        # + event-time timeout eviction) against 10x events — the
+        # scale axis its r5 full-history predecessor would have
+        # failed (work per user was O(batches x history)).
+        ("stream_sessionize_state", qs["stream_sessionize_state"]),
+    ]
+    # one warm-up pass so JVM/Arrow first-touch isn't in either side
+    runs[0][1](spark, args.sf01).write.mode("overwrite").format(
+        "noop"
+    ).save()
+    results = {
+        name: _scaling(spark, name, fn, args.sf01, args.sf1)
+        for name, fn in runs
+    }
+    # tf-idf cosine on the Heaps-law-vocab corpus: the driver-shaped
+    # fixture's fixed 40-word vocab makes the TRUE answer Θ(n²)
+    # (99,878 -> 6,735,382 pairs for 10x docs, measured via the
+    # DuckDB oracle), so the base row above is output-bound for any
+    # candidate generator. This row is the same operator on a corpus
+    # whose vocabulary grows ~√n (Zipf frequencies) — the realistic
+    # shape where near-dup density is linear and the prefix filter
+    # has rare terms to index.
+    if os.path.isdir(args.heaps01) and os.path.isdir(args.heaps1):
+        name = "dedup_tfidf_cosine_heaps"
+        results[name] = _scaling(
+            spark, name, qs["dedup_tfidf_cosine"], args.heaps01, args.heaps1
+        )
+    print(json.dumps(results))
 
 if __name__ == "__main__":
     main()
