@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark.functions.rounding import r6
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, register_views, t
 
@@ -339,7 +339,7 @@ def agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return partial.groupBy("event_type").agg(
         F.sum("pn").cast("long").alias("n"),
-        (F.floor(F.sum("pv") * 100 + F.lit(0.5)) / 100).alias("total_value"),
+        round_dp(F.sum("pv"), 2).alias("total_value"),
     )
 
 
@@ -472,11 +472,12 @@ def agg_stats_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "l_returnflag",
         "n",
-        r6(sx / n).alias("mean_qty"),
-        r6((sxx - sx * sx / n) / (n - 1)).alias("var_qty"),
-        r6(
+        round_dp(sx / n, 6).alias("mean_qty"),
+        round_dp((sxx - sx * sx / n) / (n - 1), 6).alias("var_qty"),
+        round_dp(
             (n * sxy - sx * sy)
-            / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
+            / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)),
+            6,
         ).alias("corr_qty_price"),
     )
 
@@ -745,9 +746,7 @@ def agg_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("l_discount").isNull().cast("long")).alias("n_null_disc"),
-        (F.floor(F.sum("l_extendedprice") * 100 + F.lit(0.5)) / 100).alias(
-            "sum_price"
-        ),
+        round_dp(F.sum("l_extendedprice"), 2).alias("sum_price"),
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
@@ -859,7 +858,7 @@ def agg_topn_others(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("brand_group")
         .agg(
-            (F.floor(F.sum("rev") * 100 + F.lit(0.5)) / 100).alias("revenue")
+            round_dp(F.sum("rev"), 2).alias("revenue")
         )
     )
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -66,7 +67,7 @@ def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     d38 = "decimal(38,0)"
     x = F.datediff(F.col("o_orderdate").cast("date"), F.lit(_X_EPOCH).cast("date"))
-    y = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    y = half_up(F.col("o_totalprice") * 100)
     s = (
         o.select("o_orderpriority", x.alias("x"), y.alias("y"))
         .groupBy("o_orderpriority")
@@ -88,10 +89,8 @@ def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "o_orderpriority",
         "n",
-        (F.floor(slope * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "slope_cents_per_day"
-        ),
-        (F.floor(intercept * 100 + F.lit(0.5)) / 100).alias("intercept_cents"),
+        round_dp(slope, 6).alias("slope_cents_per_day"),
+        round_dp(intercept, 2).alias("intercept_cents"),
     )
 
 
@@ -192,9 +191,7 @@ def win_moving_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(
             F.col("o_orderdate").cast("date"), F.lit(_X_EPOCH).cast("date")
         ).alias("x"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        half_up(F.col("o_totalprice") * 100).alias("y"),
     )
     win = (
         Window.partitionBy("o_custkey")
@@ -218,9 +215,7 @@ def win_moving_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         n.alias("n_window"),
-        F.when(
-            den != 0, F.floor(slope * 1000000 + F.lit(0.5)) / 1000000
-        ).alias("slope_cents_per_day"),
+        F.when(den != 0, round_dp(slope, 6)).alias("slope_cents_per_day"),
     )
 
 
@@ -261,9 +256,7 @@ def win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(
             F.col("o_orderdate").cast("date"), F.lit(_X_EPOCH).cast("date")
         ).alias("x"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        half_up(F.col("o_totalprice") * 100).alias("y"),
     )
     win = (
         Window.partitionBy("o_custkey")
@@ -274,7 +267,7 @@ def win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.select(
         "o_custkey",
         "o_orderkey",
-        (F.floor(med * 100 + F.lit(0.5)) / 100).alias("med_cents"),
+        round_dp(med, 2).alias("med_cents"),
     )
 
 
@@ -317,7 +310,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "user_id",
         F.col("N").cast("long").alias("n_events"),
-        (F.floor(ent * 1000000 + F.lit(0.5)) / 1000000).alias("entropy_bits"),
+        round_dp(ent, 6).alias("entropy_bits"),
     )
 
 
@@ -422,9 +415,7 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.col("dst").alias("node"), "r")
         )
-    return ranks.select(
-        "node", (F.floor(F.col("r") * 10000 + F.lit(0.5)) / 10000).alias("rank")
-    )
+    return ranks.select("node", round_dp(F.col("r"), 4).alias("rank"))
 
 
 @register(
@@ -539,9 +530,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     cents = o.select(
         (F.col("o_custkey") % 100).alias("seg"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        half_up(F.col("o_totalprice") * 100).alias("y"),
         "o_orderkey",
     )
     w = Window.partitionBy("seg").orderBy("y", "o_orderkey")
@@ -560,5 +549,5 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "seg",
         "n",
-        (F.floor(gini * 1000000 + F.lit(0.5)) / 1000000).alias("gini"),
+        round_dp(gini, 6).alias("gini"),
     )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark.functions.rounding import r6
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -387,7 +387,7 @@ def agg_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "variant",
         "n_users",
         "n_converted",
-        (F.floor(rate * 1000000 + F.lit(0.5)) / 1000000).alias("conv_rate"),
+        round_dp(rate, 6).alias("conv_rate"),
     )
 
 
@@ -447,9 +447,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("w").alias("n_words"),
         F.col("s").alias("n_syllables"),
-        (
-            F.floor(num / (F.lit(10.0) * F.col("w")) + F.lit(0.5)) / 100
-        ).alias("flesch"),
+        (half_up(num / (F.lit(10.0) * F.col("w"))) / 100).alias("flesch"),
     )
 
 
@@ -554,9 +552,7 @@ def win_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.select(
         "o_custkey",
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        half_up(F.col("o_totalprice") * 100).alias("y"),
     )
     w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
     decay = 1 - _EMA_ALPHA
@@ -577,7 +573,7 @@ def win_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.select(
         "o_custkey",
         "o_orderkey",
-        (F.floor(num / den * 100 + F.lit(0.5)) / 100).alias("ema_cents"),
+        round_dp(num / den, 2).alias("ema_cents"),
     )
 
 
@@ -658,7 +654,7 @@ def emb_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label_a",
             "label_b",
-            r6(cosine(F.col("ca"), F.col("cb"))).alias("confusion"),
+            round_dp(cosine(F.col("ca"), F.col("cb")), 6).alias("confusion"),
         )
     )
 
@@ -702,7 +698,9 @@ def emb_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = e.join(F.broadcast(cent), "label").select(
         "label",
         "vec_id",
-        r6(cosine(F.col("embedding"), F.col("centroid"))).alias("cos_r"),
+        round_dp(
+            cosine(F.col("embedding"), F.col("centroid")), 6
+        ).alias("cos_r"),
     )
     w = Window.partitionBy("label").orderBy("cos_r", "vec_id")
     return (
@@ -1288,9 +1286,7 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
     base = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        half_up(F.col("l_extendedprice") * 100).alias("y"),
         F.col("l_quantity").cast("long").alias("wt"),
         "l_orderkey",
         "l_linenumber",
@@ -1402,11 +1398,7 @@ def pipeline_warehouse_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count("*").cast("long").alias("n_customers"),
-        F.sum(
-            F.floor(F.col("price") * 100 + F.lit(0.5)).cast("long")
-        )
-        .cast("long")
-        .alias("state_cents"),
+        F.sum(half_up(F.col("price") * 100)).cast("long").alias("state_cents"),
         F.sum(F.when(F.col("price") > 100000, 1).otherwise(0))
         .cast("long")
         .alias("n_large"),
@@ -1525,9 +1517,7 @@ def win_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.select(
         "o_custkey",
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        half_up(F.col("o_totalprice") * 100).alias("y"),
     )
     w = (
         Window.partitionBy("o_custkey")
@@ -1552,7 +1542,7 @@ def win_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
             "o_orderkey",
             F.when(b <= 0, F.lit(0.0))
-            .otherwise(F.floor(z * 10000 + F.lit(0.5)) / 10000)
+            .otherwise(round_dp(z, 4))
             .alias("zscore"),
         )
     )
@@ -1595,9 +1585,7 @@ def transform_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.select(
         "o_custkey",
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("y"),
+        half_up(F.col("o_totalprice") * 100).alias("y"),
     )
     wp = Window.partitionBy("o_custkey")
     ranged = base.select(
@@ -1614,7 +1602,7 @@ def transform_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.when(F.col("hi") == F.col("lo"), F.lit(0.5))
-        .otherwise(F.floor(scaled * 1000000 + F.lit(0.5)) / 1000000)
+        .otherwise(round_dp(scaled, 6))
         .alias("scaled"),
     )
 
@@ -1654,9 +1642,7 @@ def fn_row_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("string"),
         F.col("o_custkey").cast("string"),
         F.coalesce(F.col("o_orderstatus"), F.lit(nul)),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .cast("string"),
+        half_up(F.col("o_totalprice") * 100).cast("string"),
         F.col("o_orderdate").cast("date").cast("string"),
         F.coalesce(F.col("o_orderpriority"), F.lit(nul)),
     ]

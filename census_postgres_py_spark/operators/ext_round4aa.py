@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -78,11 +79,7 @@ def pipeline_feature_store_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("cust"))
         .agg(
             F.count("*").cast("long").alias("n_orders"),
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("o_totalprice") * 100))
             .cast("long")
             .alias("spend_cents"),
             F.datediff(F.max("cut"), F.max("o_orderdate"))
@@ -229,14 +226,5 @@ def agg_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
         F.col("sx").cast("long").alias("total"),
-        (
-            F.floor(
-                (nd * sxx - sx * sx)
-                / (nd - 1)
-                / sx
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("vmr"),
+        round_dp((nd * sxx - sx * sx) / (nd - 1) / sx, 6).alias("vmr"),
     )

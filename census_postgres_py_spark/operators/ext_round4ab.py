@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from census_postgres_py_spark import stats
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -129,12 +130,8 @@ def agg_sprt_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("decision_day"),
         F.max("k").cast("long").alias("k_final"),
         F.max("n").cast("long").alias("n_final"),
-        (
-            F.floor(
-                F.max_by(F.col("llr"), F.col("day_idx")) * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.max_by(F.col("llr"), F.col("day_idx")), 6
         ).alias("llr_final"),
     )
 
@@ -193,11 +190,7 @@ def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves = e.groupBy(
         "label", "half", (F.col("pos0") + 1).alias("pos")
     ).agg(
-        F.sum(
-            F.floor(F.col("x").cast("double") * 1000000 + F.lit(0.5)).cast(
-                "long"
-            )
-        )
+        F.sum(half_up(F.col("x").cast("double") * 1000000))
         .cast(_D38)
         .alias("s"),
         F.count("*").cast("long").alias("n"),
@@ -214,15 +207,11 @@ def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         b, (F.col("lb") == F.col("label")) & (F.col("pb") == F.col("pos"))
     )
     return paired.groupBy("label").agg(
-        (
-            F.floor(
-                F.sum(F.col("ca") * F.col("cb"))
-                / F.sqrt(F.sum(F.col("ca") * F.col("ca")))
-                / F.sqrt(F.sum(F.col("cb") * F.col("cb")))
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.sum(F.col("ca") * F.col("cb"))
+            / F.sqrt(F.sum(F.col("ca") * F.col("ca")))
+            / F.sqrt(F.sum(F.col("cb") * F.col("cb"))),
+            6,
         ).alias("centroid_cos")
     )
 

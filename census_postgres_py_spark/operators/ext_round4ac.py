@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from census_postgres_py_spark import stats
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import (
@@ -185,7 +186,7 @@ def _tfidf_cosine_small_vocab(spark, sig) -> DataFrame:
     return dots.filter(cos >= _COS_TH).select(
         "da",
         "db",
-        (F.floor(cos * 1000000 + F.lit(0.5)) / 1000000).alias("cos_sim"),
+        round_dp(cos, 6).alias("cos_sim"),
     )
 
 
@@ -340,11 +341,7 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "term",
             "df",
-            F.floor(
-                F.col("tf") * F.log(F.col("n") / F.col("df")) * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
+            half_up(F.col("tf") * F.log(F.col("n") / F.col("df")) * 1000000)
             .alias("w"),
         )
         .filter(F.col("w") > 0)
@@ -541,7 +538,7 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dots.filter(cos >= _COS_TH).select(
         "da",
         "db",
-        (F.floor(cos * 1000000 + F.lit(0.5)) / 1000000).alias("cos_sim"),
+        round_dp(cos, 6).alias("cos_sim"),
     )
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -77,11 +78,7 @@ def agg_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("month", "l_shipdate").alias("m"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("l_extendedprice") * 100))
             .cast("long")
             .alias("cents"),
             F.sum(F.col("l_quantity").cast("long"))
@@ -111,24 +108,14 @@ def agg_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
         pm["part"] == F.col("bpart"),
     ).select(
         "m",
-        F.floor(
-            F.col("cents").cast("double") * F.col("q0") / F.col("qty")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.col("cents").cast("double") * F.col("q0") / F.col("qty"))
         .alias("term_cents"),
         "c0",
     )
     return matched.groupBy("m").agg(
         F.count("*").cast("long").alias("n_parts"),
-        (
-            F.floor(
-                F.sum("term_cents").cast("double")
-                / F.sum("c0")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.sum("term_cents").cast("double") / F.sum("c0"), 6
         ).alias("laspeyres"),
     ).select(
         F.unix_millis(F.col("m")).alias("month_ms"),
@@ -182,9 +169,7 @@ def ts_backlog_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate")
             + ((F.col("o_orderkey") % 30 + 1) * F.expr("INTERVAL 1 DAY"))
         ).alias("e"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     deltas = iv.select(
         F.col("s").alias("d"), F.col("cents").alias("delta")
@@ -277,11 +262,7 @@ def agg_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dow"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("cents")
         )
     )
     w = (
@@ -293,23 +274,14 @@ def agg_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "dow",
         "cents",
-        F.floor(
-            F.sum("cents").over(w).cast("double")
-            / F.count("*").over(w)
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.sum("cents").over(w).cast("double") / F.count("*").over(w))
         .alias("trend"),
     )
     detr = dt.select(
         "event_type", "dow", (F.col("cents") - F.col("trend")).alias("y")
     )
     dowm = detr.groupBy("event_type", "dow").agg(
-        F.floor(
-            F.sum("y").cast("double") / F.count("*") + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("seas")
+        half_up(F.sum("y").cast("double") / F.count("*")).alias("seas")
     )
     resid = detr.join(F.broadcast(dowm), ["event_type", "dow"]).select(
         "event_type",
@@ -334,7 +306,5 @@ def agg_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "event_type",
         "n",
-        (F.floor(strength * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "seasonal_strength"
-        ),
+        round_dp(strength, 6).alias("seasonal_strength"),
     )

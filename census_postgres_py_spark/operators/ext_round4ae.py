@@ -20,6 +20,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
@@ -102,11 +103,7 @@ def agg_gumbel_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("cents")
         )
     )
     blocks = daily.groupBy(
@@ -128,9 +125,9 @@ def agg_gumbel_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.filter(F.col("n") > 1).select(
         "event_type",
         "n",
-        F.floor(mu + F.lit(0.5)).cast("long").alias("mu_cents"),
-        F.floor(beta + F.lit(0.5)).cast("long").alias("beta_cents"),
-        F.floor(p99 + F.lit(0.5)).cast("long").alias("p99_peak_cents"),
+        half_up(mu).alias("mu_cents"),
+        half_up(beta).alias("beta_cents"),
+        half_up(p99).alias("p99_peak_cents"),
     )
 
 
@@ -194,15 +191,8 @@ def agg_stickiness_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis(F.col("m")).alias("month_ms"),
         "n_days",
         "mau",
-        (
-            F.floor(
-                F.col("sum_dau").cast("double")
-                / F.col("n_days")
-                / F.col("mau")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.col("sum_dau").cast("double") / F.col("n_days") / F.col("mau"), 6
         ).alias("stickiness"),
     )
 
@@ -287,15 +277,11 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("og").isNull(), 1).otherwise(0))
         .cast("long")
         .alias("n_novel"),
-        (
-            F.floor(
-                F.sum(F.when(F.col("og").isNull(), 1).otherwise(0)).cast(
-                    "double"
-                )
-                / F.count("*")
-                * 1000000
-                + F.lit(0.5)
+        round_dp(
+            F.sum(F.when(F.col("og").isNull(), 1).otherwise(0)).cast(
+                "double"
             )
-            / 1000000
+            / F.count("*"),
+            6,
         ).alias("novelty"),
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -128,20 +129,15 @@ def agg_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gaps = joined.select(
         "n_holdout",
-        F.floor(
-            F.abs(F.col("pred") - F.col("obs")) * 1000000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("gap_e6"),
+        half_up(F.abs(F.col("pred") - F.col("obs")) * 1000000).alias("gap_e6"),
     )
     return gaps.agg(
         F.count("*").cast("long").alias("n_segments"),
         F.sum("n_holdout").cast("long").alias("n_holdout_events"),
         (
-            F.floor(
+            half_up(
                 F.sum(F.col("gap_e6") * F.col("n_holdout")).cast("double")
                 / F.sum("n_holdout")
-                + F.lit(0.5)
             )
             / 1000000
         ).alias("ece"),
@@ -186,11 +182,10 @@ def fn_float32_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one combinable pass. At 100 TB this is a pure codegen'd
     projection — the audit costs one scan.
     """
-    exact = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    narrowed = F.floor(
+    exact = half_up(F.col("o_totalprice") * 100)
+    narrowed = half_up(
         F.col("o_totalprice").cast("float").cast("double") * 100
-        + F.lit(0.5)
-    ).cast("long")
+    )
     lossy = narrowed != exact
     return (
         t(spark, sf_dir, "orders")
@@ -310,15 +305,12 @@ def join_complement_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "anchor",
             "partner",
             "together",
-            F.floor(
+            half_up(
                 F.col("together")
                 * F.col("total")
                 / (F.col("na") * F.col("nb"))
                 * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("lift_e6"),
+            ).alias("lift_e6"),
         )
     )
     w = Window.partitionBy("anchor").orderBy(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -86,11 +87,7 @@ def agg_bcg_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").cast("long").alias("y"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("l_extendedprice") * 100))
             .cast("long")
             .alias("c")
         )
@@ -108,12 +105,8 @@ def agg_bcg_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "brand",
         "y",
         F.col("c").alias("rev_cents"),
-        (
-            F.floor(
-                F.col("c").cast("double") / F.col("best") * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.col("c").cast("double") / F.col("best"), 6
         ).alias("rel_share"),
         F.when(F.col("prev_c").isNull(), F.lit(None).cast("int"))
         .when(F.col("c") >= F.col("prev_c"), 1)
@@ -200,11 +193,7 @@ def agg_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = t(spark, sf_dir, "lineitem")
     pr = li.groupBy(F.col("l_partkey").alias("part")).agg(
-        F.sum(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                "long"
-            )
-        )
+        F.sum(half_up(F.col("l_extendedprice") * 100))
         .cast("long")
         .alias("rev")
     )
@@ -315,9 +304,7 @@ def fn_tax_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = t(spark, sf_dir, "orders").select(
         F.year("o_orderdate").cast("long").alias("y"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("v"),
+        half_up(F.col("o_totalprice") * 100).alias("v"),
     )
     duty = c.select(
         "y",
@@ -329,13 +316,7 @@ def fn_tax_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duty.groupBy("y").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("duty_cents").cast("long").alias("duty_total_cents"),
-        (
-            F.floor(
-                F.sum("duty_cents").cast("double")
-                / F.sum("v")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.sum("duty_cents").cast("double") / F.sum("v"), 6
         ).alias("effective_rate"),
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
@@ -223,15 +224,8 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             "df",
             F.col("sc").cast("long").alias("total"),
-            (
-                F.floor(
-                    (ndd * scc - sc * sc)
-                    / (ndd - 1)
-                    / sc
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            round_dp(
+                (ndd * scc - sc * sc) / (ndd - 1) / sc, 6
             ).alias("burstiness"),
         )
     )
@@ -303,11 +297,7 @@ def agg_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("month", "l_shipdate").alias("m"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("l_extendedprice") * 100))
             .cast("long")
             .alias("cents"),
             F.sum(F.col("l_quantity").cast("long"))
@@ -317,17 +307,9 @@ def agg_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pts = bm.select(
         "brand",
-        F.floor(
-            F.log(F.col("cents").cast("double") / F.col("qty")) * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.log(F.col("cents").cast("double") / F.col("qty")) * 1000000)
         .alias("x"),
-        F.floor(
-            F.log(F.col("qty").cast("double")) * 1000000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("y"),
+        half_up(F.log(F.col("qty").cast("double")) * 1000000).alias("y"),
     )
     s = pts.groupBy("brand").agg(
         F.count("*").cast("long").alias("n"),
@@ -344,7 +326,5 @@ def agg_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.filter(F.col("n") > 2).select(
         "brand",
         "n",
-        (F.floor(slope * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "elasticity"
-        ),
+        round_dp(slope, 6).alias("elasticity"),
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -100,11 +101,7 @@ def agg_pvm_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").cast("long").alias("y"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("l_extendedprice") * 100))
             .cast("long")
             .alias("cents"),
             F.sum(F.col("l_quantity").cast("long"))
@@ -129,12 +126,8 @@ def agg_pvm_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = matched.select(
         "brand",
         (F.col("c1") - F.col("c0")).alias("dr"),
-        F.floor((p1 - p0) * F.col("q0") + F.lit(0.5))
-        .cast("long")
-        .alias("price_c"),
-        F.floor(p0 * (F.col("q1") - F.col("q0")) + F.lit(0.5))
-        .cast("long")
-        .alias("volume_c"),
+        half_up((p1 - p0) * F.col("q0")).alias("price_c"),
+        half_up(p0 * (F.col("q1") - F.col("q0"))).alias("volume_c"),
     )
     return terms.groupBy("brand").agg(
         F.count("*").cast("long").alias("n_parts"),

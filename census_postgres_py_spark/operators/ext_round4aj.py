@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -84,9 +85,7 @@ def dq_checksum_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
         (F.col("o_orderkey") % 16).alias("pt"),
     )
     sys_b = base.withColumn(
@@ -205,11 +204,7 @@ def dim_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("cust"))
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("o_totalprice") * 100))
             .cast("long")
             .alias("sp"),
             F.max("o_orderdate").alias("last_d"),
@@ -241,9 +236,7 @@ def dim_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("nation_latest_order"),
-        F.sum(
-            F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long")
-        )
+        F.sum(half_up(F.col("c_acctbal") * 100))
         .cast("long")
         .alias("acctbal_cents"),
         F.sum("sp").cast("long").alias("spend_cents"),
@@ -330,16 +323,8 @@ def agg_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("active"))
     )
     pts = curve.select(
-        F.floor(
-            F.log(F.col("k").cast("double")) * 1000000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("x"),
-        F.floor(
-            F.log(F.col("active").cast("double")) * 1000000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("y"),
+        half_up(F.log(F.col("k").cast("double")) * 1000000).alias("x"),
+        half_up(F.log(F.col("active").cast("double")) * 1000000).alias("y"),
     )
     s = pts.agg(
         F.count("*").cast("long").alias("n"),
@@ -355,7 +340,5 @@ def agg_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         "n",
-        (F.floor(slope * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "decay_slope"
-        ),
+        round_dp(slope, 6).alias("decay_slope"),
     )

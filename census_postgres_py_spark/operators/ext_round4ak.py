@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -72,14 +73,8 @@ def agg_reach_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("event_type", "wk").agg(
         F.count("*").cast("long").alias("impressions"),
         F.countDistinct("user_id").cast("long").alias("reach"),
-        (
-            F.floor(
-                F.count("*").cast("double")
-                / F.countDistinct("user_id")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.count("*").cast("double") / F.countDistinct("user_id"), 6
         ).alias("frequency"),
     )
 
@@ -121,9 +116,7 @@ def join_returns_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest possible star-join shape.
     """
     li = t(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-        "long"
-    )
+    cents = half_up(F.col("l_extendedprice") * 100)
     return (
         li.join(
             gated_broadcast(
@@ -149,18 +142,14 @@ def join_returns_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("net_cents"),
-            (
-                F.floor(
-                    F.sum(
-                        F.when(
-                            F.col("l_returnflag") == "R", 1
-                        ).otherwise(0)
-                    ).cast("double")
-                    / F.count("*")
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            round_dp(
+                F.sum(
+                    F.when(
+                        F.col("l_returnflag") == "R", 1
+                    ).otherwise(0)
+                ).cast("double")
+                / F.count("*"),
+                6,
             ).alias("return_rate"),
         )
     )
@@ -235,11 +224,7 @@ def agg_anova_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dow"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("x")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("x")
         )
     )
     g = daily.groupBy("event_type", "dow").agg(
@@ -249,14 +234,11 @@ def agg_anova_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = g.withColumn(
         "ssb_term",
-        F.floor(
+        half_up(
             F.col("sx").cast("double")
             * F.col("sx").cast("double")
             / F.col("n")
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .cast(_D38),
+        ).cast(_D38),
     )
     tot = terms.groupBy("event_type").agg(
         F.sum("n").cast("long").alias("tn"),
@@ -276,5 +258,5 @@ def agg_anova_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "k",
         "tn",
-        (F.floor(f_stat * 10000 + F.lit(0.5)) / 10000).alias("f_stat"),
+        round_dp(f_stat, 4).alias("f_stat"),
     )

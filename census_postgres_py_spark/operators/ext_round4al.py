@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
@@ -111,15 +112,12 @@ def text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(v))
         .select(
             "doc_id",
-            F.floor(
+            half_up(
                 -F.log(
                     (F.col("c") + 1.0) / (F.col("ca") + F.col("vocab"))
                 )
                 * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("nll_e6"),
+            ).alias("nll_e6"),
         )
     )
     per_doc = scored.groupBy("doc_id").agg(
@@ -127,11 +125,9 @@ def text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("nll_e6").cast(_D38)).alias("snll"),
     )
     avg = (
-        F.floor(
-            F.col("snll").cast("double") / F.col("n_bigrams") + F.lit(0.5)
+        half_up(F.col("snll").cast("double") / F.col("n_bigrams")).alias(
+            "avg_nll_e6"
         )
-        .cast("long")
-        .alias("avg_nll_e6")
     )
     ranked = per_doc.select("doc_id", "n_bigrams", avg)
     wr = Window.orderBy(F.col("avg_nll_e6").desc(), F.col("doc_id"))
@@ -207,9 +203,7 @@ def dq_distribution_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (p−q)·ln(p/q) term e6-integerizes before the 10-row total.
     """
     c = t(spark, sf_dir, "orders").select(
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("v"),
+        half_up(F.col("o_totalprice") * 100).alias("v"),
         (F.col("o_orderkey") % 2).cast("long").alias("half"),
     )
     edges = c.agg(
@@ -241,18 +235,13 @@ def dq_distribution_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = counts.crossJoin(F.broadcast(tot)).select(
         "na",
         "nb",
-        F.floor((pa - pb) * F.log(pa / pb) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("term_e6"),
+        half_up((pa - pb) * F.log(pa / pb) * 1000000).alias("term_e6"),
     )
     return terms.agg(
         F.count("*").cast("long").alias("n_bins"),
         F.sum("na").cast("long").alias("n_ref"),
         F.sum("nb").cast("long").alias("n_cur"),
-        (
-            F.floor(F.sum("term_e6").cast("double") + F.lit(0.5))
-            / 1000000
-        ).alias("psi"),
+        (half_up(F.sum("term_e6").cast("double")) / 1000000).alias("psi"),
     )
 
 
@@ -318,9 +307,7 @@ def ts_twab_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate")
             + ((F.col("o_orderkey") % 30 + 1) * F.expr("INTERVAL 1 DAY"))
         ).alias("e"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     deltas = iv.select(
         F.col("s").alias("d"), F.col("cents").alias("delta")
@@ -348,11 +335,9 @@ def ts_twab_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", "d").alias("m")
     ).agg(
         F.count("*").cast("long").alias("n_days"),
-        F.floor(
-            F.sum("bal").cast("double") / F.count("*") + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("twab_cents"),
+        half_up(F.sum("bal").cast("double") / F.count("*")).alias(
+            "twab_cents"
+        ),
     ).select(
         F.unix_millis(F.col("m")).alias("month_ms"),
         "n_days",

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -80,11 +81,7 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_brand").alias("brand"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("l_extendedprice") * 100))
             .cast("long")
             .alias("c")
         )
@@ -101,18 +98,14 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "y",
         "n_brands",
-        (
-            F.floor(
-                F.col("ssq").cast("double")
-                * 10000
-                / (
-                    F.col("tot").cast("double")
-                    * F.col("tot").cast("double")
-                )
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        round_dp(
+            F.col("ssq").cast("double")
+            * 10000
+            / (
+                F.col("tot").cast("double")
+                * F.col("tot").cast("double")
+            ),
+            4,
         ).alias("hhi"),
     )
 
@@ -168,21 +161,13 @@ def win_rolling_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("cents")
         )
     )
     pts = daily.filter(F.col("cents") > 0).select(
         "event_type",
         "d",
-        F.floor(
-            F.log(F.col("cents").cast("double")) * 1000000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("lx"),
+        half_up(F.log(F.col("cents").cast("double")) * 1000000).alias("lx"),
     )
     w = (
         Window.partitionBy("event_type")
@@ -199,13 +184,7 @@ def win_rolling_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.unix_millis(F.col("d")).alias("day_ms"),
         "n",
-        F.floor(
-            F.exp(
-                F.col("slx").cast("double") / F.col("n") / 1000000
-            )
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.exp(F.col("slx").cast("double") / F.col("n") / 1000000))
         .alias("geomean_cents"),
     )
 

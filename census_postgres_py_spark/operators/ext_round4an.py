@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -97,9 +98,7 @@ def agg_did_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                ).cast(_D38)
+                half_up(F.col("l_extendedprice") * 100).cast(_D38)
             ).alias("cents"),
             F.sum(F.col("l_quantity").cast("long").cast(_D38)).alias(
                 "qty"
@@ -122,7 +121,7 @@ def agg_did_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     did = (cell(1, 1) - cell(1, 0)) - (cell(0, 1) - cell(0, 0))
     return up.agg(
         F.count("*").cast("long").alias("n_cells"),
-        (F.floor(did * 10000 + F.lit(0.5)) / 10000).alias("did_cents"),
+        round_dp(did, 4).alias("did_cents"),
     )
 
 
@@ -198,12 +197,8 @@ def agg_simpson_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("c_nationkey").alias("nation"),
-            F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("x"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("y"),
+            half_up(F.col("c_acctbal") * 100).alias("x"),
+            half_up(F.col("o_totalprice") * 100).alias("y"),
         )
     )
     strata = pts.groupBy("nation").agg(
@@ -305,11 +300,7 @@ def dq_header_detail_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("l_extendedprice") * 100))
             .cast("long")
             .alias("line_cents")
         )
@@ -317,9 +308,7 @@ def dq_header_detail_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.year("o_orderdate").cast("long").alias("y"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("header_cents"),
+        half_up(F.col("o_totalprice") * 100).alias("header_cents"),
     )
     rec = o.join(lines, o["o_orderkey"] == lines["l_orderkey"], "left").select(
         "y",

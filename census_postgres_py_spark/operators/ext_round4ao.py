@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -180,7 +181,7 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(marg_d), "dow")
         .crossJoin(F.broadcast(tot))
         .select(
-            F.floor(
+            half_up(
                 F.col("c")
                 / F.col("n")
                 * F.log(
@@ -189,20 +190,14 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / (F.col("ct") * F.col("cd").cast("double"))
                 )
                 * 1000000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("term_e9"),
+            ).alias("term_e9"),
         )
     )
     return terms.agg(
         F.count("*").cast("long").alias("n_cells"),
-        (
-            F.floor(
-                F.sum("term_e9").cast("double") / 1000 + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("mi_nats"),
+        (half_up(F.sum("term_e9").cast("double") / 1000) / 1000000).alias(
+            "mi_nats"
+        ),
     )
 
 
@@ -242,21 +237,13 @@ def win_tail_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = t(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("value") * 100).alias("cents"),
     )
     return c.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
         F.round(F.percentile("cents", 0.50), 2).alias("p50"),
         F.round(F.percentile("cents", 0.99), 2).alias("p99"),
-        (
-            F.floor(
-                F.percentile("cents", 0.99)
-                / F.percentile("cents", 0.50)
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        round_dp(
+            F.percentile("cents", 0.99) / F.percentile("cents", 0.50), 4
         ).alias("tail_ratio"),
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.operators.geo import EARTH_R_KM
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
@@ -87,22 +88,11 @@ def agg_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "wk",
         "n",
         "n_bad",
-        (
-            F.floor(
-                F.col("n_bad").cast("double") / F.col("n") * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.col("n_bad").cast("double") / F.col("n"), 6
         ).alias("error_rate"),
-        (
-            F.floor(
-                F.col("n_bad").cast("double")
-                / F.col("n")
-                / budget
-                * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        round_dp(
+            F.col("n_bad").cast("double") / F.col("n") / budget, 4
         ).alias("burn_rate"),
         F.when(
             F.col("n_bad").cast("double") * 10000
@@ -178,12 +168,8 @@ def fn_geo_destination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return t(spark, sf_dir, "customer").select(
         "c_custkey",
-        (F.floor(dest_lat * 10000 + F.lit(0.5)) / 10000).alias(
-            "dest_lat"
-        ),
-        (F.floor(dest_lon * 10000 + F.lit(0.5)) / 10000).alias(
-            "dest_lon_raw"
-        ),
+        round_dp(dest_lat, 4).alias("dest_lat"),
+        round_dp(dest_lon, 4).alias("dest_lon_raw"),
     )
 
 
@@ -241,13 +227,7 @@ def dq_attribute_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_hh.groupBy("n_members").agg(
         F.count("*").cast("long").alias("n_households"),
         conflicted.cast("long").alias("n_conflicted"),
-        (
-            F.floor(
-                conflicted.cast("double")
-                / F.count("*")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            conflicted.cast("double") / F.count("*"), 6
         ).alias("conflict_rate"),
     )

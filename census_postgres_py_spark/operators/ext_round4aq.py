@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -79,9 +80,7 @@ def transform_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("grp"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     w_g = Window.partitionBy("grp").orderBy("cents", "o_orderkey")
     w_gn = Window.partitionBy("grp")
@@ -186,12 +185,8 @@ def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     m = t(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("long").alias("q"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("p"),
-        F.floor(F.col("l_discount") * 10000 + F.lit(0.5))
-        .cast("long")
-        .alias("d"),
+        half_up(F.col("l_extendedprice") * 100).alias("p"),
+        half_up(F.col("l_discount") * 10000).alias("d"),
     )
     qd = F.col("q").cast(_D38)
     pd_ = F.col("p").cast(_D38)
@@ -228,7 +223,7 @@ def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.select(
             F.lit(ma).alias("ma"),
             F.lit(mb).alias("mb"),
-            (F.floor(expr * 100 + F.lit(0.5)) / 100).alias("cov"),
+            round_dp(expr, 2).alias("cov"),
         )
         for ma, mb, expr in entries
     ]
@@ -290,9 +285,7 @@ def agg_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("o_orderstatus") == "O", 1)
             .otherwise(0)
             .alias("grp"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
+            half_up(F.col("o_totalprice") * 100).alias("v"),
         )
     )
     vd = F.col("v").cast(_D38)
@@ -323,7 +316,5 @@ def agg_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(
         F.col("n1").cast("long").alias("n_open"),
         F.col("n0").cast("long").alias("n_filled"),
-        (
-            F.floor(mean_diff / pooled * 1000000 + F.lit(0.5)) / 1000000
-        ).alias("cohens_d"),
+        round_dp(mean_diff / pooled, 6).alias("cohens_d"),
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -97,11 +98,7 @@ def agg_spc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("x")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("x")
         )
     )
     s = daily.groupBy("event_type").agg(
@@ -279,9 +276,7 @@ def join_apportion_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.date_trunc("week", "o_orderdate").alias("wk"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     caps = o.groupBy("wk").agg(
         F.sum("cents").cast("long").alias("demand"),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -73,13 +74,7 @@ def agg_pareto_crosspoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("cust"))
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("c")
+            F.sum(half_up(F.col("o_totalprice") * 100)).cast("long").alias("c")
         )
     )
     w = Window.orderBy(F.col("c").desc(), F.col("cust"))
@@ -98,12 +93,7 @@ def agg_pareto_crosspoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.agg(
         F.min("n").cast("long").alias("n_customers"),
         k80.cast("long").alias("k80"),
-        (
-            F.floor(
-                k80.cast("double") / F.min("n") * 1000000 + F.lit(0.5)
-            )
-            / 1000000
-        ).alias("k80_share"),
+        round_dp(k80.cast("double") / F.min("n"), 6).alias("k80_share"),
     )
 
 
@@ -169,9 +159,7 @@ def agg_moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("o_orderstatus") == "O", 1)
             .otherwise(0)
             .alias("grp"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
+            half_up(F.col("o_totalprice") * 100).alias("v"),
         )
     )
     med = m.agg(F.percentile("v", 0.5).alias("pooled_median"))
@@ -214,7 +202,7 @@ def agg_moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a1").cast("long").alias("above_open"),
         F.col("n0").cast("long").alias("n_filled"),
         F.col("a0").cast("long").alias("above_filled"),
-        (F.floor(chi2 * 10000 + F.lit(0.5)) / 10000).alias("chi2"),
+        round_dp(chi2, 4).alias("chi2"),
     )
 
 
@@ -269,9 +257,7 @@ def dq_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correct verdict for synthetic data, and exactly why this
     screen catches fabricated numbers.
     """
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-        "long"
-    )
+    cents = half_up(F.col("o_totalprice") * 100)
     digits = (
         t(spark, sf_dir, "orders")
         .filter(cents >= 10)
@@ -292,21 +278,15 @@ def dq_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "d2",
             F.coalesce(F.col("c"), F.lit(0)).alias("observed"),
-            F.floor(F.col("p") * F.col("n") + F.lit(0.5))
-            .cast("long")
-            .alias("expected_n"),
-            (
-                F.floor(
-                    (F.coalesce(F.col("c"), F.lit(0)) - F.col("p") * F.col("n"))
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0))
-                        - F.col("p") * F.col("n")
-                    )
-                    / (F.col("p") * F.col("n"))
-                    * 10000
-                    + F.lit(0.5)
+            half_up(F.col("p") * F.col("n")).alias("expected_n"),
+            round_dp(
+                (F.coalesce(F.col("c"), F.lit(0)) - F.col("p") * F.col("n"))
+                * (
+                    F.coalesce(F.col("c"), F.lit(0))
+                    - F.col("p") * F.col("n")
                 )
-                / 10000
+                / (F.col("p") * F.col("n")),
+                4,
             ).alias("chi2_term"),
         )
     )

@@ -27,15 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
-
-
-def _half_up_ppm(num, den):
-    """floor(num * 1e6 / den + 0.5) as BIGINT — the engine-identical
-    parts-per-million render used for every ratio in this module."""
-    return F.floor(num * F.lit(1000000) / den + F.lit(0.5)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -107,17 +102,15 @@ def agg_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ca is widened to double BEFORE the product: a long*long margin
     # product would wrap at ~3e9-order counts; the double path is
     # exact to 2^53 and mirrored verbatim in the oracle
-    lift = F.floor(
+    lift = half_up(
         F.col("pair_orders").cast("double")
         * F.col("n_orders")
         * F.lit(1000000)
         / (F.col("ca").cast("double") * F.col("cb"))
-        + F.lit(0.5)
-    ).cast("long")
-    support = F.floor(
+    )
+    support = half_up(
         F.col("pair_orders").cast("double") * F.lit(1000000) / F.col("n_orders")
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return (
         pairs.join(
             F.broadcast(singles.select(F.col("brand").alias("brand_a"), F.col("cnt").alias("ca"))),
@@ -256,13 +249,11 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = e.select("vec_id", "embedding", mx.alias("mx"))
     q = F.transform(
         F.col("embedding"),
-        lambda x: F.floor(xd(x) / F.col("mx") * F.lit(127) + F.lit(0.5)).cast("long"),
+        lambda x: half_up(xd(x) / F.col("mx") * F.lit(127)),
     )
     return s.select(
         "vec_id",
-        F.floor(F.col("mx") / F.lit(127) * F.lit(1000000) + F.lit(0.5))
-        .cast("long")
-        .alias("scale_ppm"),
+        half_up(F.col("mx") / F.lit(127) * F.lit(1000000)).alias("scale_ppm"),
         F.array_join(q, ",").alias("q_vec"),
         F.aggregate(
             q, F.lit(0).cast("long"), lambda acc, x: acc + F.abs(x)
@@ -328,11 +319,9 @@ def agg_churn_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy(F.col("cur.wk").alias("wk")).agg(
         F.count("*").cast("long").alias("active_users"),
         churned.alias("churned_users"),
-        F.floor(
-            churned.cast("double") * F.lit(1000000) / F.count("*") + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("churn_ppm"),
+        half_up(churned.cast("double") * F.lit(1000000) / F.count("*")).alias(
+            "churn_ppm"
+        ),
     ).select(
         F.unix_millis("wk").alias("week_ms"),
         "active_users",
@@ -383,7 +372,7 @@ def agg_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.select(
         (((F.dayofweek("ts") + 5) % 7) + 1).cast("int").alias("dow"),
         F.hour("ts").cast("int").alias("hr"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        half_up(F.col("value") * 100).alias("cents"),
     )
     tot = ev.agg(F.count("*").cast("double").alias("n"))
     return (
@@ -391,9 +380,9 @@ def agg_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dow", "hr", "n")
         .agg(
             F.count("*").cast("long").alias("events"),
-            F.floor(F.count("*") * F.lit(1000000) / F.col("n") + F.lit(0.5))
-            .cast("long")
-            .alias("share_ppm"),
+            half_up(F.count("*") * F.lit(1000000) / F.col("n")).alias(
+                "share_ppm"
+            ),
             F.sum("cents").cast("long").alias("value_cents"),
         )
         .select("dow", "hr", "events", "share_ppm", "value_cents")
@@ -438,7 +427,7 @@ def win_period_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = t(spark, sf_dir, "orders")
     w = orders.groupBy(F.date_trunc("week", "o_orderdate").alias("wk")).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(half_up(F.col("o_totalprice") * 100))
         .cast("long")
         .alias("rev_cents")
     )
@@ -449,11 +438,9 @@ def win_period_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rev_cents",
         prev.alias("prev_cents"),
         (F.col("rev_cents") - prev).alias("delta_cents"),
-        F.floor(
-            (F.col("rev_cents") - prev) * F.lit(1000000.0) / prev + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("growth_ppm"),
+        half_up((F.col("rev_cents") - prev) * F.lit(1000000.0) / prev).alias(
+            "growth_ppm"
+        ),
     )
 
 
@@ -510,15 +497,12 @@ def dq_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c").cast("long").alias("n_rows"),
             F.count("*").cast("long").alias("n_keys"),
             F.max("c").cast("long").alias("max_rows_per_key"),
-            F.floor(
+            half_up(
                 F.max("c").cast("double")
                 * F.count("*")
                 * F.lit(1000000)
                 / F.sum("c")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("skew_ratio_ppm"),
+            ).alias("skew_ratio_ppm"),
         ).select(
             F.lit(col).alias("col_name"),
             "n_rows",

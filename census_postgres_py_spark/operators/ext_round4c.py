@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark.functions.rounding import cents, r6
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -62,7 +62,9 @@ def transform_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents, so the carried value is hash-stable.
     """
     ev = t(spark, sf_dir, "events")
-    v = F.when(F.col("event_type") == "purchase", cents(F.col("value")))
+    v = F.when(
+        F.col("event_type") == "purchase", half_up(F.col("value") * 100)
+    )
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -131,7 +133,7 @@ def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (months(F.col("o_orderdate")) - months(F.col("cm")))
         .cast("long")
         .alias("age_months"),
-        cents(F.col("o_totalprice")).alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     agg = facts.groupBy("cm", "age_months").agg(
         F.sum("cents").cast("long").alias("rev_cents")
@@ -230,9 +232,9 @@ def emb_silhouette_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     sil = (F.col("b") - F.col("a")) / F.greatest("a", "b")
     return pv.groupBy(F.col("own_label").alias("label")).agg(
         F.count("*").cast("long").alias("n_vectors"),
-        r6(F.avg("a")).alias("avg_intra"),
-        r6(F.avg("b")).alias("avg_nearest_other"),
-        r6(F.avg(sil)).alias("silhouette"),
+        round_dp(F.avg("a"), 6).alias("avg_intra"),
+        round_dp(F.avg("b"), 6).alias("avg_nearest_other"),
+        round_dp(F.avg(sil), 6).alias("silhouette"),
     )
 
 
@@ -375,7 +377,9 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_o"),
         F.count("*").cast("long").alias("frequency"),
-        F.sum(cents(F.col("o_totalprice"))).cast("long").alias("monetary_cents"),
+        F.sum(half_up(F.col("o_totalprice") * 100))
+        .cast("long")
+        .alias("monetary_cents"),
     )
     r = c.crossJoin(F.broadcast(mx)).select(
         "o_custkey",

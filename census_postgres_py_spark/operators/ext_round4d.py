@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark.functions.rounding import cents
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -67,17 +67,13 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = t(spark, sf_dir, "orders")
     d = orders.select(
-        F.substring(cents(F.col("o_totalprice")).cast("string"), 1, 1)
+        F.substring(half_up(F.col("o_totalprice") * 100).cast("string"), 1, 1)
         .cast("int")
         .alias("digit")
     )
     tot = d.agg(F.count("*").cast("double").alias("n"))
-    share = F.floor(F.count("*") * F.lit(1000000) / F.col("n") + F.lit(0.5)).cast(
-        "long"
-    )
-    benford = F.floor(
-        F.log10(1 + 1.0 / F.col("digit")) * F.lit(1000000) + F.lit(0.5)
-    ).cast("long")
+    share = half_up(F.count("*") * F.lit(1000000) / F.col("n"))
+    benford = half_up(F.log10(1 + 1.0 / F.col("digit")) * F.lit(1000000))
     return (
         d.crossJoin(F.broadcast(tot))
         .groupBy("digit", "n")
@@ -146,7 +142,7 @@ def agg_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = t(spark, sf_dir, "orders")
     c = orders.groupBy("o_custkey").agg(
-        F.sum(cents(F.col("o_totalprice"))).cast("long").alias("cents")
+        F.sum(half_up(F.col("o_totalprice") * 100)).cast("long").alias("cents")
     )
     w = Window.orderBy(F.col("cents").desc(), "o_custkey")
     r = c.select(
@@ -168,10 +164,9 @@ def agg_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cents"),
             ).otherwise(F.lit(0))
         )
-        return F.floor(
+        return half_up(
             inside.cast("double") * F.lit(1000000) / F.col("total_cents")
-            + F.lit(0.5)
-        ).cast("long")
+        )
 
     return (
         r.crossJoin(F.broadcast(tot))
@@ -252,11 +247,7 @@ def agg_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("wk") != F.col("fw"), 1))
             .cast("long")
             .alias("returning_users"),
-            F.floor(
-                new_cnt.cast("double") * F.lit(1000000) / F.count("*")
-                + F.lit(0.5)
-            )
-            .cast("long")
+            half_up(new_cnt.cast("double") * F.lit(1000000) / F.count("*"))
             .alias("new_share_ppm"),
         )
         .select(
@@ -328,9 +319,9 @@ def ts_forecast_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = F.count(F.when(F.col("w") < F.col("mxw"), 1)).cast("long")
     actual = F.count(F.when(F.col("w") == F.col("mxw"), 1)).cast("long")
-    forecast = F.floor(
-        train.cast("double") * F.lit(1000000) / F.col("n_train") + F.lit(0.5)
-    ).cast("long")
+    forecast = half_up(
+        train.cast("double") * F.lit(1000000) / F.col("n_train")
+    )
     return (
         wk.crossJoin(F.broadcast(bounds))
         .groupBy("dow", "hr", "n_train")

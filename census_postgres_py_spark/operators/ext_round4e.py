@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark.functions.rounding import cents
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -58,7 +58,7 @@ def agg_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderdate",
-        cents(F.col("o_totalprice")).alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     split = F.lit("1998-01-01").cast("timestamp")
 
@@ -202,11 +202,7 @@ def agg_interpurchase_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = gaps.join(cust, gaps.o_custkey == cust.c_custkey)
     return seg.groupBy("c_mktsegment").agg(
         F.count("*").cast("long").alias("n_gaps"),
-        F.floor(
-            F.sum("gap_days").cast("double") * F.lit(1000) / F.count("*")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.sum("gap_days").cast("double") * F.lit(1000) / F.count("*"))
         .alias("avg_gap_millidays"),
         F.min("gap_days").cast("long").alias("min_gap_days"),
         F.max("gap_days").cast("long").alias("max_gap_days"),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
@@ -85,16 +86,13 @@ def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "dow",
         F.col("o").alias("observed"),
-        F.floor(F.col("e") * 100 + F.lit(0.5)).cast("long").alias("expected_c100"),
-        F.floor(
+        half_up(F.col("e") * 100).alias("expected_c100"),
+        half_up(
             (F.col("o") - F.col("e"))
             * (F.col("o") - F.col("e"))
             / F.col("e")
             * 10000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("chi2_contrib_e4"),
+        ).alias("chi2_contrib_e4"),
     )
 
 
@@ -242,12 +240,9 @@ def agg_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("age_weeks", "n_users")
         .agg(
             surviving.alias("surviving"),
-            F.floor(
+            half_up(
                 surviving.cast("double") * F.lit(1000000) / F.col("n_users")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("survival_ppm"),
+            ).alias("survival_ppm"),
         )
         .select("age_weeks", "n_users", "surviving", "survival_ppm")
     )

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark.functions.rounding import cents, r6
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.functions.vector import cosine
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
@@ -138,7 +138,11 @@ def join_mutual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(cand)
         .join(a, "va")
         .join(b, "vb")
-        .select("va", "vb", r6(cosine(F.col("ea"), F.col("eb"))).alias("cos_r"))
+        .select(
+            "va",
+            "vb",
+            round_dp(cosine(F.col("ea"), F.col("eb")), 6).alias("cos_r"),
+        )
     )
     w = Window.partitionBy("va").orderBy(F.col("cos_r").desc(), "vb")
     top1 = (
@@ -208,7 +212,9 @@ def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = t(spark, sf_dir, "orders")
     daily = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("d")).agg(
-        F.sum(cents(F.col("o_totalprice"))).cast("long").alias("rev_cents")
+        F.sum(half_up(F.col("o_totalprice") * 100))
+        .cast("long")
+        .alias("rev_cents")
     )
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     curve = daily.withColumn(
@@ -270,13 +276,10 @@ def transform_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.join(F.broadcast(stats), "c_mktsegment").select(
         "c_custkey",
         "c_mktsegment",
-        cents(F.col("c_acctbal")).alias("acctbal_c100"),
-        F.floor(
+        half_up(F.col("c_acctbal") * 100).alias("acctbal_c100"),
+        half_up(
             (F.col("c_acctbal") - F.col("med"))
             / F.nullif(F.col("iqr"), F.lit(0.0))
             * F.lit(1000000)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("robust_z_e6"),
+        ).alias("robust_z_e6"),
     )

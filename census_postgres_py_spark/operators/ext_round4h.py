@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from census_postgres_py_spark import scratch
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import read_back, t
 
@@ -179,11 +180,11 @@ def ts_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("long").alias("gsum"),
         F.count("*").cast("long").alias("gcnt"),
     )
-    e3 = lambda s, c: F.floor(  # noqa: E731
-        s.cast("double") * F.lit(1000) / c + F.lit(0.5)
-    ).cast("long")
-    trend = e3(F.col("wsum"), F.col("wcnt"))
-    seasonal = e3(F.col("dsum"), F.col("dcnt")) - e3(F.col("gsum"), F.col("gcnt"))
+    trend = half_up(F.col("wsum").cast("double") * F.lit(1000) / F.col("wcnt"))
+    seasonal = (
+        half_up(F.col("dsum").cast("double") * F.lit(1000) / F.col("dcnt"))
+        - half_up(F.col("gsum").cast("double") * F.lit(1000) / F.col("gcnt"))
+    )
     return (
         tr.join(F.broadcast(dw), "dow")
         .crossJoin(F.broadcast(g))
@@ -252,7 +253,5 @@ def sink_dynamic_partition_overwrite(
     back = read_back(spark, ev.schema, base)
     return back.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("value_cents"),
+        F.sum(half_up(F.col("value") * 100)).cast("long").alias("value_cents"),
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import read_back, t
@@ -192,9 +193,7 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         0.5 * F.col("q") * F.log(2.0 * F.col("q") / (F.col("p") + F.col("q"))),
     ).otherwise(F.lit(0.0))
     return pairs.groupBy("lang_a", "lang_b").agg(
-        F.floor(F.sum(contrib) * F.lit(1000000) + F.lit(0.5))
-        .cast("long")
-        .alias("jsd_e6")
+        half_up(F.sum(contrib) * F.lit(1000000)).alias("jsd_e6")
     )
 
 

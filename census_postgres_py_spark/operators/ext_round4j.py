@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from census_postgres_py_spark.functions.rounding import cents
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -70,11 +70,13 @@ def join_bridge_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf; decimal(38,0) is the >petabyte form).
     """
     li = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", cents(F.col("l_extendedprice")).alias("lc")
+        "l_orderkey",
+        "l_partkey",
+        half_up(F.col("l_extendedprice") * 100).alias("lc"),
     )
     orders = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"),
-        cents(F.col("o_totalprice")).alias("oc"),
+        half_up(F.col("o_totalprice") * 100).alias("oc"),
     )
     tot = li.groupBy("l_orderkey").agg(F.sum("lc").cast("long").alias("tc"))
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")

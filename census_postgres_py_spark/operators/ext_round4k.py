@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_postgres_py_spark.functions.rounding import cents
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.functions.text import tokens
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
@@ -67,7 +67,7 @@ def transform_target_encode_loo(
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        cents(F.col("o_totalprice")).alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     cat = o.groupBy("o_orderpriority").agg(
         F.sum("cents").cast("long").alias("s"),
@@ -77,14 +77,11 @@ def transform_target_encode_loo(
         "o_orderkey",
         "o_orderpriority",
         "cents",
-        F.floor(
+        half_up(
             (F.col("s") - F.col("cents")).cast("double")
             * F.lit(1000)
             / F.nullif(F.col("n") - 1, F.lit(0))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("loo_enc_millicents"),
+        ).alias("loo_enc_millicents"),
     )
 
 
@@ -131,7 +128,9 @@ def win_rank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     its previous OBSERVED week, the standard movers convention.
     """
     li = t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_shipdate", cents(F.col("l_extendedprice")).alias("lc")
+        "l_partkey",
+        "l_shipdate",
+        half_up(F.col("l_extendedprice") * 100).alias("lc"),
     )
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     bw = (
@@ -232,13 +231,10 @@ def dedup_source_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source_a",
             "source_b",
-            F.floor(
+            half_up(
                 F.col("dot")
                 / F.sqrt(F.col("na2").cast("double") * F.col("nb2"))
                 * F.lit(1000000)
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("profile_cos_e6"),
+            ).alias("profile_cos_e6"),
         )
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -124,9 +125,7 @@ def agg_order_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(mx))
         .select(
             F.floor(F.datediff("mxd", "o_orderdate") / 30).alias("bkt"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("o_totalprice") * 100).alias("cents"),
         )
     )
     return open_o.groupBy("bkt").agg(

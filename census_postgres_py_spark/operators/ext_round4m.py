@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -94,11 +95,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast(_D38)
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast(_D38).alias("cents")
         )
     )
     lags = spark.range(1, _MAX_LAG + 1).select(
@@ -142,7 +139,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "lag",
         "n_pairs",
-        (F.floor(num / den * 1000000 + F.lit(0.5)) / 1000000).alias("acf"),
+        round_dp(num / den, 6).alias("acf"),
     )
 
 
@@ -213,11 +210,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast(_D38)
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast(_D38).alias("cents")
         )
     )
     wp = Window.partitionBy("event_type")
@@ -305,9 +298,7 @@ def win_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         F.col("l_quantity").cast("long").alias("qty"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("pc"),
+        half_up(F.col("l_extendedprice") * 100).alias("pc"),
     )
     w = Window.partitionBy("l_partkey").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
@@ -326,10 +317,7 @@ def win_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         F.col("cum_qty").cast("long").alias("cum_qty"),
-        F.floor(
+        half_up(
             F.col("cum_pq").cast("double") / F.col("cum_qty").cast("double")
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("vwap_cents"),
+        ).alias("vwap_cents"),
     )

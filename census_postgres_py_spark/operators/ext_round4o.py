@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import (
     vocab_rows_per_doc,
@@ -134,9 +135,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(stats))
         .select(
             "doc_id",
-            F.floor(idf * sat * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("c_e6"),
+            half_up(idf * sat * 1000000).alias("c_e6"),
         )
     )
     return (
@@ -241,7 +240,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a",
             "b",
             "c_ab",
-            (F.floor(pmi * 1000000 + F.lit(0.5)) / 1000000).alias("pmi"),
+            round_dp(pmi, 6).alias("pmi"),
         )
     )
 
@@ -316,12 +315,8 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 100)
         .select(
             "lang",
-            F.floor(F.log(F.col("rn").cast("double")) * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("x"),
-            F.floor(F.log(F.col("c").cast("double")) * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("y"),
+            half_up(F.log(F.col("rn").cast("double")) * 1000000).alias("x"),
+            half_up(F.log(F.col("c").cast("double")) * 1000000).alias("y"),
         )
     )
     s = pts.groupBy("lang").agg(
@@ -339,5 +334,5 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "lang",
         "n",
-        (F.floor(slope * 1000000 + F.lit(0.5)) / 1000000).alias("slope"),
+        round_dp(slope, 6).alias("slope"),
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -75,9 +76,7 @@ def dq_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     q = c.groupBy("grp").agg(
         F.percentile("cents", 0.25).alias("q1"),
@@ -154,9 +153,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("w_cents"),
+        half_up(F.col("o_totalprice") * 100).alias("w_cents"),
         (
             (
                 F.conv(
@@ -182,8 +179,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_custkey",
             "w_cents",
-            (F.floor(F.col("es_key") * 1000000000 + F.lit(0.5)) / 1000000000)
-            .alias("es_key_r"),
+            round_dp(F.col("es_key"), 9).alias("es_key_r"),
             F.col("es_key"),
         )
         .orderBy(F.col("es_key").desc(), "o_orderkey")
@@ -260,11 +256,7 @@ def win_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast(_D38)
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast(_D38).alias("cents")
         )
     )
     w = (
@@ -294,7 +286,7 @@ def win_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.unix_millis(F.col("d")).alias("day_ms"),
         F.col("cents").cast("long").alias("cents"),
-        F.floor(mu + F.lit(0.5)).cast("long").alias("ma_cents"),
+        half_up(mu).alias("ma_cents"),
         flag_up.alias("breakout_up"),
         flag_dn.alias("breakout_down"),
     )

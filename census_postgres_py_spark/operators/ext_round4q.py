@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -66,9 +67,7 @@ def join_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pts = t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
         F.unix_millis(F.col("o_orderdate")).alias("date_ms"),
     )
     w_lt = (
@@ -212,23 +211,18 @@ def emb_truncation_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_row = t(spark, sf_dir, "embeddings").select(
         "label",
-        F.floor(
+        half_up(
             F.sqrt(
                 sq_sum(F.slice("embedding", 1, _TRUNC_DIM))
                 / sq_sum(F.col("embedding"))
             )
             * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("ret_e6"),
+        ).alias("ret_e6"),
     )
     return per_row.groupBy("label").agg(
         F.count("*").cast("long").alias("n"),
         F.min("ret_e6").cast("long").alias("min_ret_e6"),
-        F.floor(
-            F.sum("ret_e6").cast("double") / F.count("*") + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("avg_ret_e6"),
+        half_up(F.sum("ret_e6").cast("double") / F.count("*")).alias(
+            "avg_ret_e6"
+        ),
     )

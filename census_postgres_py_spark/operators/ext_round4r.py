@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.operators.geo import (
     CELL_DEG,
     RADIUS_KM,
@@ -93,13 +94,7 @@ def agg_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("month", "o_orderdate").alias("m"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("c")
+            F.sum(half_up(F.col("o_totalprice") * 100)).cast("long").alias("c")
         )
     )
     shifted = rev.select(
@@ -199,9 +194,7 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     wo = Window.partitionBy("grp").orderBy("cents", "o_orderkey")
     wp = Window.partitionBy("grp")
@@ -219,11 +212,9 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.groupBy("grp").agg(
         F.max("n").cast("long").alias("n_total"),
         F.count("*").cast("long").alias("n_kept"),
-        F.floor(
-            F.sum("cents").cast("double") / F.count("*") + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("trimmed_mean_cents"),
+        half_up(F.sum("cents").cast("double") / F.count("*")).alias(
+            "trimmed_mean_cents"
+        ),
         F.floor(
             F.sum(F.col("cents").cast(d38))
             / F.count("*").cast(d38)
@@ -331,7 +322,7 @@ def join_nearest_facility(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c_custkey",
             "s_suppkey",
-            F.floor(d * 10000 + F.lit(0.5)).cast("long").alias("dist_e4"),
+            half_up(d * 10000).alias("dist_e4"),
         )
     )
     w = Window.partitionBy("c_custkey").orderBy("dist_e4", "s_suppkey")

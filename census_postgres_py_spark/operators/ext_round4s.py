@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -86,9 +87,7 @@ def agg_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus").isin("O", "F"))
         .select(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
+            half_up(F.col("o_totalprice") * 100).alias("v"),
             F.when(F.col("o_orderstatus") == "O", 1)
             .otherwise(0)
             .alias("is_o"),
@@ -154,17 +153,13 @@ def agg_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n2").cast("long").alias("n2"),
             "d_scaled",
             "at_cents",
-            (
-                F.floor(
-                    F.col("d_scaled").cast("double")
-                    / (
-                        F.col("n1").cast("double")
-                        * F.col("n2").cast("double")
-                    )
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            round_dp(
+                F.col("d_scaled").cast("double")
+                / (
+                    F.col("n1").cast("double")
+                    * F.col("n2").cast("double")
+                ),
+                6,
             ).alias("d"),
         )
     )
@@ -243,9 +238,7 @@ def agg_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("o_orderdate") < F.col("cut"),
-                    F.floor(
-                        F.col("o_totalprice") * 100 + F.lit(0.5)
-                    ).cast("long"),
+                    half_up(F.col("o_totalprice") * 100),
                 ).otherwise(0)
             )
             .cast("long")
@@ -284,27 +277,17 @@ def agg_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "decile",
             "n_cust",
             "responders",
-            (
-                F.floor(
-                    F.col("responders").cast("double")
-                    / F.col("n_cust")
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            round_dp(
+                F.col("responders").cast("double") / F.col("n_cust"), 6
             ).alias("response_rate"),
-            (
-                F.floor(
-                    F.sum("responders").over(w_cum).cast("double")
-                    * F.col("tn")
-                    / (
-                        F.sum("n_cust").over(w_cum).cast("double")
-                        * F.col("tr")
-                    )
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            round_dp(
+                F.sum("responders").over(w_cum).cast("double")
+                * F.col("tn")
+                / (
+                    F.sum("n_cust").over(w_cum).cast("double")
+                    * F.col("tr")
+                ),
+                6,
             ).alias("cum_lift"),
         )
     )
@@ -369,7 +352,7 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "click",
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"),
+                    half_up(F.col("value") * 100),
                 ).otherwise(0)
             )
             .cast("long")
@@ -377,7 +360,7 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"),
+                    half_up(F.col("value") * 100),
                 ).otherwise(0)
             )
             .cast("long")
@@ -406,6 +389,6 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             F.col("n") >= 3,
-            F.floor(num / den * 1000000 + F.lit(0.5)) / 1000000,
+            round_dp(num / den, 6),
         ).alias("corr_14d"),
     )

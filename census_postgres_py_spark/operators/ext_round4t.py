@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -99,9 +100,7 @@ def agg_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("o_orderdate") < F.col("cut"),
-                    F.floor(
-                        F.col("o_totalprice") * 100 + F.lit(0.5)
-                    ).cast("long"),
+                    half_up(F.col("o_totalprice") * 100),
                 ).otherwise(0)
             )
             .cast("long")
@@ -141,18 +140,14 @@ def agg_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("tp").cast("long").alias("n_pos"),
             F.col("tn").cast("long").alias("n_neg"),
             F.col("u2d").cast("long").alias("u2"),
-            (
-                F.floor(
-                    F.col("u2d").cast("double")
-                    / (
-                        F.lit(2.0)
-                        * F.col("tp").cast("double")
-                        * F.col("tn").cast("double")
-                    )
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
+            round_dp(
+                F.col("u2d").cast("double")
+                / (
+                    F.lit(2.0)
+                    * F.col("tp").cast("double")
+                    * F.col("tn").cast("double")
+                ),
+                6,
             ).alias("auc"),
         )
     )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.operators.ext_round4n import _closure_levels
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
@@ -90,23 +91,15 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("idx")
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("cents")
         )
     )
     periods = spark.range(2, 15).select(F.col("id").alias("p"))
     arg = 2 * F.lit(3.141592653589793) * F.col("idx") / F.col("p")
     terms = daily.crossJoin(F.broadcast(periods)).select(
         "p",
-        F.floor(F.col("cents") * F.cos(arg) + F.lit(0.5))
-        .cast("long")
-        .alias("cx"),
-        F.floor(F.col("cents") * F.sin(arg) + F.lit(0.5))
-        .cast("long")
-        .alias("cy"),
+        half_up(F.col("cents") * F.cos(arg)).alias("cx"),
+        half_up(F.col("cents") * F.sin(arg)).alias("cy"),
     )
     s = terms.groupBy("p").agg(
         F.count("*").cast("long").alias("n"),
@@ -116,16 +109,13 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "p",
         "n",
-        F.floor(
+        half_up(
             F.sqrt(
                 F.col("sx").cast("double") * F.col("sx").cast("double")
                 + F.col("sy").cast("double") * F.col("sy").cast("double")
             )
             / F.col("n")
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("amp_cents"),
+        ).alias("amp_cents"),
     )
 
 
@@ -170,9 +160,7 @@ def transform_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("grp"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice") * 100).alias("cents"),
     )
     bounds = c.groupBy("grp").agg(
         F.percentile("cents", 0.05).alias("lo"),
@@ -264,11 +252,7 @@ def hier_rollup_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("cust"))
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
+            F.sum(half_up(F.col("o_totalprice") * 100))
             .cast("long")
             .alias("own_c")
         )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -74,11 +75,7 @@ def agg_adstock(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("cents")
         )
     )
     ks = spark.range(0, 8).select(F.col("id").alias("k"))

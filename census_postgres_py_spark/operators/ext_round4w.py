@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -87,17 +88,9 @@ def agg_eb_smoothed_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "segment",
         "n",
         "k",
-        (F.floor(kd / F.col("n") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "raw_rate"
-        ),
-        (
-            F.floor(
-                (kd + _PRIOR_M * p0)
-                / (F.col("n") + _PRIOR_M)
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(kd / F.col("n"), 6).alias("raw_rate"),
+        round_dp(
+            (kd + _PRIOR_M * p0) / (F.col("n") + _PRIOR_M), 6
         ).alias("smoothed_rate"),
     )
 
@@ -150,11 +143,7 @@ def agg_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("x")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("x")
         )
     )
     a = daily.alias("a")
@@ -173,14 +162,8 @@ def agg_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.groupBy("event_type").agg(
         F.sum("sgn").cast("long").alias("s"),
         F.count("*").cast("long").alias("n_pairs"),
-        (
-            F.floor(
-                F.sum("sgn").cast("double")
-                / F.count("*")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.sum("sgn").cast("double") / F.count("*"), 6
         ).alias("kendall_tau_a"),
     )
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from census_postgres_py_spark import scratch, stats
+from census_postgres_py_spark.functions.rounding import half_up
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, read_back, t
 
@@ -81,9 +82,7 @@ def win_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("bucket"),
         "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("value") * 100).alias("cents"),
     )
     w_a = Window.partitionBy("event_type", "bucket").orderBy(
         "ts", "event_id"
@@ -443,9 +442,7 @@ def pipeline_manifest_prune_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pruned.groupBy("o_orderpriority").agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        )
+        F.sum(half_up(F.col("o_totalprice") * 100))
         .cast("long")
         .alias("cents"),
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -88,11 +89,7 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("d"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
-            .cast("long")
-            .alias("cents")
+            F.sum(half_up(F.col("value") * 100)).cast("long").alias("cents")
         )
     )
     w_lag = Window.partitionBy("event_type").orderBy("d")
@@ -131,7 +128,7 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             (F.col("sg") + F.col("sl")) > 0,
-            F.floor(100.0 * sg / (sg + sl) * 10000 + F.lit(0.5)) / 10000,
+            round_dp(100.0 * sg / (sg + sl), 4),
         ).alias("rsi"),
     )
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -174,13 +175,7 @@ def agg_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("cust"))
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("c")
+            F.sum(half_up(F.col("o_totalprice") * 100)).cast("long").alias("c")
         )
     )
     w_rank = Window.orderBy("c", "cust")
@@ -204,23 +199,11 @@ def agg_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         "n_cust",
         "cents",
-        (
-            F.floor(
-                F.sum("cents").over(w_cum).cast("double")
-                / F.col("tc")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.sum("cents").over(w_cum).cast("double") / F.col("tc"), 6
         ).alias("cum_share"),
-        (
-            F.floor(
-                F.sum("n_cust").over(w_cum).cast("double")
-                / F.col("tn")
-                * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(
+            F.sum("n_cust").over(w_cum).cast("double") / F.col("tn"), 6
         ).alias("cum_pop"),
     )
 
@@ -317,14 +300,10 @@ def dq_fk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_child_distinct",
                 "n_parent_distinct",
                 "n_contained",
-                (
-                    F.floor(
-                        F.col("n_contained").cast("double")
-                        / F.col("n_child_distinct")
-                        * 1000000
-                        + F.lit(0.5)
-                    )
-                    / 1000000
+                round_dp(
+                    F.col("n_contained").cast("double")
+                    / F.col("n_child_distinct"),
+                    6,
                 ).alias("containment"),
             )
         )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -85,7 +86,7 @@ def fn_geo_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "lat",
         "lon",
-        (F.floor(d * 10000 + F.lit(0.5)) / 10000).alias("dist_km"),
+        round_dp(d, 4).alias("dist_km"),
     )
 
 
@@ -156,8 +157,6 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a_id",
             "b_id",
-            (F.floor(F.col("d_raw") * 10000 + F.lit(0.5)) / 10000).alias(
-                "dist_km"
-            ),
+            round_dp(F.col("d_raw"), 4).alias("dist_km"),
         )
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, read_back, t
 
@@ -386,9 +387,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("c_mktsegment").agg(
         F.count("*").cast("long").alias("n"),
-        (F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5)) / 100).alias(
-            "total"
-        ),
+        round_dp(F.sum("o_totalprice"), 2).alias("total"),
     )
 
 
@@ -480,9 +479,7 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label")
         .agg(
             F.count("*").cast("long").alias("n"),
-            (F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5)) / 100).alias(
-                "revenue"
-            ),
+            round_dp(F.sum("o_totalprice"), 2).alias("revenue"),
         )
     )
 
@@ -585,9 +582,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey", "o_totalprice")
         .agg(
             F.sum("l_quantity").cast("long").alias("sum_qty"),
-            (F.floor(F.sum("l_extendedprice") * 100 + F.lit(0.5)) / 100).alias(
-                "revenue"
-            ),
+            round_dp(F.sum("l_extendedprice"), 2).alias("revenue"),
         )
     )
 

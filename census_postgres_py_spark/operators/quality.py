@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -74,11 +75,10 @@ def dq_rule_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_rows",
         "n_viol",
         (
-            F.floor(
+            half_up(
                 (F.col("n_rows") - F.col("n_viol"))
                 * 1000000.0
                 / F.col("n_rows")
-                + F.lit(0.5)
             )
             / 1000000.0
         ).alias("pass_rate"),
@@ -135,8 +135,8 @@ def dq_partition_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "day",
         "n",
-        (F.floor(F.col("med") * 100 + F.lit(0.5)) / 100).alias("med"),
-        (F.floor(F.col("mad") * 100 + F.lit(0.5)) / 100).alias("mad"),
+        round_dp(F.col("med"), 2).alias("med"),
+        round_dp(F.col("mad"), 2).alias("mad"),
         (
             F.abs(F.col("n") - F.col("med"))
             > 3 * F.greatest(F.col("mad"), F.lit(0.5))

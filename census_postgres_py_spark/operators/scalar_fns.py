@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -107,7 +108,7 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        (F.floor(charge_raw * 100 + 0.5) / 100).alias("charge"),
+        round_dp(charge_raw, 2).alias("charge"),
         F.abs(F.col("l_discount") - 0.05).alias("disc_dist"),
         F.ceil("l_quantity").cast("long").alias("qty_ceil"),
         F.floor(F.col("l_extendedprice") / 1000).cast("long").alias("price_k"),
@@ -355,12 +356,8 @@ def fn_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "try_cast(regexp_extract(c_name, '([0-9]+)', 1) AS BIGINT)"
         ).alias("cust_num"),
-        (
-            F.floor(
-                F.try_divide(F.col("c_acctbal"), F.col("c_nationkey")) * 10000
-                + F.lit(0.5)
-            )
-            / 10000
+        round_dp(
+            F.try_divide(F.col("c_acctbal"), F.col("c_nationkey")), 4
         ).alias("bal_per_nation"),
     )
 

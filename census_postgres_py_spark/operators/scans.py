@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from census_postgres_py_spark import scratch
+from census_postgres_py_spark.functions.rounding import half_up, round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.sources.csv_sequence import (
     read_sequence_csv,
@@ -291,9 +292,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = read_back(spark, merged.schema, path)
     return back.groupBy("o_orderpriority").agg(
         F.count("*").cast("long").alias("n"),
-        (F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5)) / 100).alias(
-            "total"
-        ),
+        round_dp(F.sum("o_totalprice"), 2).alias("total"),
     )
 
 
@@ -353,9 +352,7 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").cast("long").alias("n_items"),
-            (F.floor(F.sum("l_extendedprice") * 100 + F.lit(0.5)) / 100).alias(
-                "revenue"
-            ),
+            round_dp(F.sum("l_extendedprice"), 2).alias("revenue"),
         )
     )
 
@@ -720,8 +717,7 @@ def scan_log_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" ["), level, F.lit("] order="),
         F.col("o_orderkey").cast("string"),
         F.lit(" amount_cents="),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long").cast("string"),
+        half_up(F.col("o_totalprice") * 100).cast("string"),
     )
     path = scratch.call_dir("app_log_lines")
     o.select(line.alias("value")).write.mode("overwrite").text(path)

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from census_postgres_py_spark import stats
-from census_postgres_py_spark.functions.rounding import r6
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.functions.vector import cosine, dot, l2_norm
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
@@ -415,8 +415,10 @@ def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode("mean_arr").alias("pos0", "mean_raw"), "std_arr"
     ).select(
         (F.col("pos0") + 1).cast("long").alias("pos"),
-        r6(F.col("mean_raw")).alias("mean_val"),
-        r6(F.element_at("std_arr", F.col("pos0") + 1)).alias("std_val"),
+        round_dp(F.col("mean_raw"), 6).alias("mean_val"),
+        round_dp(
+            F.element_at("std_arr", F.col("pos0") + 1), 6
+        ).alias("std_val"),
     )
 
 
@@ -479,8 +481,10 @@ def emb_centroid_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scored.groupBy("label").agg(
         F.count("*").cast("long").alias("n_vectors"),
-        r6(F.first(l2_norm(F.col("centroid")))).alias("centroid_norm"),
-        r6(F.avg("cs")).alias("avg_cos"),
+        round_dp(
+            F.first(l2_norm(F.col("centroid"))), 6
+        ).alias("centroid_norm"),
+        round_dp(F.avg("cs"), 6).alias("avg_cos"),
     )
 
 
@@ -569,9 +573,7 @@ def pipeline_embedding_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return assigned.groupBy("cell_id").agg(
         F.count("*").cast("long").alias("n_vectors"),
-        (F.floor(F.avg("cs") * 1000000 + F.lit(0.5)) / 1000000).alias(
-            "avg_cos"
-        ),
+        round_dp(F.avg("cs"), 6).alias("avg_cos"),
         F.min_by("vec_id", F.struct(-F.col("cs"), F.col("vec_id"))).alias(
             "best_vec_id"
         ),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -54,7 +55,7 @@ def ts_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-ms BIGINT per the registry's timestamp rule.
     """
     ev = t(spark, sf_dir, "events")
-    v2 = (F.floor(F.avg("value") * 100 + F.lit(0.5)) / 100).alias("v")
+    v2 = round_dp(F.avg("value"), 2).alias("v")
     hourly = ev.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("h")
     ).agg(v2)

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -248,7 +249,7 @@ def transform_impute_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bal"),
     )
     seg = c.groupBy("c_mktsegment").agg(
-        (F.floor(F.avg("bal") * 100 + F.lit(0.5)) / 100).alias("seg_mean")
+        round_dp(F.avg("bal"), 2).alias("seg_mean")
     )
     out = c.join(F.broadcast(seg), "c_mktsegment")
     return out.select(

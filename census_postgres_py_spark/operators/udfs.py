@@ -28,6 +28,7 @@ from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 from census_postgres_py_spark import stats
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import t
 
@@ -58,8 +59,9 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        (F.floor(_discounted_price("l_extendedprice", "l_discount") * 100 + 0.5) / 100)
-        .alias("disc_price"),
+        round_dp(_discounted_price("l_extendedprice", "l_discount"), 2).alias(
+            "disc_price"
+        ),
     )
 
 
@@ -276,9 +278,7 @@ def udf_pandas_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
-        (F.floor(_norm_score_iter("o_totalprice") * 100 + F.lit(0.5)) / 100).alias(
-            "score"
-        ),
+        round_dp(_norm_score_iter("o_totalprice"), 2).alias("score"),
     )
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import gated_broadcast, t
 
@@ -158,9 +159,7 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_custkey",
         "o_orderkey",
-        (F.floor(F.avg("o_totalprice").over(w) * 100 + 0.5) / 100).alias(
-            "trailing_avg_7d"
-        ),
+        round_dp(F.avg("o_totalprice").over(w), 2).alias("trailing_avg_7d"),
     )
 
 
@@ -431,15 +430,9 @@ def win_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy()
     return seg.select(
         "c_mktsegment",
-        (F.floor(F.col("seg_rev") * 100 + F.lit(0.5)) / 100).alias(
-            "segment_revenue"
-        ),
-        (
-            F.floor(
-                F.col("seg_rev") / F.sum("seg_rev").over(w) * 1000000
-                + F.lit(0.5)
-            )
-            / 1000000
+        round_dp(F.col("seg_rev"), 2).alias("segment_revenue"),
+        round_dp(
+            F.col("seg_rev") / F.sum("seg_rev").over(w), 6
         ).alias("revenue_share"),
     )
 

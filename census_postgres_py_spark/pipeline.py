@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from census_postgres_py_spark import scratch
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.sources.csv_sequence import (
     read_sequence_csv,
@@ -73,11 +74,6 @@ def _stusab():
     # (fixture n_name values carry no geography, so key off nationkey;
     # the oracle reproduces the same expression)
     return F.concat(F.lit("S"), (F.col("n_nationkey") % 5).cast("string"))
-
-
-def _round2(col):
-    # the repo-wide 2dp idiom: binary-identical on Spark and DuckDB
-    return F.floor(col * 100 + F.lit(0.5)) / 100
 
 
 def _write_lines(path: str, lines: list[str]) -> None:
@@ -112,7 +108,7 @@ def _synthesize_inputs(
         .groupBy("n_nationkey", "n_name")
         .agg(
             F.count("c_custkey").cast("double").alias("pop"),
-            _round2(F.sum("c_acctbal")).alias("bal"),
+            round_dp(F.sum("c_acctbal"), 2).alias("bal"),
         )
         .select(
             _stusab().alias("stusab"),
@@ -126,8 +122,8 @@ def _synthesize_inputs(
             pop.alias("e1"),
             bal.alias("e2"),
             # margins: 10% of estimate, jam-suppressed for small pops
-            _round2(pop * 0.1).alias("m1"),
-            F.when(pop >= JAM_POP_FLOOR, _round2(bal * 0.1)).alias("m2"),
+            round_dp(pop * 0.1, 2).alias("m1"),
+            F.when(pop >= JAM_POP_FLOOR, round_dp(bal * 0.1, 2)).alias("m2"),
         )
         .collect()
     )

@@ -9,8 +9,11 @@ Oracle-compare rules baked into every registration (SURVEY.md §2
 "oracle gotchas"):
 
 * every computed column is aliased identically in Spark and SQL;
-* floating aggregates are ``round(..., 2)`` on both sides so
-  accumulation-order ULP drift can't flip the value hash;
+* floating values are rendered fixed-point as ``floor(x*10^k + 0.5)``
+  on both sides (``functions/rounding``: ``half_up``, ``round_dp``) so
+  accumulation-order ULP drift can't flip the value hash; not
+  ``round``, which Spark and DuckDB disagree on at double ties such as
+  1.005;
 * DuckDB ``sum(int)`` returns HUGEINT — oracle SQL casts to BIGINT;
 * array outputs are rendered to sorted strings (hash-stable);
 * timestamps sourced from ``events.ts`` (ns in parquet) are exported

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from census_postgres_py_spark import scratch, stats
+from census_postgres_py_spark.functions.rounding import round_dp
 from census_postgres_py_spark.registry import register
 from census_postgres_py_spark.tables import read_back, t
 
@@ -336,7 +337,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.select(
         "user_id",
         "n_events",
-        (F.floor(F.col("tv") * 100 + F.lit(0.5)) / 100).alias("total_value"),
+        round_dp(F.col("tv"), 2).alias("total_value"),
     )
 
 
@@ -567,9 +568,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count("*").cast("long").alias("n"),
-            (F.floor(F.sum("value") * 100 + F.lit(0.5)) / 100).alias(
-                "total_value"
-            ),
+            round_dp(F.sum("value"), 2).alias("total_value"),
         )
     )
     return _run_to_memory(
@@ -720,9 +719,7 @@ def pipeline_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_millis(F.col("w.start")).alias("hour_ms"),
             "event_type",
             F.col("n").cast("long").alias("n"),
-            (
-                F.floor(F.col("wv").cast("double") * 100 + F.lit(0.5)) / 100
-            ).alias("weighted_value"),
+            round_dp(F.col("wv").cast("double"), 2).alias("weighted_value"),
         )
     )
 
